@@ -156,7 +156,7 @@ object SparkEntry {
       CountStage.count(
         parsedT(s, dir),
         MetricSpec("n", attrs = Seq(AttrSpec("component"), AttrSpec("level", Some("none")))),
-        Pipeline.resolveAttr(Pipeline.parsedFields))),
+        graft.config.ConfigLoader.resolveAttr(Pipeline.parsedFields))),
 
     // -- per-conversation rollup (recombine analog) + salted-skew variant --
     "p13_rollup_conversation" -> ((s, dir) => Rollup.rollup(t(s, dir))),
@@ -811,8 +811,9 @@ object SparkEntry {
     // -- expression language (OTTL/EXPR strings → Column; §2.8) --
     "p41_route_string_config" -> ((s, dir) =>
       // identical routing to p08 but the predicates are parsed from OTTL
-      // condition STRINGS (Pipeline.routeConditionStrings → ExprLang) —
-      // the config-text path of pkg/ottl/parser.go statement compilation
+      // condition STRINGS (the `where` clauses of flagship.yaml →
+      // ExprLang) — the config-text path of pkg/ottl/parser.go statement
+      // compilation
       RouteStage.tagged(Pipeline.parseEnrich(s, t(s, dir)), Pipeline.routeTableFromStrings)
         .groupBy("route").agg(count(lit(1)).as("n"))),
 

@@ -6,7 +6,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.agg.CountStage
@@ -21,7 +21,8 @@ import graft.route.RouteStage
   * confmap round-trip (`pkg/stanza/operator/operatortest/confmap.go`
   * unmarshals a YAML fixture into an operator config struct and asserts
   * equality with the programmatic expectation; our ConfigLoaderSpec
-  * does the same against [[graft.run.Pipeline]]'s flagship config).
+  * does the same for the flagship, `src/main/resources/graft/flagship.yaml`,
+  * which [[graft.run.Pipeline]] loads and compiles).
   *
   * The FILE model ([[GraftFileConfig]]) is pure data — pattern strings,
   * OTTL condition strings, attr (key, default) pairs — so it
@@ -95,6 +96,13 @@ object ConfigLoader {
   def loadFile(path: String): GraftFileConfig =
     load(new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(path)), "UTF-8"))
+
+  /** A config shipped on the classpath, e.g. `/graft/flagship.yaml`. */
+  def loadResource(name: String): GraftFileConfig = {
+    val in = getClass.getResourceAsStream(name)
+    require(in != null, s"config: no classpath resource $name")
+    try load(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+  }
 
   def load(yaml: String): GraftFileConfig = {
     val root = mapper.readTree(yaml)
@@ -236,8 +244,13 @@ object ConfigLoader {
 
   // ---------------- compile (file model -> runtime model) ----------------
 
-  /** Compiled runtime pipeline: everything [[graft.run.Pipeline]]
-    * exposes programmatically, built from a file. */
+  /** Attribute resolution for metric attrs: post-parse fields live in the
+    * `parsed` map, enriched/base attrs are top-level columns. */
+  def resolveAttr(parsedFields: Set[String])(key: String): Column =
+    if (parsedFields(key)) col("parsed").getItem(key) else col(key)
+
+  /** Compiled runtime pipeline, built from a file model
+    * ([[graft.run.Pipeline]] is this for the flagship file). */
   final case class Compiled(parse: ParseConfig,
                             routeTable: RouteTable,
                             metrics: Seq[MetricSpec],
@@ -248,15 +261,16 @@ object ConfigLoader {
 
     def resolver: ExprLang.Resolver = ExprLang.transcriptResolver(parsedFields)
 
-    /** Attribute resolution for metric attrs — the ONE definition
-      * ([[graft.run.Pipeline.resolveAttr]]); the YAML and programmatic
-      * paths must never diverge on where an attribute lives. */
-    private def resolveAttr: String => org.apache.spark.sql.Column =
-      graft.run.Pipeline.resolveAttr(parsedFields)
+    private def resolveAttr: String => Column =
+      ConfigLoader.resolveAttr(parsedFields)
 
-    /** parse → enrich, mirroring Pipeline.parseEnrich (barrier=false is
-      * correct for the single-projection flagship shape; see
-      * ParseStage.apply scaladoc for the trade). */
+    /** parse → enrich over a transcripts frame.
+      *
+      * `barrier=false`: the flagship plan references the bank output
+      * only inside one projection (route tags + enrich key), which
+      * Catalyst CSE keeps at ONE evaluation — gated by PlanSpec's
+      * occurrence count — so it skips the Generate barrier's ~10%
+      * overhead (ParseStage.apply scaladoc has the measurements). */
     def parseEnrich(spark: SparkSession, transcripts: DataFrame): DataFrame = {
       val parsed = ParseStage(transcripts, parse, barrier = false)
       enrich match {
@@ -283,20 +297,25 @@ object ConfigLoader {
       }
     }
 
-    /** Full run: (per-sink frames, per-sink windowed counts) — the
-      * config-file rendering of Pipeline.run. Counts derive from ONE
-      * exploded-tag pass exactly like Pipeline.run (a count per fanOut
-      * frame would re-scan the source and re-evaluate the pattern bank
-      * once per sink — 2k scans for k sinks when a caller materializes
-      * everything). */
-    def run(spark: SparkSession, transcripts: DataFrame)
+    /** Full batch run: (per-sink frames, per-sink windowed counts).
+      * Callers write each sink frame to its own table (multi-match
+      * fan-out, routing-connector semantics).
+      *
+      * ALL count frames derive from ONE exploded-tag pass (the p07 /
+      * PipelineJob single-scan plan): a count per fanOut frame would
+      * re-scan the source and re-evaluate the pattern bank once per sink
+      * (2k scans for k sinks when a caller materializes everything). The
+      * sink frames stay the lazy fanOut filters — a caller that writes
+      * them pays one scan each, or uses [[graft.run.PipelineJob]]'s
+      * partitionBy fan-out for the one-scan write. */
+    def run(spark: SparkSession, transcripts: DataFrame, windowDur: String = window)
         : (Map[String, DataFrame], Map[String, DataFrame]) = {
       val enriched = parseEnrich(spark, transcripts)
       val (sinks, stream) = RouteStage.sinksAndStream(enriched, routeTable)
       val counts = sinks.keySet.map { name =>
         name -> CountStage.countWindowed(
           stream.filter(col("route") === name),
-          MetricSpec("count"), col("ts"), window, resolveAttr)
+          MetricSpec("count"), col("ts"), windowDur, resolveAttr)
       }.toMap
       (sinks, counts)
     }

@@ -50,7 +50,7 @@ object ParseStage {
     * `barrier=false` keeps the round-2 plain projection for callers
     * whose downstream plan is PROVEN single-eval by a plan gate (the
     * flagship pipeline: PlanSpec counts occurrences) — measured on the
-    * same ambient window (ParseAB, 8M turns, 16 cores): the Generate
+    * same ambient window (8M turns, 16 cores; BENCH.md): the Generate
     * costs ~10% on an already-single-eval plan (4.45 s vs 4.05 s
     * flagship) while saving ~20% where the inline would double-eval
     * (p12: 1.06 s barrier vs 1.32 s plain). */

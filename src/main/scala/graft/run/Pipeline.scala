@@ -1,161 +1,38 @@
 package graft.run
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.agg.CountStage
-import graft.enrich.EnrichStage
+import graft.config.ConfigLoader
 import graft.expr.ExprLang
 import graft.model.PipelineConfig._
-import graft.parse.ParseStage
-import graft.route.RouteStage
-import graft.sources.Transcripts
 
-/** The flagship parse→enrich→route→aggregate pipeline (SURVEY.md §7.3),
-  * assembled from the standard config below. This is the Spark-native
-  * rendering of the reference collector graph
+/** The flagship parse→enrich→route→aggregate pipeline (SURVEY.md §7.3):
+  * the Spark-native rendering of the reference collector graph
   * `filelog → regex parse → attributes enrich → routing connector →
   * count connector` (`/root/reference`, SURVEY.md §3).
+  *
+  * Defined once, as config: `src/main/resources/graft/flagship.yaml`,
+  * compiled by [[ConfigLoader.compile]] like any user file. The members
+  * below forward to that compiled config.
   */
 object Pipeline {
 
-  /** FIXTURES.md §1 pattern bank (first match wins). */
-  val patternBank: Seq[PatternSpec] = Seq(
-    PatternSpec("tool_call",
-      "^CALL tool=(?<tool_name>\\w+) args=(?<args_json>\\{.*\\}) dur_ms=(?<dur_ms>\\d+)$",
-      Seq("tool_name", "args_json", "dur_ms")),
-    PatternSpec("status",
-      "^(?<level>TRACE|DEBUG|INFO|WARN|ERROR|FATAL) \\[(?<component>[\\w.-]+)\\] (?<msg>.*)$",
-      Seq("level", "component", "msg")),
-    PatternSpec("kv",
-      "^(?<kvpairs>\\w+=[^ ]+( \\w+=[^ ]+)*)$",
-      Seq("kvpairs"))
-  )
+  val config: ConfigLoader.GraftFileConfig = ConfigLoader.loadResource("/graft/flagship.yaml")
+  val flagship: ConfigLoader.Compiled = ConfigLoader.compile(config)
 
-  val parseConfig: ParseConfig = ParseConfig(patternBank)
+  def parseConfig: ParseConfig = flagship.parse
+  def patternBank: Seq[PatternSpec] = parseConfig.patterns
+  def parsedFields: Set[String] = flagship.parsedFields
+  def exprResolver: ExprLang.Resolver = flagship.resolver
+  def routeTable: RouteTable = flagship.routeTable
+  def routeTableFromStrings: RouteTable = routeTable
+  def metrics: Seq[MetricSpec] = flagship.metrics
+  def metricsFromStrings: Seq[MetricSpec] = metrics
 
-  /** FIXTURES.md §3 route table — compiled FROM THE CONFIG STRINGS below
-    * (the reference's config-driven surface); the hand-written rendering
-    * is kept as [[routeTableByHand]] and ExprLangSpec asserts row-set
-    * equality between the two. */
-  def routeTable: RouteTable = routeTableFromStrings
+  def parseEnrich(spark: SparkSession, transcripts: DataFrame): DataFrame =
+    flagship.parseEnrich(spark, transcripts)
 
-  /** Hand-written Column rendering of the same table (differential
-    * oracle for the expression compiler). */
-  def routeTableByHand: RouteTable = RouteTable(
-    routes = Seq(
-      RouteSpec("tool_calls",
-        col("tool") =!= "" && col("parsed").getItem("tool_name").isNotNull),
-      RouteSpec("errors",
-        col("parsed").getItem("level").isin("ERROR", "FATAL")),
-      RouteSpec("user_turns", col("role") === "user")
-    ),
-    defaultName = "default",
-    matchOnce = false
-  )
-
-  /** The SAME route table expressed as OTTL condition STRINGS, compiled
-    * by [[ExprLang]] — the config-text path (a user defines a new
-    * pipeline without recompiling the engine, the analog of the
-    * reference's OTTL `where` clauses in
-    * `connector/routingconnector/config.go:70-82`). Must stay
-    * semantically identical to [[routeTable]]; RouteStageSpec asserts
-    * row-set equality between the two. */
-  val routeConditionStrings: Seq[(String, String)] = Seq(
-    "tool_calls" -> """tool != "" and attributes["tool_name"] != nil""",
-    "errors" -> """attributes["level"] == "ERROR" or attributes["level"] == "FATAL"""",
-    "user_turns" -> """role == "user""""
-  )
-
-  def exprResolver: ExprLang.Resolver = ExprLang.transcriptResolver(parsedFields)
-
-  def routeTableFromStrings: RouteTable = RouteTable(
-    routes = routeConditionStrings.map { case (n, c) =>
-      RouteSpec(n, ExprLang.condition(c, exprResolver))
-    },
-    defaultName = "default",
-    matchOnce = false
-  )
-
-  /** FIXTURES.md §4 count-connector metric definitions — compiled FROM
-    * THE CONFIG STRINGS below, completing the config-text surface: the
-    * whole flagship pipeline (routes AND metrics) is now definable from
-    * strings without recompiling the engine, the analog of the
-    * reference's YAML + OTTL config
-    * (`connector/countconnector/config.go:57-76`). */
-  def metrics: Seq[MetricSpec] = metricsFromStrings
-
-  /** Hand-written Column rendering (differential oracle for the
-    * compiler; GoldenCountSpec asserts per-metric frame equality). */
-  val metricsByHand: Seq[MetricSpec] = Seq(
-    MetricSpec("turn_count"),
-    MetricSpec("turn_count_by_role", attrs = Seq(AttrSpec("role"))),
-    MetricSpec("tool_call_count",
-      conditions = Seq(col("tool") =!= ""),
-      attrs = Seq(AttrSpec("tool"), AttrSpec("cost_class", Some("unknown")))),
-    MetricSpec("error_count_by_component",
-      conditions = Seq(col("parsed").getItem("level") === "ERROR"),
-      // component is REQUIRED (no default): rows missing it are skipped
-      attrs = Seq(AttrSpec("component")))
-  )
-
-  /** The SAME metric table as OTTL condition strings + (attr, default)
-    * pairs — what a user's config file would carry. */
-  val metricConfigStrings: Seq[(String, Seq[String], Seq[(String, Option[String])])] = Seq(
-    ("turn_count", Nil, Nil),
-    ("turn_count_by_role", Nil, Seq("role" -> None)),
-    ("tool_call_count", Seq("""tool != """""),
-      Seq("tool" -> None, "cost_class" -> Some("unknown"))),
-    ("error_count_by_component", Seq("""attributes["level"] == "ERROR""""),
-      Seq("component" -> None))
-  )
-
-  def metricsFromStrings: Seq[MetricSpec] =
-    metricConfigStrings.map { case (name, conds, attrs) =>
-      MetricSpec(name,
-        conditions = conds.map(c => ExprLang.condition(c, exprResolver)),
-        attrs = attrs.map { case (k, d) => AttrSpec(k, d) })
-    }
-
-  /** Attribute resolution for metric attrs: post-parse fields live in the
-    * `parsed` map, enriched/base attrs are top-level columns. */
-  def resolveAttr(parsedFields: Set[String])(key: String): Column =
-    if (parsedFields(key)) col("parsed").getItem(key) else col(key)
-
-  val parsedFields: Set[String] = patternBank.flatMap(_.fields).toSet
-
-  /** parse + enrich over a transcripts frame.
-    *
-    * `barrier=false`: the flagship plan references the bank output only
-    * inside one projection (route tags + enrich key), which Catalyst
-    * CSE keeps at ONE evaluation — gated by PlanSpec's occurrence
-    * count — so it skips the Generate barrier's ~10% overhead
-    * (ParseStage.apply scaladoc has the measurements). */
-  def parseEnrich(spark: SparkSession, transcripts: DataFrame): DataFrame = {
-    val parsed = ParseStage(transcripts, parseConfig, barrier = false)
-    EnrichStage(parsed, EnrichStage.dimTool(spark), Seq("tool"))
-  }
-
-  /** Full batch run: returns (per-sink frames, per-sink windowed counts).
-    * Callers write each sink frame to its own table (multi-match fan-out,
-    * routing-connector semantics).
-    *
-    * ALL count frames derive from ONE exploded-tag pass (the p07 /
-    * PipelineJob single-scan plan): a count per fanOut frame would
-    * re-scan the source and re-evaluate the pattern bank once per sink
-    * (2k scans for k sinks when a caller materializes everything). The
-    * sink frames stay the lazy fanOut filters — a caller that writes
-    * them pays one scan each, or uses [[graft.run.PipelineJob]]'s
-    * partitionBy fan-out for the one-scan write. */
-  def run(spark: SparkSession, transcripts: DataFrame, windowDur: String = "1 hour")
-      : (Map[String, DataFrame], Map[String, DataFrame]) = {
-    val enriched = parseEnrich(spark, transcripts)
-    val (sinks, stream) = RouteStage.sinksAndStream(enriched, routeTable)
-    val counts = sinks.keySet.map { name =>
-      name -> CountStage.countWindowed(
-        stream.filter(col("route") === name),
-        MetricSpec(s"count"), col("ts"), windowDur, resolveAttr(parsedFields))
-    }.toMap
-    (sinks, counts)
-  }
+  def run(spark: SparkSession, transcripts: DataFrame, windowDur: String = flagship.window)
+      : (Map[String, DataFrame], Map[String, DataFrame]) =
+    flagship.run(spark, transcripts, windowDur)
 }

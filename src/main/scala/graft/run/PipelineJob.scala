@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.agg.CountStage
-import graft.model.PipelineConfig.MetricSpec
+import graft.config.ConfigLoader
+import graft.model.PipelineConfig.{AttrSpec, MetricSpec}
 import graft.route.RouteStage
 import graft.sources.Transcripts
 
@@ -12,12 +13,15 @@ import graft.sources.Transcripts
   * checkpoints + metrics:
   *
   *   spark-submit --class graft.run.PipelineJob <jar> \
-  *     <transcriptsPath> <outDir> [windowDur]
+  *     <transcriptsPath> <outDir> [windowDur] [config.yaml]
   *
   * Stages (the collector graph, SURVEY.md §3): read transcripts (Iceberg
   * on-cluster / parquet locally) → parse bank → broadcast enrich →
   * single-pass multi-match fan-out to per-route sink tables → per-sink
-  * windowed counts. Every sink and every counts table commits through
+  * windowed counts, plus one `metric_<name>` table per metric of a
+  * config file. Without a config file the flagship
+  * (`src/main/resources/graft/flagship.yaml`) runs, without its
+  * `metric_*` tables. Every sink and every counts table commits through
   * [[Lineage.runResumable]]: a killed run resumes without recomputing
   * committed sinks (per-partition lineage in the manifests).
   *
@@ -27,54 +31,62 @@ import graft.sources.Transcripts
   */
 object PipelineJob {
 
+  val Usage = "usage: PipelineJob <transcriptsPath> <outDir> [windowDur] [config.yaml]"
+
+  /** The local master of a bare launch: every core of this host. */
+  private[graft] val DefaultMaster = "local[*]"
+
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2,
-      "usage: PipelineJob <transcriptsPath> <outDir> [windowDur] [config.yaml]")
+    require(args.length >= 2, Usage)
     val Array(inPath, outDir) = args.take(2)
-    // optional YAML config (graft.config.ConfigLoader schema): the
-    // user-ships-a-config-not-Scala surface; omitted -> the flagship
-    // programmatic config. Extra args are recognized by SHAPE (*.yaml /
-    // *.yml = config, anything else = windowDur) so the config's
-    // `window:` field is reachable without a positional placeholder —
-    // an explicit windowDur arg still wins over the config's window.
-    val (fileModel, fileCfg, windowDur) = parseExtraArgs(args.drop(2))
 
     failFastLocalHeap("PipelineJob")
 
-    val builder = SparkSession.builder()
+    val spark = SparkSession.builder()
       .appName("graft-pipeline")
+      .master(launchMaster())
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-    // spark-submit injects spark.master; default to local[*] when run bare
-    val spark = (if (sys.props.contains("spark.master")) builder
-                 else builder.master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]")))
       .getOrCreate()
+
+    val report = try run(spark, inPath, outDir, args.drop(2).toSeq)
+                 finally spark.stop()
+    // a run with ANY failed sink must not exit 0: runResumable holds the
+    // failure so the OTHER sinks still commit (their manifests make the
+    // retry cheap), but the scheduler has to see the run as failed or
+    // the missing table is only discovered downstream
+    if (report.failed.nonEmpty) {
+      report.failed.foreach { case (name, msg) =>
+        System.err.println(s"[pipeline] sink $name failed: $msg")
+      }
+      sys.exit(3)
+    }
+  }
+
+  /** One resumable run of the pipeline over `inPath` into `outDir`.
+    * `extra` is the optional `[windowDur] [config.yaml]` tail of the
+    * command line ([[parseExtraArgs]]); without a config file the
+    * flagship ([[Pipeline.flagship]]) runs, minus its `metric_*` sinks.
+    * The report covers the `sinks_fanout` stage and every count sink. */
+  def run(spark: SparkSession, inPath: String, outDir: String,
+          extra: Seq[String]): Lineage.RunReport = {
+    val (fileModel, fileCfg, windowArg) = parseExtraArgs(extra)
+    val cfg = fileCfg.getOrElse(Pipeline.flagship)
+    val windowDur = windowArg.getOrElse(cfg.window)
+    val routeTable = cfg.routeTable
 
     val metrics = new MetricsListener
     spark.sparkContext.addSparkListener(metrics)
 
     val table = Transcripts.TranscriptTable()
-    val routeTable = fileCfg.map(_.routeTable)
-      .getOrElse(graft.run.Pipeline.routeTable)
-    def parseEnrich(turns: org.apache.spark.sql.DataFrame) = fileCfg match {
-      case Some(c) => c.parseEnrich(spark, turns)
-      case None => graft.run.Pipeline.parseEnrich(spark, turns)
-    }
-    // The fingerprint must cover the WHOLE effective config, not just
+    // The fingerprint covers the WHOLE effective config, not just
     // pattern regexes and route names: editing a route's WHERE clause,
     // the enrich spec, on_error, or a metric definition while keeping
     // names identical must invalidate committed sinks, or a resume
-    // silently ships outputs computed under the OLD config. For file
-    // configs the canonical rendered YAML is the config identity; the
-    // programmatic flagship pins its condition/metric strings.
-    val configText = fileModel.map(graft.config.ConfigLoader.render)
-      .getOrElse {
-        graft.run.Pipeline.patternBank.map(p => p.name + p.regex).mkString("|") +
-          graft.run.Pipeline.routeConditionStrings.map { case (n, w) => s"$n:$w" }
-            .mkString(";") +
-          graft.run.Pipeline.metricConfigStrings.toString
-      }
+    // silently ships outputs computed under the OLD config. The
+    // canonical rendered YAML is the config identity.
+    val configText = ConfigLoader.render(fileModel.getOrElse(Pipeline.config))
     // per-STAGE fingerprints: the fan-out's output does not depend on
     // the window, so changing only windowDur must not invalidate the
     // dominant routed write (it re-runs only the cheap count sinks)
@@ -86,9 +98,9 @@ object PipelineJob {
     // The fan-out itself is one idempotent partitioned write; its commit
     // is the stage marker.
     val sinksDir = s"$outDir/sinks"
-    if (!Lineage.isCommitted(outDir, "sinks_fanout", fpFanout)) {
-      val turns = table.read(spark, inPath)
-      val enriched = parseEnrich(turns)
+    val fanoutCommitted = Lineage.isCommitted(outDir, "sinks_fanout", fpFanout)
+    if (!fanoutCommitted) {
+      val enriched = cfg.parseEnrich(spark, table.read(spark, inPath))
       // honor the table's match semantics: match_once = first-match-wins
       // single-tag write (routingconnector logs.go:87), default =
       // multi-match fan-out — a match_once config silently getting
@@ -135,50 +147,39 @@ object PipelineJob {
     val written =
       if (sinksHavePartFiles) spark.read.parquet(sinksDir)
       else RouteStage.tagged(
-        parseEnrich(table.read(spark, inPath)).limit(0), routeTable)
+        cfg.parseEnrich(spark, table.read(spark, inPath)).limit(0), routeTable)
     val routeCounts = routeTable.routes.map(_.name)
       .:+(routeTable.defaultName).map { route =>
         s"counts_$route" -> CountStage.countWindowed(
           written.filter(col("route") === route),
-          MetricSpec("count", attrs = Seq(graft.model.PipelineConfig.AttrSpec("role"))),
+          MetricSpec("count", attrs = Seq(AttrSpec("role"))),
           col("ts"), windowDur)
       }.toMap
-    val userMetrics = fileCfg.filter(_.metrics.nonEmpty) match {
-      case Some(c) =>
-        // over the enriched frame (pre-fan-out: multi-match duplicates
-        // rows per route, which would double-count global metrics);
-        // re-deriving costs one extra scan of the input, only when a
-        // metrics section is configured
-        val enriched = parseEnrich(table.read(spark, inPath))
-        // the effective window (CLI arg wins over the config file, the
-        // documented precedence) — countMetrics' default would silently
-        // use the config's window for metric_* while counts_* honored
-        // the override, and the run's outputs would disagree on window
-        c.countMetrics(enriched, windowDur).map { case (n, df) => s"metric_$n" -> df }
-      case None => Map.empty[String, org.apache.spark.sql.DataFrame]
+    // over the enriched frame (pre-fan-out: multi-match duplicates
+    // rows per route, which would double-count global metrics);
+    // re-deriving costs one extra scan of the input, only when a config
+    // file declares metrics. The effective window (CLI arg wins over the
+    // config file) keeps metric_* and counts_* on one window.
+    val userMetrics = fileCfg.filter(_.metrics.nonEmpty).toSeq.flatMap { c =>
+      c.countMetrics(c.parseEnrich(spark, table.read(spark, inPath)), windowDur)
+        .map { case (n, df) => s"metric_$n" -> df }
     }
-    val report = Lineage.runResumable(spark, routeCounts ++ userMetrics,
+    val counts = Lineage.runResumable(spark, routeCounts ++ userMetrics,
       outDir, fpCounts)
+    val report =
+      if (fanoutCommitted) counts.copy(skipped = "sinks_fanout" +: counts.skipped)
+      else counts.copy(executed = "sinks_fanout" +: counts.executed)
 
     // metrics manifest (rows read/written, shuffle, task time) — drain
     // the async listener bus first or the final tasks' onTaskEnd events
     // may still be queued and the snapshot undercounts
     org.apache.spark.sql.graftbridge.Bridge.waitListenerBusEmpty(
       spark.sparkContext, 30000L)
+    spark.sparkContext.removeSparkListener(metrics)
     metrics.writeJson(s"$outDir/_lineage/run_metrics.json")
     println(s"[pipeline] executed=${report.executed.mkString(",")} " +
       s"skipped=${report.skipped.mkString(",")} failed=${report.failed.keys.mkString(",")}")
-    spark.stop()
-    // a run with ANY failed sink must not exit 0: runResumable holds the
-    // failure so the OTHER sinks still commit (their manifests make the
-    // retry cheap), but the scheduler has to see the run as failed or
-    // the missing table is only discovered downstream
-    if (report.failed.nonEmpty) {
-      report.failed.foreach { case (name, msg) =>
-        System.err.println(s"[pipeline] sink $name failed: $msg")
-      }
-      sys.exit(3)
-    }
+    report
   }
 
   /** Shared extra-arg surface for the batch and streaming entry points
@@ -186,21 +187,32 @@ object PipelineJob {
     * must be one definition): extras are recognized by SHAPE
     * (*.yaml / *.yml = config file, anything else = windowDur) so the
     * config's `window:` field is reachable without a positional
-    * placeholder; an explicit windowDur arg still wins over it.
-    * Returns (raw model for config fingerprinting, compiled config,
-    * effective window). */
-  private[run] def parseExtraArgs(extra: Array[String])
-      : (Option[graft.config.ConfigLoader.GraftFileConfig],
-         Option[graft.config.ConfigLoader.Compiled], String) = {
+    * placeholder; an explicit windowDur arg wins over it. At most one of
+    * each. Returns (raw model for config fingerprinting, compiled
+    * config, explicit window). */
+  private[run] def parseExtraArgs(extra: Seq[String], usage: String = Usage)
+      : (Option[ConfigLoader.GraftFileConfig], Option[ConfigLoader.Compiled],
+         Option[String]) = {
     val (cfgArgs, winArgs) = extra.partition(a =>
       a.endsWith(".yaml") || a.endsWith(".yml"))
-    val fileModel = cfgArgs.headOption
-      .map(graft.config.ConfigLoader.loadFile)
-    val fileCfg = fileModel.map(graft.config.ConfigLoader.compile)
-    val windowDur = winArgs.headOption
-      .orElse(fileCfg.map(_.window)).getOrElse("1 hour")
-    (fileModel, fileCfg, windowDur)
+    require(cfgArgs.size <= 1 && winArgs.size <= 1, usage)
+    val fileModel = cfgArgs.headOption.map(ConfigLoader.loadFile)
+    (fileModel, fileModel.map(ConfigLoader.compile), winArgs.headOption)
   }
+
+  /** The master a launch runs on: spark-submit's `spark.master`, else
+    * `SPARK_GRAFT_MASTER`, else [[DefaultMaster]]. */
+  private[run] def launchMaster(
+      props: collection.Map[String, String] = sys.props,
+      env: collection.Map[String, String] = sys.env): String =
+    props.getOrElse("spark.master", env.getOrElse("SPARK_GRAFT_MASTER", DefaultMaster))
+
+  /** Executor threads of a `local[n]` / `local[*]` master; None for any
+    * other master (a cluster sizes its own executors). */
+  private[run] def localThreads(master: String): Option[Int] =
+    "local\\[(\\d+|\\*)\\]".r.findFirstMatchIn(master)
+      .map(m => if (m.group(1) == "*") Runtime.getRuntime.availableProcessors()
+                else m.group(1).toInt)
 
   /** FAIL FAST on an implausible heap BEFORE building the session:
     * in local mode the driver JVM hosts every executor thread, and
@@ -211,12 +223,8 @@ object PipelineJob {
     * that, exit NOW with the launch fix instead of OOMing later.
     * Shared by [[PipelineJob]] and [[StreamingJob]]. */
   private[run] def failFastLocalHeap(jobName: String): Unit = {
-    val masterStr = sys.props.getOrElse("spark.master",
-      sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-    val localThreads = "local\\[(\\d+|\\*)\\]".r.findFirstMatchIn(masterStr)
-      .map(m => if (m.group(1) == "*") Runtime.getRuntime.availableProcessors()
-                else m.group(1).toInt)
-    localThreads.foreach { threads =>
+    val masterStr = launchMaster()
+    localThreads(masterStr).foreach { threads =>
       val maxHeap = Runtime.getRuntime.maxMemory()
       val needed = threads.toLong * 256L * 1024 * 1024
       if (maxHeap < needed) {

@@ -14,8 +14,9 @@ import graft.streaming.StreamingPipeline
   *   spark-submit --class graft.run.StreamingJob <jar> \
   *     <transcriptsDir> <outDir> [windowDur] [config.yaml] [--once]
   *
-  * Same config surface as [[PipelineJob]] (YAML via
-  * [[graft.config.ConfigLoader]], or the programmatic flagship), same
+  * Same config surface as [[PipelineJob]] (a YAML file via
+  * [[graft.config.ConfigLoader]], or the flagship
+  * `src/main/resources/graft/flagship.yaml` when none is given), same
   * route-table match semantics (match_once → first-match single tag,
   * default → multi-match fan-out), driving:
   *
@@ -27,7 +28,7 @@ import graft.streaming.StreamingPipeline
   *     ([[StreamingPipeline.windowedCounts]]): per-(window, route, role)
   *     counts under a watermark, append-finalized — state is bounded by
   *     `lateness`, not the stream;
-  *   - `outDir/metric_<name>` — each metric the config declares
+  *   - `outDir/metric_<name>` — each metric a config file declares
   *     (conditions + attrs, the count-connector surface), computed over
   *     the PRE-fan-out enriched frame exactly like [[PipelineJob]]
   *     (multi-match explosion would double-count global metrics), one
@@ -52,36 +53,37 @@ object StreamingJob {
     def all: Seq[StreamingQuery] = sinks +: counts +: metrics.map(_._2)
   }
 
+  val Usage = "usage: StreamingJob <transcriptsDir> <outDir> [windowDur] [config.yaml] [--once]"
+
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2,
-      "usage: StreamingJob <transcriptsDir> <outDir> [windowDur] [config.yaml] [--once]")
+    require(args.length >= 2, Usage)
     val inPath = args(0); val outDir = args(1)
-    val extra = args.drop(2)
+    val extra = args.drop(2).toSeq
     val once = extra.contains("--once")
-    val (_, fileCfg, windowDur) =
-      PipelineJob.parseExtraArgs(extra.filterNot(_ == "--once"))
+    val (_, fileCfg, windowArg) =
+      PipelineJob.parseExtraArgs(extra.filterNot(_ == "--once"), Usage)
+    val cfg = fileCfg.getOrElse(Pipeline.flagship)
 
     PipelineJob.failFastLocalHeap("StreamingJob")
 
-    val builder = SparkSession.builder()
+    val spark = SparkSession.builder()
       .appName("graft-streaming")
+      .master(PipelineJob.launchMaster())
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
-    val spark = (if (sys.props.contains("spark.master")) builder
-                 else builder.master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]")))
       .getOrCreate()
 
-    val hs = start(spark, inPath, outDir, fileCfg, windowDur,
-      lateness = fileCfg.map(_.lateness).getOrElse("10 minutes"),
-      once = once)
+    val hs = start(spark, inPath, outDir, fileCfg, windowArg.getOrElse(cfg.window),
+      lateness = cfg.lateness, once = once)
     if (once) {
       hs.all.foreach(_.awaitTermination())
       spark.stop()
     } else spark.streams.awaitAnyTermination()
   }
 
-  /** Build and start both queries; separated from main for testing and
-    * for embedding in a host application. */
+  /** Build and start the queries; separated from main for testing and
+    * for embedding in a host application. `fileCfg = None` runs the
+    * flagship without its `metric_*` queries. */
   def start(spark: SparkSession, inPath: String, outDir: String,
             fileCfg: Option[graft.config.ConfigLoader.Compiled],
             windowDur: String, lateness: String, once: Boolean): Handles = {
@@ -97,11 +99,9 @@ object StreamingJob {
         graft.sources.Transcripts.transcriptSchema }
     val stream = spark.readStream.schema(schema).parquet(inPath)
 
-    val routeTable = fileCfg.map(_.routeTable).getOrElse(Pipeline.routeTable)
-    val enriched = fileCfg match {
-      case Some(c) => c.parseEnrich(spark, stream)
-      case None => Pipeline.parseEnrich(spark, stream)
-    }
+    val cfg = fileCfg.getOrElse(Pipeline.flagship)
+    val routeTable = cfg.routeTable
+    val enriched = cfg.parseEnrich(spark, stream)
     // honor the table's match semantics exactly like PipelineJob: a
     // match_once config silently getting fan-out duplicates would
     // inflate every per-route count
@@ -142,13 +142,8 @@ object StreamingJob {
     // per metric (each its own checkpoint/table, independently
     // restartable — the per-query variant's isolation is the RIGHT
     // trade here, unlike the k-sink ingest path).
-    import org.apache.spark.sql.functions.col
     val wmEnriched = enriched.withWatermark("ts", lateness)
-    val metricFrames: Seq[(String, org.apache.spark.sql.DataFrame)] =
-      fileCfg.filter(_.metrics.nonEmpty) match {
-        case Some(c) => c.countMetrics(wmEnriched, windowDur).toSeq
-        case None => Nil
-      }
+    val metricFrames = fileCfg.toSeq.flatMap(_.countMetrics(wmEnriched, windowDur))
     val qMetrics = metricFrames.map { case (name, df) =>
       name -> startAppend(df, s"$outDir/metric_$name", s"$outDir/_ck/metric_$name")
     }

@@ -3,7 +3,7 @@ import org.apache.spark.sql.SparkSession
 import graft.synth.TranscriptSynth
 object Gen20M {
   def main(args: Array[String]): Unit = {
-    val s = SparkSession.builder().master("local[32]")
+    val s = SparkSession.builder().master(graft.run.PipelineJob.DefaultMaster)
       .config("spark.sql.shuffle.partitions", 64)
       .config("spark.ui.enabled", "false").getOrCreate()
     s.sparkContext.setLogLevel("ERROR")

@@ -123,17 +123,18 @@ class GoldenCountSpec extends SparkSpec {
   }
 
   test("flagship metric table: string-compiled ≡ hand-written (differential)") {
-    import graft.run.Pipeline
+    import graft.config.ConfigLoader
+    import graft.run.{FlagshipByHand, Pipeline}
     import graft.synth.TranscriptSynth
     val enriched = Pipeline.parseEnrich(spark,
       TranscriptSynth.generate(spark, TranscriptSynth.Config(3000, 20))).cache()
-    val byHand = Pipeline.metricsByHand
+    val byHand = FlagshipByHand.metricsByHand
     val fromStrings = Pipeline.metricsFromStrings
     assert(fromStrings.map(_.name) == byHand.map(_.name))
     fromStrings.zip(byHand).foreach { case (a, b) =>
-      val fa = CountStage.count(enriched, a, Pipeline.resolveAttr(Pipeline.parsedFields))
+      val fa = CountStage.count(enriched, a, ConfigLoader.resolveAttr(Pipeline.parsedFields))
         .collect().map(_.toString).sorted.toSeq
-      val fb = CountStage.count(enriched, b, Pipeline.resolveAttr(Pipeline.parsedFields))
+      val fb = CountStage.count(enriched, b, ConfigLoader.resolveAttr(FlagshipByHand.parsedFields))
         .collect().map(_.toString).sorted.toSeq
       assert(fa.nonEmpty && fa == fb, s"metric ${a.name}: string path differs from hand path")
     }

@@ -5,40 +5,52 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.model.PipelineConfig._
-import graft.run.Pipeline
+import graft.run.{FlagshipByHand, Pipeline}
 import graft.synth.TranscriptSynth
 
 /** The confmap round-trip law (`pkg/stanza/operator/operatortest/
-  * confmap.go` in `/root/reference`): a YAML fixture unmarshals to
-  * exactly the programmatic config, and re-rendering it reloads to the
-  * same value. Then the compiled config must DRIVE the same pipeline:
-  * identical route row sets and identical metric frames as
-  * [[graft.run.Pipeline]] on the same transcripts.
+  * confmap.go` in the reference collector): the flagship YAML unmarshals to
+  * exactly the config written out below, and re-rendering it reloads to
+  * the same value. Then the compiled config must DRIVE the same
+  * pipeline: identical route row sets and identical metric frames as
+  * the hand-built Column oracle ([[graft.run.FlagshipByHand]]) on the
+  * same transcripts.
   */
 class ConfigLoaderSpec extends SparkSpec {
 
   private def goldenYaml: String = {
-    val in = getClass.getResourceAsStream("/flagship.yaml")
+    val in = getClass.getResourceAsStream("/graft/flagship.yaml")
     try new String(in.readAllBytes(), "UTF-8") finally in.close()
   }
 
-  /** The flagship config as the FILE model (what the fixture encodes). */
+  /** The flagship config as the FILE model (what the YAML encodes). */
   private def flagshipFileConfig: ConfigLoader.GraftFileConfig =
     ConfigLoader.GraftFileConfig(
-      parse = Pipeline.parseConfig,
+      parse = FlagshipByHand.parseConfig,
       enrich = Some(ConfigLoader.EnrichFile(Seq("tool"), "upsert", None)),
       routes = ConfigLoader.RoutesFile(matchOnce = false, default = "default",
-        table = Pipeline.routeConditionStrings.map { case (n, w) =>
-          ConfigLoader.RouteFileSpec(n, w)
-        }),
-      metrics = Pipeline.metricConfigStrings.map { case (name, conds, attrs) =>
-        ConfigLoader.MetricFileSpec(name, conds,
-          attrs.map { case (k, d) => ConfigLoader.MetricAttr(k, d) })
-      },
+        table = Seq(
+          ConfigLoader.RouteFileSpec("tool_calls",
+            """tool != "" and attributes["tool_name"] != nil"""),
+          ConfigLoader.RouteFileSpec("errors",
+            """attributes["level"] == "ERROR" or attributes["level"] == "FATAL""""),
+          ConfigLoader.RouteFileSpec("user_turns", """role == "user""""))),
+      metrics = Seq(
+        ConfigLoader.MetricFileSpec("turn_count"),
+        ConfigLoader.MetricFileSpec("turn_count_by_role",
+          attributes = Seq(ConfigLoader.MetricAttr("role"))),
+        ConfigLoader.MetricFileSpec("tool_call_count",
+          conditions = Seq("""tool != """""),
+          attributes = Seq(ConfigLoader.MetricAttr("tool"),
+            ConfigLoader.MetricAttr("cost_class", Some("unknown")))),
+        ConfigLoader.MetricFileSpec("error_count_by_component",
+          conditions = Seq("""attributes["level"] == "ERROR""""),
+          attributes = Seq(ConfigLoader.MetricAttr("component")))),
       window = "1 hour")
 
   test("golden fixture loads to the programmatic flagship config (confmap.go)") {
     assert(ConfigLoader.load(goldenYaml) == flagshipFileConfig)
+    assert(Pipeline.config == flagshipFileConfig)
   }
 
   test("render ∘ load = identity (YAML round-trip)") {
@@ -194,8 +206,17 @@ class ConfigLoaderSpec extends SparkSpec {
     def key(df: DataFrame) = df.select("conv_id", "turn_idx")
       .collect().map(r => (r.getString(0), r.getInt(1))).toSet
     val (sinksCfg, countsCfg) = compiled.run(spark, turns)
-    val (sinksRef, countsRef) = Pipeline.run(spark, turns)
+    // the reference: hand-built parse/enrich, route table and counts
+    val enriched = FlagshipByHand.parseEnrich(spark, turns).cache()
+    val (sinksRef, stream) = graft.route.RouteStage.sinksAndStream(
+      enriched, FlagshipByHand.routeTableByHand)
+    val countsRef = sinksRef.keySet.map { name =>
+      name -> graft.agg.CountStage.countWindowed(
+        stream.filter(col("route") === name), MetricSpec("count"), col("ts"),
+        "1 hour", ConfigLoader.resolveAttr(FlagshipByHand.parsedFields))
+    }.toMap
     assert(sinksCfg.keySet == sinksRef.keySet)
+    assert(sinksRef.keySet == Set("tool_calls", "errors", "user_turns", "default"))
     sinksRef.keys.foreach { name =>
       assert(key(sinksCfg(name)) == key(sinksRef(name)), s"sink $name differs")
     }
@@ -206,13 +227,13 @@ class ConfigLoaderSpec extends SparkSpec {
     }
 
     // the config file's metric table over the enriched frame ≡ the
-    // programmatic metric table (GoldenCountSpec covers the semantics;
+    // hand-written metric table (GoldenCountSpec covers the semantics;
     // this pins the YAML -> MetricSpec path)
-    val enriched = Pipeline.parseEnrich(spark, turns).cache()
     val fromCfg = compiled.countMetrics(enriched)
-    Pipeline.metrics.foreach { m =>
+    assert(fromCfg.keySet == FlagshipByHand.metricsByHand.map(_.name).toSet)
+    FlagshipByHand.metricsByHand.foreach { m =>
       val ref = graft.agg.CountStage.countWindowed(enriched, m, col("ts"),
-        "1 hour", Pipeline.resolveAttr(Pipeline.parsedFields))
+        "1 hour", ConfigLoader.resolveAttr(FlagshipByHand.parsedFields))
       val a = fromCfg(m.name).collect().map(_.toSeq).toSet
       val b = ref.collect().map(_.toSeq).toSet
       assert(a == b, s"metric ${m.name} differs")

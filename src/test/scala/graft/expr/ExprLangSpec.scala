@@ -63,7 +63,7 @@ class ExprLangSpec extends SparkSpec {
   test("string-compiled route table matches the hand-written one row-for-row") {
     val tr = graft.sources.Transcripts.fromEvents(spark, "/root/testdata/sf0.001")
     val enriched = Pipeline.parseEnrich(spark, tr)
-    val byHand = graft.route.RouteStage.tagged(enriched, Pipeline.routeTableByHand)
+    val byHand = graft.route.RouteStage.tagged(enriched, graft.run.FlagshipByHand.routeTableByHand)
       .groupBy("route").count().as[(String, Long)].collect().toMap
     val byString = graft.route.RouteStage.tagged(enriched, Pipeline.routeTableFromStrings)
       .groupBy("route").count().as[(String, Long)].collect().toMap

@@ -65,7 +65,7 @@ class PlanSpec extends SparkSpec {
       graft.model.PipelineConfig.MetricSpec("n",
         attrs = Seq(graft.model.PipelineConfig.AttrSpec("component"),
           graft.model.PipelineConfig.AttrSpec("level", Some("none")))),
-      Pipeline.resolveAttr(Pipeline.parsedFields))
+      graft.config.ConfigLoader.resolveAttr(Pipeline.parsedFields))
     val occurrences = "multi_pattern_extract".r
       .findAllIn(p12ish.queryExecution.optimizedPlan.toString).size
     assert(occurrences == 1, s"parse bank evaluated $occurrences times")
@@ -88,6 +88,17 @@ class PlanSpec extends SparkSpec {
     val occ = "multi_pattern_extract".r
       .findAllIn(out.queryExecution.optimizedPlan.toString).size
     assert(occ == 1, s"flagship parse bank evaluated $occ times")
+  }
+
+  test("flagship plan from the compiled YAML ≡ the hand-built parse/enrich plan") {
+    // Pipeline compiles graft/flagship.yaml; the hand oracle spells the
+    // same bank in Scala with barrier=false and the built-in tool enrich.
+    // The two optimized plans must compute the same result.
+    def plan(enriched: org.apache.spark.sql.DataFrame) =
+      RouteStage.tagsExploded(enriched, Pipeline.routeTable).queryExecution.optimizedPlan
+    val viaYaml = plan(Pipeline.parseEnrich(spark, spark.read.parquet(turnsDir)))
+    val byHand = plan(FlagshipByHand.parseEnrich(spark, spark.read.parquet(turnsDir)))
+    assert(viaYaml.sameResult(byHand), s"plans differ:\n$viaYaml\nvs\n$byHand")
   }
 
   test("predicates on non-parsed columns still push through the parse Generate") {

@@ -65,14 +65,11 @@ class StreamingJobSpec extends SparkSpec {
     val inDir = Files.createTempDirectory("graft_sj_in").toString
     val outDir = Files.createTempDirectory("graft_sj_out").toString
 
-    // the golden flagship config file drives the run — routes AND
-    // metrics from YAML (ConfigLoaderSpec pins it ≡ the programmatic
-    // Pipeline config, so batch comparisons below stay valid)
-    val cfg = {
-      val in = getClass.getResourceAsStream("/flagship.yaml")
-      val yaml = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      graft.config.ConfigLoader.compile(graft.config.ConfigLoader.load(yaml))
-    }
+    // the flagship config file drives the run — routes AND metrics
+    // from YAML (the same file Pipeline compiles, so batch comparisons
+    // below stay valid)
+    val cfg = graft.config.ConfigLoader.compile(
+      graft.config.ConfigLoader.loadResource("/graft/flagship.yaml"))
     def drain(): Unit = {
       val hs = StreamingJob.start(spark, inDir, outDir, fileCfg = Some(cfg),
         windowDur = "1 hour", lateness = "10 minutes", once = true)
@@ -148,7 +145,7 @@ class StreamingJobSpec extends SparkSpec {
         enrichedAll,
         graft.model.PipelineConfig.MetricSpec("turn_count_by_role",
           attrs = Seq(graft.model.PipelineConfig.AttrSpec("role"))),
-        col("ts"), "1 hour", Pipeline.resolveAttr(Pipeline.parsedFields))
+        col("ts"), "1 hour", graft.config.ConfigLoader.resolveAttr(Pipeline.parsedFields))
       .select("window_start", "role", "turn_count_by_role")
       .as[(Timestamp, String, Long)].collect().toSet
       .filter(_._1.before(ts(2)))
