@@ -49,16 +49,6 @@ object MetricsTransform {
   def deleteLabelValue(df: DataFrame, label: String, value: String): DataFrame =
     df.filter(!(col(label) <=> value))
 
-  /** toggle_scalar_data_type (`operation_toggle_scalar_datatype.go`):
-    * int64 ↔ double. */
-  def toggleScalarDataType(df: DataFrame, valueCol: String): DataFrame = {
-    val toType = df.schema(valueCol).dataType match {
-      case org.apache.spark.sql.types.DoubleType => "bigint"
-      case _ => "double"
-    }
-    df.withColumn(valueCol, col(valueCol).cast(toType))
-  }
-
   private def aggExpr(how: String, v: Column): Column = how match {
     case "sum"  => sum(v)
     case "mean" => avg(v)

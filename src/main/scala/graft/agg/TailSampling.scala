@@ -30,9 +30,6 @@ object TailSampling {
   /** status-code/attribute policy: conversation contains an error turn. */
   val errorPolicy: Column = col("has_error") === 1
 
-  /** latency policy (`internal/sampling/latency.go`): span ≥ threshold. */
-  def latencyPolicy(minMicros: Long): Column = col("span_micros") >= minMicros
-
   /** numeric-attribute policy: turn count in range. */
   def turnCountPolicy(min: Long, max: Long): Column =
     col("n_turns").between(min, max)

@@ -361,6 +361,4 @@ object ConfigLoader {
       parsedFields = parsedFields,
       lateness = c.lateness)
   }
-
-  def compileFile(path: String): Compiled = compile(loadFile(path))
 }

@@ -72,11 +72,6 @@ object EnrichStage {
         "))")
 
   /** Role dimension (speaker metadata). */
-  def dimRole(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    dimRoleRows.toDF("role", "speaker_kind", "counts_as_turn")
-  }
-
   val dimRoleRows: Seq[(String, String, Boolean)] = Seq(
     ("user", "human", true),
     ("assistant", "model", true),

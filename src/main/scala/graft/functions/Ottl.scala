@@ -141,8 +141,6 @@ object Ottl {
     Bridge.column(Fnv1a64(Bridge.expression(c)))
   }
 
-  def ottlUuid(): Column = uuid()
-
   def timeParse(c: Column, fmt: String): Column = to_timestamp(c, fmt)
   def truncateTime(c: Column, unit: String): Column = date_trunc(unit, c)
   def unixSeconds(c: Column): Column = unix_seconds(c.cast("timestamp"))
@@ -218,7 +216,6 @@ object Ottl {
     * `parse_json` a raw value into a variant, then test its runtime
     * schema. Strings stay strings — IsDouble("1.5") is false, exactly
     * like the reference's type switch. */
-  def variantTypeName(c: Column): Column = schema_of_variant(c)
   def isBool(c: Column): Column = schema_of_variant(c) === "BOOLEAN"
   /** JSON fractional numbers surface as DECIMAL(p,s) in the variant
     * schema; pcommon treats any fractional number as Double. */

@@ -13,7 +13,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Bit-identical to the declarative rendering
   * `aggregate(split(text, ""), 0L, (acc, ch) -> pmod(acc*31 + ascii(ch),
   * 2147483647))`, which evaluates an interpreted lambda per character
-  * (kept as the differential oracle in TextAnalysis.fingerprintHof).
+  * (kept as the differential oracle in the test sources:
+  * `graft.ops.HofOracles.fingerprintHof`).
   */
 case class RollingFingerprint(child: Expression) extends UnaryExpression {
 

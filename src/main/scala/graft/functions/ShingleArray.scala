@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * duplicated-span detection and repetition metrics, where
   * multiplicity and position carry the signal).
   *
-  * Bit-identical to the HOF rendering ([[graft.ops.Dedup.shinglesHof]])
+  * Bit-identical to the HOF rendering (`graft.ops.HofOracles.shinglesHof`, test sources)
   * `array_distinct(transform(sequence(0, greatest(0, size(toks)-n)),
   * i -> concat_ws(" ", get(toks, i), …, get(toks, i+n-1))))` with
   * `toks = split(text, " ")` — but that form re-evaluates the `split`

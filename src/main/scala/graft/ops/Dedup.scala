@@ -29,7 +29,8 @@ object Dedup {
   /** Token n-gram shingle set (distinct), guarded for short docs: a doc
     * shorter than n yields one degenerate whole-doc shingle. One codegen
     * byte pass ([[graft.functions.ShingleArray]]); the HOF rendering
-    * below is the differential oracle. */
+    * in the test sources (`graft.ops.HofOracles`) is the differential
+    * oracle. */
   def shingles(textCol: Column, n: Int = 3): Column = {
     import org.apache.spark.sql.graftbridge.Bridge
     Bridge.column(graft.functions.ShingleArray(
@@ -62,63 +63,25 @@ object Dedup {
       Bridge.expression(textCol), n, hashed = true, distinct = false))
   }
 
-  /** Interpreted-HOF rendering of [[shinglesAll]] (differential oracle —
-    * bit-identical, minus the array_distinct of [[shinglesHof]]). */
-  def shinglesAllHof(textCol: Column, n: Int = 3): Column = {
-    val toks = split(textCol, " ")
-    val starts = sequence(lit(0), greatest(lit(0), size(toks) - lit(n)))
-    transform(starts, i =>
-      concat_ws(" ", (0 until n).map(j => get(toks, i + lit(j))): _*))
-  }
-
-  /** Interpreted-HOF rendering of [[shingles]] (differential oracle —
-    * bit-identical): 0-based `get` (null past the end, ANSI-safe) +
-    * concat_ws's null-skipping give the short-doc degenerate shingle;
-    * note the lambda body re-evaluates `split` per element, which is why
-    * the codegen expression exists. */
-  def shinglesHof(textCol: Column, n: Int = 3): Column = {
-    val toks = split(textCol, " ")
-    val starts = sequence(lit(0), greatest(lit(0), size(toks) - lit(n)))
-    array_distinct(transform(starts, i =>
-      concat_ws(" ", (0 until n).map(j => get(toks, i + lit(j))): _*)))
-  }
-
   /** MinHash signature: element h = min over shingles of xxhash64(s, h).
     * One codegen pass hashing each shingle ONCE
-    * ([[graft.functions.MinHashSignature]]); the HOF rendering below is
-    * the differential oracle. */
+    * ([[graft.functions.MinHashSignature]]); the test-side HOF rendering
+    * (`graft.ops.HofOracles`) is the differential oracle. */
   def minhashSignature(shinglesCol: Column, numHashes: Int = 64): Column = {
     import org.apache.spark.sql.graftbridge.Bridge
     Bridge.column(graft.functions.MinHashSignature(
       Bridge.expression(shinglesCol), numHashes))
   }
 
-  /** Interpreted-HOF rendering of [[minhashSignature]] (differential
-    * oracle — bit-identical): walks the shingle array numHashes times
-    * through interpreted lambdas and re-hashes every string each pass. */
-  def minhashSignatureHof(shinglesCol: Column, numHashes: Int = 64): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)), h =>
-      array_min(transform(shinglesCol, s => xxhash64(s, h))))
-
   /** Banded LSH keys: split the signature into `bands` bands of
     * `numHashes/bands` rows and hash each band. Docs sharing ANY
     * (band_idx, band_hash) become near-dup candidates. One codegen
-    * pass ([[graft.functions.BandHashes]], r6); the HOF rendering below
-    * is the differential oracle. */
+    * pass ([[graft.functions.BandHashes]], r6); the test-side HOF
+    * rendering (`graft.ops.HofOracles`) is the differential oracle. */
   def bandHashes(sigCol: Column, numHashes: Int, bands: Int): Column = {
     import org.apache.spark.sql.graftbridge.Bridge
     Bridge.column(graft.functions.BandHashes(
       Bridge.expression(sigCol), numHashes, bands))
-  }
-
-  /** Interpreted-HOF rendering of [[bandHashes]] (differential oracle —
-    * bit-identical on non-null signatures): `bands` interpreted lambda
-    * evals per row, each slicing a copy of the signature. */
-  def bandHashesHof(sigCol: Column, numHashes: Int, bands: Int): Column = {
-    val r = numHashes / bands
-    require(bands * r == numHashes, s"bands=$bands must divide numHashes=$numHashes")
-    transform(sequence(lit(0), lit(bands - 1)), b =>
-      xxhash64(slice(sigCol, b * lit(r) + lit(1), lit(r)), b))
   }
 
   /** Jaccard similarity of two (distinct) shingle arrays — single pass
@@ -127,19 +90,6 @@ object Dedup {
     import org.apache.spark.sql.graftbridge.Bridge
     Bridge.column(graft.functions.JaccardSim(
       Bridge.expression(a), Bridge.expression(b)))
-  }
-
-  /** HOF rendering of [[jaccard]] (differential oracle): evaluates
-    * array_intersect twice per row. The two-empty-arrays case is
-    * guarded to 0.0 exactly like the codegen expression — unguarded,
-    * ANSI mode throws DIVIDE_BY_ZERO on the 0/0 (Spark's Divide errors
-    * on a zero divisor for doubles too). Unreachable from the dedup
-    * pipeline (shingles() always emits ≥1 degenerate shingle); pinned
-    * by DedupSpec so the bit-exactness contract covers the edge. */
-  def jaccardHof(a: Column, b: Column): Column = {
-    val inter = size(array_intersect(a, b)).cast("double")
-    when(size(a) + size(b) === 0, lit(0.0))
-      .otherwise(inter / (size(a) + size(b) - size(array_intersect(a, b))))
   }
 
   /** MinHash+LSH near-duplicate pairs: shingle → minhash → band →
@@ -192,14 +142,18 @@ object Dedup {
       .filter(firstShared === col("band"))
       .select(col("id_a"), col("id_b"))
     // candidate members (≪ corpus): broadcast-filter the re-scan so the
-    // corpus side never shuffles, then attach each side's shingle set
+    // corpus side never shuffles, then attach each side's shingle set.
+    // The re-scan reads (id, text) under the internal names, so neither
+    // the caller's id column name nor its other columns can collide with
+    // the candidate side's `id`.
     val candIds = cand.select(explode(array(col("id_a"), col("id_b"))).as("id"))
       .distinct()
-    val shHit = df.join(broadcast(candIds), col(idCol) === col("id"))
+    val shHit = df.select(col(idCol).as("id"), col(textCol).as("text"))
+      .join(broadcast(candIds), "id")
       .select(col("id"),
         // sorted ONCE per doc so the per-pair verify takes JaccardSim's
         // unboxed merge fast path (set semantics: value unchanged)
-        sort_array(shingleHashes(col(textCol), shingleSize)).as("shh"))
+        sort_array(shingleHashes(col("text"), shingleSize)).as("shh"))
     // broadcast BOTH attach joins: the candidate-pair stream can be far
     // larger than the member set (the pathological self-similar corpus:
     // 17M pairs over 50k docs), and a sort-merge attach would push the
@@ -284,12 +238,14 @@ object Dedup {
     val cand = corpus.join(broadcast(bench), Seq("band", "bh"))
       .select(col("doc_id_c"), col("bench_id_c")).distinct()
     val candDocIds = cand.select(col("doc_id_c")).distinct()
-    val corpusSh = docs.join(broadcast(candDocIds),
-        col(idCol) === col("doc_id_c"))
+    // re-scan under the internal names: a caller column that is itself
+    // named `doc_id_c` cannot make the join key ambiguous
+    val corpusSh = docs.select(col(idCol).as("doc_id_c"), col(textCol).as("text_c"))
+      .join(broadcast(candDocIds), "doc_id_c")
       .select(col("doc_id_c"),
         // sorted once per doc -> JaccardSim merge fast path (see
         // nearDupMinhashLsh; set semantics, value unchanged)
-        sort_array(shingleHashes(col(textCol), shingleSize)).as("sh_d"))
+        sort_array(shingleHashes(col("text_c"), shingleSize)).as("sh_d"))
     val benchSh = benchmark.select(col(benchIdCol).as("bench_id_c"),
       sort_array(shingleHashes(col(benchTextCol), shingleSize)).as("sh_b"))
     cand.join(corpusSh, Seq("doc_id_c"))
@@ -499,24 +455,6 @@ object Dedup {
     org.apache.spark.sql.graftbridge.Bridge.column(
       graft.functions.SimHash64(
         org.apache.spark.sql.graftbridge.Bridge.expression(textCol)))
-
-  /** The declarative HOF rendering of [[simhash64]] (kept as the
-    * differential oracle for the custom expression — bit-identical). */
-  def simhash64Hof(textCol: Column): Column = {
-    val th = transform(split(textCol, " "), t => xxhash64(t))
-    aggregate(
-      sequence(lit(0), lit(63)),
-      lit(0L),
-      (acc, i) => {
-        // call_function: shiftleft/shiftright with a column shift amount
-        // (the functions._ overloads only take Int literals)
-        val bitSum = aggregate(th, lit(0),
-          (c, h) => c + call_function("shiftright", h, i)
-            .bitwiseAND(lit(1L)).cast("int") * 2 - 1)
-        acc.bitwiseOR(
-          when(bitSum > 0, call_function("shiftleft", lit(1L), i)).otherwise(lit(0L)))
-      })
-  }
 
   /** Dedup GROUP formation: connected components over a near-dup pair
     * list — the step that turns pairwise similarity output (d07/d08/e04)

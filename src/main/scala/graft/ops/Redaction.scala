@@ -98,9 +98,4 @@ object Redaction {
 
     (Seq(ignoredPart, maskedPart) ++ audits).reduce(map_concat(_, _))
   }
-
-  /** Value-only masking of a single string column (the round-1 surface,
-    * kept for text bodies): every blocked-pattern match → `****`. */
-  def maskValues(c: Column, blockedValues: Seq[String]): Column =
-    blockedValues.foldLeft(c)((acc, re) => regexp_replace(acc, re, "****"))
 }

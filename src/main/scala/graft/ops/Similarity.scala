@@ -21,7 +21,8 @@ object Similarity {
 
   /** Cosine similarity between an array<double> column and a literal
     * query vector — one codegen pass ([[graft.functions.CosineSim]]);
-    * the HOF rendering below is the differential oracle. */
+    * the test-side HOF rendering (`graft.ops.HofOracles.cosineHof`) is
+    * the differential oracle. */
   def cosineToQuery(vec: Column, query: Array[Double]): Column =
     cosine(vec, lit(query))
 
@@ -30,20 +31,6 @@ object Similarity {
     import org.apache.spark.sql.graftbridge.Bridge
     Bridge.column(graft.functions.CosineSim(
       Bridge.expression(a), Bridge.expression(b)))
-  }
-
-  /** Interpreted-HOF rendering of [[cosine]] — kept as the differential
-    * oracle for the codegen expression (bit-identical: same sequential
-    * accumulation order, same null-on-length-mismatch semantics). NOT
-    * for hot paths: the lambdas evaluate interpreted per element. */
-  def cosineHof(a: Column, b: Column): Column = {
-    val dot = aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), _ + _)
-    val na = sqrt(aggregate(transform(a, x => x * x), lit(0.0), _ + _))
-    val nb = sqrt(aggregate(transform(b, x => x * x), lit(0.0), _ + _))
-    // zero-norm guard like the codegen expression (and like jaccardHof):
-    // unguarded, ANSI's Divide throws DIVIDE_BY_ZERO where CosineSim
-    // returns 0.0, breaking the bit-identity contract on zero vectors
-    when(na * nb === 0.0, lit(0.0)).otherwise(dot / (na * nb))
   }
 
   /** Brute-force cosine top-k against one query vector. */
@@ -67,14 +54,6 @@ object Similarity {
     import org.apache.spark.sql.graftbridge.Bridge
     Bridge.column(graft.functions.LshBucket64(Bridge.expression(vec), planes))
   }
-
-  /** Interpreted-HOF rendering of [[lshBucket]] (differential oracle):
-    * `signBits` separate aggregate passes per row. */
-  def lshBucketHof(vec: Column, planes: Seq[Array[Double]]): Column =
-    planes.zipWithIndex.map { case (p, i) =>
-      val dot = aggregate(zip_with(vec, lit(p), (x, y) => x * y), lit(0.0), _ + _)
-      when(dot >= 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce((a, b) => a.bitwiseOR(b))
 
   /** LSH-bucketed ANN: probe the query's bucket plus all hamming-1
     * neighbour buckets, exact-rerank candidates, return top-k.

@@ -493,10 +493,6 @@ object TextAnalysis {
       graft.functions.StopwordCount(
         org.apache.spark.sql.graftbridge.Bridge.expression(text), words))
 
-  /** Declarative HOF rendering of [[stopwordCount]] (differential oracle). */
-  def stopwordCountHof(text: Column, words: Seq[String]): Column =
-    size(filter(split(lower(text), "\\s+"), t => t.isin(words: _*)))
-
   /** Heuristic language ID: the language whose stopword bank hits the
     * most tokens; "und" (undetermined) when nothing hits. */
   def langId(text: Column): Column = {
@@ -884,12 +880,6 @@ object TextAnalysis {
       graft.functions.RollingFingerprint(
         org.apache.spark.sql.graftbridge.Bridge.expression(text)))
 
-  /** Declarative HOF rendering of [[fingerprint]] (differential oracle
-    * for the one-pass codegen expression — bit-identical, ~50× slower). */
-  def fingerprintHof(text: Column): Column =
-    aggregate(split(text, ""), lit(0L),
-      (acc, ch) => pmod(acc * 31 + ascii(ch), lit(2147483647L)))
-
   // ---- tokenizer induction (BPE merge statistics) ----
 
   /** One BPE training iteration over the corpus (Sennrich et al. 2016
@@ -971,14 +961,4 @@ object TextAnalysis {
         length(col(textCol)).cast("bigint").as("n_chars"),
         size(split(encoded, SEP)).cast("bigint").as("n_bpe_tokens"))
   }
-
-  /** Per-document fingerprint + analysis frame. */
-  def analyze(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(
-      col(idCol),
-      langId(col(textCol)).as("lang_pred"),
-      tokenCountWhitespace(col(textCol)).as("n_tokens_ws"),
-      tokenCountBpeIsh(col(textCol)).as("n_tokens_bpe"),
-      fingerprint(col(textCol)).as("fingerprint"),
-      qualityMetrics(col(textCol)).as("quality"))
 }

@@ -34,21 +34,4 @@ object Bucketing {
   def colocatedJoin(spark: SparkSession, left: String, right: String,
                     keys: Seq[String]): DataFrame =
     spark.table(left).join(spark.table(right), keys)
-
-  /** True iff the physical plan contains no SHUFFLE exchange (broadcast
-    * exchanges don't move the fact side and are allowed) — the property
-    * [[colocatedJoin]] exists to guarantee. */
-  def isExchangeFree(df: DataFrame): Boolean = {
-    val plan = df.queryExecution.executedPlan.toString
-    // ANY exchange that is not a broadcast is a shuffle — enumerating
-    // partitionings (hash/range/single) missed RoundRobinPartitioning
-    // (repartition(n)) and rebalance, letting a fully-shuffled plan
-    // pass the zero-shuffle gate. ReusedExchange is exempt too: a plan
-    // reusing a BroadcastExchange prints "ReusedExchange", whose
-    // "Exchange" is preceded by "Reused", not "Broadcast" — without the
-    // second guard the gate reports a shuffle on a genuinely
-    // exchange-free plan. (A reused SHUFFLE exchange cannot slip
-    // through: its original Exchange node is still in the plan text.)
-    !"(?<!Broadcast)(?<!Reused)Exchange".r.findFirstIn(plan).isDefined
-  }
 }

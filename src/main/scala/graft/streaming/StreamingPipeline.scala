@@ -650,65 +650,15 @@ object StreamingPipeline {
         col("server_service"), col("connection_type"), col("n_edges"),
         col("n_failed"))
 
-  /** Streaming route fan-out: one query per sink, all fed from the same
-    * tagged stream; checkpointLocation per sink gives exactly-once
-    * delivery (the streaming rendering of routing-connector fan-out).
-    *
-    * SCALE CAVEAT: Structured Streaming shares nothing between
-    * `.start()` calls, so the upstream (source read + parse + enrich +
-    * tagging) re-executes once PER SINK — k× the ingest IO and parse
-    * CPU. Fine for a handful of sinks on a modest stream; at high
-    * volume use [[startRoutedSinksMultiplexed]] (same per-sink
-    * directory layout, one upstream pass) or
-    * [[startRoutedSinksSingleScan]] (one partitioned table). This
-    * variant's advantage is per-sink isolation (independent
-    * checkpoints/restarts, exactly-once via the streaming file sink). */
-  def startRoutedSinks(tagged: DataFrame, sinkNames: Seq[String],
-                       outDir: String, checkpointDir: String): Seq[org.apache.spark.sql.streaming.StreamingQuery] =
-    sinkNames.map { name =>
-      tagged.filter(col("route") === name)
-        .writeStream
-        .format("parquet")
-        .option("path", s"$outDir/$name")
-        .option("checkpointLocation", s"$checkpointDir/$name")
-        .outputMode(OutputMode.Append)
-        .start()
-    }
-
-  /** Single-scan streaming fan-out: ONE query, each micro-batch written
-    * once with `partitionBy("route")` (source scanned and parsed exactly
-    * once regardless of sink count). Routing semantics are fixed by how
-    * the caller built the `route` column: `RouteStage.tagged` gives
-    * first-match-wins (match_once), `RouteStage.tagsExploded` gives
-    * multi-match fan-out — only the latter is the streaming rendering of
-    * the batch path's `writeMultiMatch` (explode is streaming-safe, so
-    * both compose with this sink). Exactly-once: each batch writes
-    * under its own `batch_id=<id>` partition with overwrite, so a
-    * replayed batch after failure REPLACES its own output instead of
-    * appending duplicates. Readers see one partitioned table:
-    * `spark.read.parquet(outDir).filter($"route" === name)` prunes to
-    * the route's directories (partition discovery covers both levels).
-    */
-  def startRoutedSinksSingleScan(tagged: DataFrame, outDir: String,
-                                 checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    tagged.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.write.mode("overwrite")
-          .partitionBy("route")
-          .parquet(s"$outDir/batch_id=$batchId")
-      }
-      .start()
-
   /** foreachBatch MULTIPLEXER: ONE streaming query, one upstream pass
     * per micro-batch, k filtered writes to per-sink directories — the
     * streaming rendering of the reference routing connector's
     * group-then-forward economy (it groups each incoming plog batch by
     * matched route once, then forwards the per-route groups to their
     * consumers — `connector/routingconnector/logs.go:62-103` — rather
-    * than re-reading the source per route, which is exactly what
-    * [[startRoutedSinks]]'s k independent queries do).
+    * than re-reading the source per route, which is exactly what k
+    * independent per-sink queries would do: Structured Streaming shares
+    * nothing between `.start()` calls).
     *
     * Mechanics: the micro-batch is persisted and materialized ONCE (the
     * source read + parse + enrich + tagging upstream runs a single
@@ -716,17 +666,13 @@ object StreamingPipeline {
     * narrow cached-scan per sink, no upstream re-execution. Exactly-once
     * on replay: each batch writes under its own `batch_id=<id>`
     * subdirectory with overwrite, so a batch replayed after a failure
-    * REPLACES its own output instead of appending duplicates (the
-    * [[startRoutedSinksSingleScan]] idempotence idiom). Readers see the
-    * SAME per-sink layout as the per-query path —
-    * `spark.read.parquet(s"$outDir/<name>")` — with `batch_id` surfaced
-    * as a partition column.
+    * REPLACES its own output instead of appending duplicates. Readers
+    * see one directory per sink — `spark.read.parquet(s"$outDir/<name>")`
+    * — with `batch_id` surfaced as a partition column.
     *
-    * vs [[startRoutedSinks]]: k× less ingest IO and parse CPU, at the
+    * vs one query per sink: k× less ingest IO and parse CPU, at the
     * cost of per-sink checkpoint isolation (one checkpoint drives all
-    * sinks; a poison-pill sink stalls the batch for every route). At
-    * 10^12-turn scale the ingest economy wins — the per-query variant
-    * stays available when a sink needs independent restart cadence. */
+    * sinks; a poison-pill sink stalls the batch for every route). */
   def startRoutedSinksMultiplexed(tagged: DataFrame, sinkNames: Seq[String],
                                   outDir: String, checkpointDir: String,
                                   trigger: Option[org.apache.spark.sql.streaming.Trigger] = None): org.apache.spark.sql.streaming.StreamingQuery =

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.route.RouteStage
@@ -30,16 +29,7 @@ object ScalingProbe {
     val cores = coresS.toInt
     val repBudgetSec = if (args.length > 2) args(2).toDouble else 40.0
     val maxReps = if (args.length > 3) args(3).toInt else 4
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-probe-$cores")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tools.session(s"graft-probe-$cores", cores, Tools.benchConf)
 
     def run(df: org.apache.spark.sql.DataFrame): Unit = {
       val enriched = Pipeline.parseEnrich(spark, df)

@@ -65,7 +65,7 @@ class DedupSpec extends SparkSpec {
     val b = bench.select(col("bench_id"), Dedup.shingles(col("text"), 1).as("sb"))
     val brute = d.crossJoin(b)
       .select(col("doc_id"), col("bench_id"),
-        Dedup.jaccardHof(col("sa"), col("sb")).as("j"))
+        HofOracles.jaccardHof(col("sa"), col("sb")).as("j"))
       .filter(col("j") >= 0.5)
       .select(col("doc_id"), col("bench_id"), floor(col("j") * 10000).cast("long"))
       .as[(Long, Long, Long)].collect().toSet
@@ -85,6 +85,31 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("minhash LSH: a caller id column named `id` ≡ the same corpus under doc_id") {
+    // `id` is the operator's internal candidate-id name: the attach join
+    // must not resolve the caller's column against it (was ambiguous)
+    val want = Dedup.nearDupMinhashLsh(corpus, "doc_id", "text", threshold = 0.5)
+      .select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect().toSet
+    val got = Dedup.nearDupMinhashLsh(corpus.withColumnRenamed("doc_id", "id"),
+        "id", "text", threshold = 0.5)
+      .select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect().toSet
+    assert(got == want && want.nonEmpty)
+  }
+
+  test("near-dup contamination: a docs frame already carrying doc_id_c") {
+    // `doc_id_c` is the operator's internal corpus-id name: a caller
+    // column of that name must neither collide nor leak into the result
+    val bench = corpus.filter(col("doc_id") < 5)
+      .select((col("doc_id") + 1000L).as("bench_id"), col("text"))
+    def pairs(docs: org.apache.spark.sql.DataFrame) =
+      Dedup.contaminationNearDup(docs, "doc_id", "text", bench, "bench_id", "text",
+          shingleSize = 1, threshold = 0.5)
+        .select("doc_id", "bench_id", "jaccard").as[(Long, Long, Double)].collect().toSet
+    val want = pairs(corpus)
+    val got = pairs(corpus.withColumn("doc_id_c", -col("doc_id")))
+    assert(got == want && want.nonEmpty)
+  }
+
   test("simhash: hamming 0 for identical, small for near-dup, large for random") {
     val sigs = corpus.select(col("doc_id"), Dedup.simhash64(col("text")).as("sig"))
       .as[(Long, Long)].collect().toMap
@@ -97,13 +122,13 @@ class DedupSpec extends SparkSpec {
   test("simhash custom expression is bit-identical to the HOF rendering") {
     val probes = corpus.limit(40)
       .select(Dedup.simhash64(col("text")).as("fast"),
-        Dedup.simhash64Hof(col("text")).as("slow"))
+        HofOracles.simhash64Hof(col("text")).as("slow"))
       .as[(Long, Long)].collect()
     assert(probes.nonEmpty && probes.forall { case (f, h) => f == h })
     // edge shapes: empty string, delimiters only, multi-space runs
     val edges = Seq("", " ", "  ", "a", "a b", " a  b ").toDF("text")
       .select(Dedup.simhash64(col("text")).as("fast"),
-        Dedup.simhash64Hof(col("text")).as("slow"))
+        HofOracles.simhash64Hof(col("text")).as("slow"))
       .as[(Long, Long)].collect()
     assert(edges.forall { case (f, h) => f == h })
   }
@@ -149,13 +174,13 @@ class DedupSpec extends SparkSpec {
       Dedup.shingleHashes(col("text"), 1), 64).as("sig"))
     val diff = sig.select(
       Dedup.bandHashes(col("sig"), 64, 16).as("fast"),
-      Dedup.bandHashesHof(col("sig"), 64, 16).as("slow"))
+      HofOracles.bandHashesHof(col("sig"), 64, 16).as("slow"))
       .as[(Seq[Long], Seq[Long])].collect()
     assert(diff.nonEmpty && diff.forall { case (f, h) => f == h })
     // uneven band count divisor variant
     val diff2 = sig.select(
       Dedup.bandHashes(col("sig"), 64, 8).as("fast"),
-      Dedup.bandHashesHof(col("sig"), 64, 8).as("slow"))
+      HofOracles.bandHashesHof(col("sig"), 64, 8).as("slow"))
       .as[(Seq[Long], Seq[Long])].collect()
     assert(diff2.forall { case (f, h) => f == h })
   }
@@ -164,7 +189,7 @@ class DedupSpec extends SparkSpec {
     val sh = corpus.select(Dedup.shingles(col("text"), 3).as("sh"))
     val diff = sh.select(
       Dedup.minhashSignature(col("sh"), 64).as("fast"),
-      Dedup.minhashSignatureHof(col("sh"), 64).as("slow"))
+      HofOracles.minhashSignatureHof(col("sh"), 64).as("slow"))
       .as[(Seq[Long], Seq[Long])].collect()
     assert(diff.nonEmpty && diff.forall { case (f, h) => f == h })
     // hashed-shingle (long) input agrees with xxhash64(elem, h) HOF
@@ -179,7 +204,7 @@ class DedupSpec extends SparkSpec {
     // empty array → all-null signature like array_min(empty)
     val empty = Seq(Seq.empty[String]).toDF("sh")
       .select(Dedup.minhashSignature(col("sh"), 4).as("fast"),
-        Dedup.minhashSignatureHof(col("sh"), 4).as("slow"))
+        HofOracles.minhashSignatureHof(col("sh"), 4).as("slow"))
       .as[(Seq[Option[Long]], Seq[Option[Long]])].head()
     assert(empty._1 == Seq(None, None, None, None) && empty._1 == empty._2)
   }
@@ -189,13 +214,13 @@ class DedupSpec extends SparkSpec {
     val pairs = sh.as("a").crossJoin(sh.as("b"))
       .filter(col("a.doc_id") < col("b.doc_id")).limit(300)
       .select(Dedup.jaccard(col("a.sh"), col("b.sh")).as("fast"),
-        Dedup.jaccardHof(col("a.sh"), col("b.sh")).as("slow"))
+        HofOracles.jaccardHof(col("a.sh"), col("b.sh")).as("slow"))
       .as[(Double, Double)].collect()
     assert(pairs.nonEmpty && pairs.forall { case (f, h) => f == h })
     // duplicate elements: intersection is distinct-count, sizes raw
     val dup = Seq((Seq("x", "x", "y"), Seq("x", "z"))).toDF("a", "b")
       .select(Dedup.jaccard(col("a"), col("b")).as("fast"),
-        Dedup.jaccardHof(col("a"), col("b")).as("slow"))
+        HofOracles.jaccardHof(col("a"), col("b")).as("slow"))
       .as[(Double, Double)].head()
     assert(dup._1 == dup._2 && dup._1 == 1.0 / 4.0)
     // two EMPTY arrays: both renderings define J(∅,∅) = 0.0 — an
@@ -206,7 +231,7 @@ class DedupSpec extends SparkSpec {
     // so a future rendering change can't silently diverge.
     val empty = Seq((Seq.empty[String], Seq.empty[String])).toDF("a", "b")
       .select(Dedup.jaccard(col("a"), col("b")).as("fast"),
-        Dedup.jaccardHof(col("a"), col("b")).as("slow"))
+        HofOracles.jaccardHof(col("a"), col("b")).as("slow"))
       .collect().head
     assert(empty.getDouble(0) == 0.0 && empty.getDouble(1) == 0.0)
   }
@@ -221,7 +246,7 @@ class DedupSpec extends SparkSpec {
   test("shingle codegen expression is bit-identical to the HOF rendering") {
     for (n <- Seq(1, 3, 8)) {
       val diff = corpus.select(Dedup.shingles(col("text"), n).as("fast"),
-          Dedup.shinglesHof(col("text"), n).as("slow"))
+          HofOracles.shinglesHof(col("text"), n).as("slow"))
         .as[(Seq[String], Seq[String])].collect()
       assert(diff.nonEmpty && diff.forall { case (f, h) => f == h },
         s"n=$n diverged")
@@ -234,14 +259,14 @@ class DedupSpec extends SparkSpec {
         "héllo wörld héllo wörld héllo", "a\tb c")
       .toDF("text")
       .select(Dedup.shingles(col("text"), 3).as("fast"),
-        Dedup.shinglesHof(col("text"), 3).as("slow"))
+        HofOracles.shinglesHof(col("text"), 3).as("slow"))
       .as[(Seq[String], Seq[String])].collect()
     assert(edges.forall { case (f, h) => f == h })
     // hashed variant ≡ array_distinct(transform(shingles, xxhash64))
     val hashed = (corpus.limit(60) union Seq((9001L, ""), (9002L, "a  b"))
         .toDF("doc_id", "text"))
       .select(Dedup.shingleHashes(col("text"), 3).as("fast"),
-        array_distinct(transform(Dedup.shinglesHof(col("text"), 3),
+        array_distinct(transform(HofOracles.shinglesHof(col("text"), 3),
           s => xxhash64(s))).as("slow"))
       .as[(Seq[Long], Seq[Long])].collect()
     assert(hashed.nonEmpty && hashed.forall { case (f, h) => f == h })
@@ -250,7 +275,7 @@ class DedupSpec extends SparkSpec {
   test("positional shingles: in order, duplicates kept, HOF-identical") {
     for (n <- Seq(1, 3, 8)) {
       val diff = corpus.select(Dedup.shinglesAll(col("text"), n).as("fast"),
-          Dedup.shinglesAllHof(col("text"), n).as("slow"))
+          HofOracles.shinglesAllHof(col("text"), n).as("slow"))
         .as[(Seq[String], Seq[String])].collect()
       assert(diff.nonEmpty && diff.forall { case (f, h) => f == h },
         s"n=$n diverged")
@@ -259,7 +284,7 @@ class DedupSpec extends SparkSpec {
         "héllo wörld héllo wörld héllo", "a\tb c")
       .toDF("text")
       .select(Dedup.shinglesAll(col("text"), 3).as("fast"),
-        Dedup.shinglesAllHof(col("text"), 3).as("slow"))
+        HofOracles.shinglesAllHof(col("text"), 3).as("slow"))
       .as[(Seq[String], Seq[String])].collect()
     assert(edges.forall { case (f, h) => f == h })
     // multiplicity + order: index = window start position
@@ -271,7 +296,7 @@ class DedupSpec extends SparkSpec {
     val hashed = (corpus.limit(60) union Seq((9001L, ""), (9002L, "a  b"))
         .toDF("doc_id", "text"))
       .select(Dedup.shingleHashesAll(col("text"), 3).as("fast"),
-        transform(Dedup.shinglesAllHof(col("text"), 3),
+        transform(HofOracles.shinglesAllHof(col("text"), 3),
           s => xxhash64(s)).as("slow"))
       .as[(Seq[Long], Seq[Long])].collect()
     assert(hashed.nonEmpty && hashed.forall { case (f, h) => f == h })

@@ -308,13 +308,13 @@ class SimilaritySpec extends SparkSpec {
     val dv = col("embedding").cast("array<double>")
     val diff = vectors.select(
       Similarity.cosine(dv, lit(query)).as("fast"),
-      Similarity.cosineHof(dv, lit(query)).as("slow"))
+      HofOracles.cosineHof(dv, lit(query)).as("slow"))
       .as[(Double, Double)].collect()
     assert(diff.nonEmpty && diff.forall { case (f, h) => f == h })
     // length mismatch → null, like zip_with's null padding
     val bad = Seq(Seq(1.0, 2.0)).toDF("v")
       .select(Similarity.cosine(col("v"), lit(Array(1.0, 2.0, 3.0))).as("fast"),
-        Similarity.cosineHof(col("v"), lit(Array(1.0, 2.0, 3.0))).as("slow"))
+        HofOracles.cosineHof(col("v"), lit(Array(1.0, 2.0, 3.0))).as("slow"))
       .as[(Option[Double], Option[Double])].head()
     assert(bad._1.isEmpty && bad._2.isEmpty)
     // zero-norm vector → 0.0 in BOTH renderings: unguarded, the codegen
@@ -322,7 +322,7 @@ class SimilaritySpec extends SparkSpec {
     // orderings) and the HOF's ANSI Divide throws DIVIDE_BY_ZERO
     val zero = Seq(Seq(0.0, 0.0, 0.0)).toDF("v")
       .select(Similarity.cosine(col("v"), lit(Array(1.0, 2.0, 3.0))).as("fast"),
-        Similarity.cosineHof(col("v"), lit(Array(1.0, 2.0, 3.0))).as("slow"))
+        HofOracles.cosineHof(col("v"), lit(Array(1.0, 2.0, 3.0))).as("slow"))
       .as[(Double, Double)].head()
     assert(zero._1 == 0.0 && zero._2 == 0.0)
   }
@@ -332,13 +332,13 @@ class SimilaritySpec extends SparkSpec {
     val dv = col("embedding").cast("array<double>")
     val diff = vectors.select(
       Similarity.lshBucket(dv, planes).as("fast"),
-      Similarity.lshBucketHof(dv, planes).as("slow"))
+      HofOracles.lshBucketHof(dv, planes).as("slow"))
       .as[(Long, Long)].collect()
     assert(diff.nonEmpty && diff.forall { case (f, h) => f == h })
     // dimension mismatch → bucket 0 (every plane's dot is null → bit 0)
     val bad = Seq(Seq(1.0, 2.0)).toDF("v")
       .select(Similarity.lshBucket(col("v"), planes).as("fast"),
-        Similarity.lshBucketHof(col("v"), planes).as("slow"))
+        HofOracles.lshBucketHof(col("v"), planes).as("slow"))
       .as[(Long, Long)].head()
     assert(bad._1 == 0L && bad._2 == 0L)
   }

@@ -138,7 +138,7 @@ class TextAnalysisSpec extends SparkSpec {
     val df = Seq("", " ", "THE the The", "a  b\tthe\nof", "xthe thex the.",
       "für die straße", "the " * 30).toDF("text")
     val pairs = df.select(TextAnalysis.stopwordCount(col("text"), en).as("fast"),
-      TextAnalysis.stopwordCountHof(col("text"), en).as("slow"))
+      HofOracles.stopwordCountHof(col("text"), en).as("slow"))
       .as[(Int, Int)].collect()
     assert(pairs.forall { case (f, h) => f == h }, s"mismatch: ${pairs.mkString(",")}")
     assert(pairs(2) == ((3, 3))) // case-insensitivity really engaged
@@ -148,7 +148,7 @@ class TextAnalysisSpec extends SparkSpec {
     val df = Seq("", "a", "abc def", "über café", "emoji 🌀 tail",
       "long " * 40).toDF("text")
     val pairs = df.select(TextAnalysis.fingerprint(col("text")).as("fast"),
-      TextAnalysis.fingerprintHof(col("text")).as("slow"))
+      HofOracles.fingerprintHof(col("text")).as("slow"))
       .as[(Long, Long)].collect()
     assert(pairs.forall { case (f, h) => f == h },
       s"mismatch: ${pairs.mkString(",")}")

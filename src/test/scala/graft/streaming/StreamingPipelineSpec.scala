@@ -5,7 +5,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, udf}
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 import graft.SparkSpec
 import graft.model.Turn
@@ -421,40 +421,16 @@ class StreamingPipelineSpec extends SparkSpec {
       graft.run.Pipeline.parseEnrich(spark, mem.toDF()), graft.run.Pipeline.routeTable)
     val outDir = Files.createTempDirectory("graft_stream_out").toString
     val ckDir = Files.createTempDirectory("graft_stream_ck").toString
-    val qs = StreamingPipeline.startRoutedSinks(
+    val q = StreamingPipeline.startRoutedSinksMultiplexed(
       tagged, Seq("user_turns", "default"), outDir, ckDir)
     try {
       mem.addData(
         Turn("c1", 0, "user", "user=1 action=msg cents=5", "", ts(1)),
         Turn("c1", 1, "system", "INFO [comp-1] signup user=1", "", ts(2)))
-      qs.foreach(_.processAllAvailable())
+      q.processAllAvailable()
       val user = spark.read.parquet(s"$outDir/user_turns")
       val dflt = spark.read.parquet(s"$outDir/default")
       assert(user.count() == 1 && dflt.count() == 1)
-    } finally qs.foreach(_.stop())
-  }
-
-  test("single-scan routed sink: one query, per-batch partitioned table, route pruning") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Turn]
-    val tagged = graft.route.RouteStage.tagged(
-      graft.run.Pipeline.parseEnrich(spark, mem.toDF()), graft.run.Pipeline.routeTable)
-    val outDir = Files.createTempDirectory("graft_stream_single").toString
-    val ckDir = Files.createTempDirectory("graft_stream_single_ck").toString
-    val q = StreamingPipeline.startRoutedSinksSingleScan(tagged, outDir, ckDir)
-    try {
-      mem.addData(
-        Turn("c1", 0, "user", "user=1 action=msg cents=5", "", ts(1)),
-        Turn("c1", 1, "system", "INFO [comp-1] signup user=1", "", ts(2)))
-      q.processAllAvailable()
-      mem.addData(Turn("c2", 0, "user", "user=2 action=msg cents=9", "", ts(3)))
-      q.processAllAvailable()
-      val all = spark.read.parquet(outDir)
-      // both partition levels discovered; routes complete and disjoint
-      assert(all.columns.contains("route") && all.columns.contains("batch_id"))
-      assert(all.count() == 3)
-      assert(all.filter(col("route") === "user_turns").count() == 2)
-      assert(all.filter(col("route") === "default").count() == 1)
     } finally q.stop()
   }
 
@@ -493,7 +469,7 @@ class StreamingPipelineSpec extends SparkSpec {
       graft.run.Pipeline.parseEnrich(spark, mem2.toDF()), graft.run.Pipeline.routeTable)
     val outDir2 = Files.createTempDirectory("graft_stream_mux_ref").toString
     val ckDir2 = Files.createTempDirectory("graft_stream_mux_ref_ck").toString
-    val qs = StreamingPipeline.startRoutedSinks(tagged2, sinks, outDir2, ckDir2)
+    val qs = StreamingPipelineSpec.startRoutedSinks(tagged2, sinks, outDir2, ckDir2)
     try {
       mem2.addData(turns: _*)
       qs.foreach(_.processAllAvailable())
@@ -821,4 +797,19 @@ object StreamingPipelineSpec {
                          client_failed: Boolean, client_ts: java.sql.Timestamp)
   final case class SHalf(conv_id: String, corr_id: Long, server_service: String,
                          server_failed: Boolean, server_ts: java.sql.Timestamp)
+
+  /** Per-query reference for the multiplexed sink: one streaming query
+    * per sink, all fed from the same tagged stream, each with its own
+    * checkpoint (the upstream re-executes once per sink). */
+  def startRoutedSinks(tagged: org.apache.spark.sql.DataFrame, sinkNames: Seq[String],
+                       outDir: String, checkpointDir: String): Seq[StreamingQuery] =
+    sinkNames.map { name =>
+      tagged.filter(col("route") === name)
+        .writeStream
+        .format("parquet")
+        .option("path", s"$outDir/$name")
+        .option("checkpointLocation", s"$checkpointDir/$name")
+        .outputMode(OutputMode.Append)
+        .start()
+    }
 }
