@@ -22,8 +22,9 @@ import graft.streaming.StreamingPipeline
   *
   *   - `outDir/sinks/<route>/batch_id=N` — the per-route sink tables via
   *     [[StreamingPipeline.startRoutedSinksMultiplexed]]: ONE upstream
-  *     pass per micro-batch, k filtered writes, per-batch overwrite
-  *     idempotence (exactly-once on replay);
+  *     pass and one partitioned write per micro-batch, staged and renamed
+  *     into each route's `batch_id=N`, per-batch replace idempotence
+  *     (exactly-once on replay);
   *   - `outDir/counts` — the streaming count connector
   *     ([[StreamingPipeline.windowedCounts]]): per-(window, route, role)
   *     counts under a watermark, append-finalized — state is bounded by

@@ -2,7 +2,9 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -651,7 +653,7 @@ object StreamingPipeline {
         col("n_failed"))
 
   /** foreachBatch MULTIPLEXER: ONE streaming query, one upstream pass
-    * per micro-batch, k filtered writes to per-sink directories — the
+    * per micro-batch, one partitioned write per micro-batch — the
     * streaming rendering of the reference routing connector's
     * group-then-forward economy (it groups each incoming plog batch by
     * matched route once, then forwards the per-route groups to their
@@ -660,15 +662,18 @@ object StreamingPipeline {
     * independent per-sink queries would do: Structured Streaming shares
     * nothing between `.start()` calls).
     *
-    * Mechanics: the micro-batch is persisted and materialized ONCE (the
-    * source read + parse + enrich + tagging upstream runs a single
-    * time); each sink's write is a filter over the cached batch — a
-    * narrow cached-scan per sink, no upstream re-execution. Exactly-once
-    * on replay: each batch writes under its own `batch_id=<id>`
-    * subdirectory with overwrite, so a batch replayed after a failure
-    * REPLACES its own output instead of appending duplicates. Readers
-    * see one directory per sink — `spark.read.parquet(s"$outDir/<name>")`
-    * — with `batch_id` surfaced as a partition column.
+    * Mechanics ([[writeRoutedBatch]]): the micro-batch is written ONCE,
+    * partitioned by a copy of `route`, into a hidden staging directory
+    * (the source read + parse + enrich + tagging upstream runs a single
+    * time, in a single Spark job — no cache, no count, no per-route
+    * filter); each sink's staged route directory is then renamed into
+    * place as `<outDir>/<name>/batch_id=<id>`. Exactly-once on replay: a
+    * batch is committed to the checkpoint only after this body returns,
+    * so a batch replayed after a failure rewrites its staging from
+    * scratch and REPLACES each sink's `batch_id=<id>` instead of
+    * appending duplicates. Readers see one directory per sink —
+    * `spark.read.parquet(s"$outDir/<name>")` — with `batch_id` surfaced
+    * as a partition column and `route` kept in the data files.
     *
     * vs one query per sink: k× less ingest IO and parse CPU, at the
     * cost of per-sink checkpoint isolation (one checkpoint drives all
@@ -679,19 +684,48 @@ object StreamingPipeline {
     trigger.foldLeft(tagged.writeStream)(_.trigger(_))
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.persist()
-        try {
-          // materialize the cache eagerly: the first action runs the
-          // full upstream; every per-sink filter below then reads the
-          // cached rows only
-          batch.count()
-          sinkNames.foreach { name =>
-            batch.filter(col("route") === name)
-              .write.mode("overwrite")
-              .parquet(s"$outDir/$name/batch_id=$batchId")
-          }
-        } finally batch.unpersist()
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        writeRoutedBatch(batch, batchId, sinkNames, outDir)
       }
       .start()
+
+  /** Staging partition column: a copy of `route`, because a partitioned
+    * write drops its partition column from the data files and the sink
+    * files keep `route`. */
+  private[streaming] val StagedRoute = "staged_route"
+
+  /** One micro-batch of [[startRoutedSinksMultiplexed]]: one partitioned
+    * write into `<outDir>/_staging/batch_id=<id>` (the same idiom as the
+    * batch path's [[graft.route.RouteStage.writeMultiMatch]]), then per
+    * sink a delete of `<outDir>/<name>/batch_id=<id>` and a rename of the
+    * staged route directory into its place, then the staging is
+    * dropped. Rows of a route outside `sinkNames` go with the staging.
+    * Idempotent per `batchId`: a rerun after a kill at any point
+    * overwrites the stale staging and replaces every sink's target. */
+  private[streaming] def writeRoutedBatch(batch: DataFrame, batchId: Long,
+                                          sinkNames: Seq[String], outDir: String): Unit = {
+    val spark = batch.sparkSession
+    val staging = new Path(s"$outDir/_staging/batch_id=$batchId")
+    val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    batch.withColumn(StagedRoute, col("route"))
+      .write.mode("overwrite").partitionBy(StagedRoute).parquet(staging.toString)
+    sinkNames.foreach { name =>
+      val target = new Path(s"$outDir/$name/batch_id=$batchId")
+      // the writer's own partition-path escaping: `a:b` stages as `…=a%3Ab`
+      val staged = new Path(staging,
+        ExternalCatalogUtils.getPartitionPathString(StagedRoute, name))
+      fs.delete(target, true)
+      if (fs.exists(staged)) {
+        fs.mkdirs(target.getParent)
+        if (!fs.rename(staged, target))
+          throw new java.io.IOException(s"cannot move $staged to $target")
+      } else {
+        // no row for this sink in this batch: a schema-only file, as an
+        // empty filtered write leaves, keeps the sink readable
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), batch.schema)
+          .write.parquet(target.toString)
+      }
+    }
+    fs.delete(staging, true)
+  }
 }

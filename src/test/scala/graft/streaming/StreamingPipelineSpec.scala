@@ -1,11 +1,18 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 import graft.model.Turn
@@ -455,13 +462,44 @@ class StreamingPipelineSpec extends SparkSpec {
       .filter(bump(col("conv_id")))
     val outDir = Files.createTempDirectory("graft_stream_mux").toString
     val ckDir = Files.createTempDirectory("graft_stream_mux_ck").toString
+    // Spark jobs started by the micro-batch, and the executed plan of
+    // every action in it: one partitioned write is one job over the
+    // upstream, with no cached relation in between. The enrich table's
+    // broadcast is a job of its own (tagged `broadcast exchange`) that
+    // every rendering of the body runs once; it is not counted
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = e.properties
+        if (!String.valueOf(p.getProperty("spark.job.tags")).contains("broadcast exchange"))
+          jobs.add((String.valueOf(p.getProperty("sql.streaming.queryId")),
+            String.valueOf(p.getProperty("streaming.sql.batchId"))))
+      }
+    }
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val planListener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.sparkContext.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
     val q = StreamingPipeline.startRoutedSinksMultiplexed(tagged, sinks, outDir, ckDir)
     try {
       mem.addData(turns: _*)
       q.processAllAvailable()
-    } finally q.stop()
+    } finally {
+      q.stop()
+      Bridge.waitListenerBusEmpty(spark.sparkContext, 30000L)
+      spark.sparkContext.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(planListener)
+    }
     assert(acc.value === turns.size,
       s"upstream executed ${acc.value.toDouble / turns.size}x, expected once")
+    val batchJobs = jobs.asScala.count(_ == ((q.id.toString, "0")))
+    assert(batchJobs === 1, s"the sinks micro-batch ran $batchJobs Spark jobs")
+    assert(plans.asScala.nonEmpty && !plans.asScala.exists(_.contains("InMemoryRelation")),
+      s"the sinks micro-batch reads a cached relation: ${plans.asScala.mkString("\n")}")
 
     // per-query reference path on the same input
     val mem2 = MemoryStream[Turn]
@@ -487,6 +525,92 @@ class StreamingPipelineSpec extends SparkSpec {
         s"sink $name diverges from the per-query path")
       assert(got.count() > 0) // both routes exercised by the fixture
     }
+  }
+
+  // one turn per flagship route: tool_calls, errors, user_turns, default
+  private val routedTurns = Seq(
+    Turn("c1", 0, "user", "user=1 action=msg cents=5", "", ts(1)),
+    Turn("c1", 1, "system", "ERROR [comp-1] boom", "", ts(2)),
+    Turn("c1", 2, "assistant", """CALL tool=search args={"q":1} dur_ms=5""", "search", ts(3)),
+    Turn("c2", 0, "system", "INFO [comp-1] signup user=1", "", ts(4)))
+  private val flagshipSinks =
+    graft.run.Pipeline.routeTable.routes.map(_.name) :+ graft.run.Pipeline.routeTable.defaultName
+  private def flagshipTagged: DataFrame = graft.route.RouteStage.tagsExploded(
+    graft.run.Pipeline.parseEnrich(spark, routedTurns.toDS().toDF()), graft.run.Pipeline.routeTable)
+
+  private def sortedRows(df: DataFrame): Seq[String] = {
+    val cols = df.columns.sorted.map(col).toSeq
+    df.select(cols: _*).collect().map(_.toString).sorted.toSeq
+  }
+
+  /** Every routed row of `batch` sits in its sink exactly once, and the
+    * batch's staging directory is gone. */
+  private def assertRoutedOnce(batch: DataFrame, outDir: String, batchId: Long): Unit = {
+    flagshipSinks.foreach { name =>
+      val want = sortedRows(batch.filter(col("route") === name))
+      assert(want.nonEmpty, s"fixture routes no row to $name")
+      assert(sortedRows(spark.read.parquet(s"$outDir/$name").drop("batch_id")) === want,
+        s"sink $name")
+    }
+    assert(!Files.exists(Paths.get(s"$outDir/_staging/batch_id=$batchId")),
+      "staging directory left behind")
+  }
+
+  test("routed micro-batch replayed with the same batch id replaces its output") {
+    val outDir = Files.createTempDirectory("graft_stream_replay").toString
+    val batch = flagshipTagged
+    StreamingPipeline.writeRoutedBatch(batch, 7L, flagshipSinks, outDir)
+    StreamingPipeline.writeRoutedBatch(batch, 7L, flagshipSinks, outDir)
+    assertRoutedOnce(batch, outDir, 7L)
+  }
+
+  test("routed micro-batch replayed after a kill mid-commit: stale staging, one sink moved") {
+    val outDir = Files.createTempDirectory("graft_stream_kill").toString
+    val batch = flagshipTagged
+    // the killed attempt: the batch staged, then only the first sink's
+    // route directory renamed into place
+    val staging = Paths.get(s"$outDir/_staging/batch_id=7")
+    batch.withColumn(StreamingPipeline.StagedRoute, col("route"))
+      .write.partitionBy(StreamingPipeline.StagedRoute).parquet(staging.toString)
+    val first = Paths.get(s"$outDir/${flagshipSinks.head}/batch_id=7")
+    Files.createDirectories(first.getParent)
+    Files.move(staging.resolve(s"${StreamingPipeline.StagedRoute}=${flagshipSinks.head}"), first)
+    StreamingPipeline.writeRoutedBatch(batch, 7L, flagshipSinks, outDir)
+    assertRoutedOnce(batch, outDir, 7L)
+  }
+
+  /** `rows` through one micro-batch of the multiplexed sinks; returns
+    * the sinks' directory. */
+  private def routeOneBatch(sinks: Seq[String], rows: StreamingPipelineSpec.Routed*): String = {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[StreamingPipelineSpec.Routed]
+    val outDir = Files.createTempDirectory("graft_stream_layout").toString
+    val ckDir = Files.createTempDirectory("graft_stream_layout_ck").toString
+    val q = StreamingPipeline.startRoutedSinksMultiplexed(mem.toDF(), sinks, outDir, ckDir)
+    try {
+      mem.addData(rows: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    outDir
+  }
+
+  test("routed sink layout: a route name Spark escapes lands under its raw name") {
+    val outDir = routeOneBatch(Seq("a:b", "plain"),
+      StreamingPipelineSpec.Routed("x", "a:b"), StreamingPipelineSpec.Routed("y", "plain"))
+    // a partition path would escape it as `a%3Ab`; the sink keeps the name
+    assert(Files.isDirectory(Paths.get(s"$outDir/a:b/batch_id=0")))
+    val got = spark.read.parquet(s"$outDir/a:b")
+      .select("payload", "route").as[(String, String)].collect().toSeq
+    assert(got === Seq(("x", "a:b")))
+  }
+
+  test("routed sink layout: a sink with no rows in a batch stays readable, same schema") {
+    val outDir = routeOneBatch(Seq("full", "empty"), StreamingPipelineSpec.Routed("x", "full"))
+    val full = spark.read.parquet(s"$outDir/full")
+    val empty = spark.read.parquet(s"$outDir/empty")
+    assert(full.count() === 1L && empty.count() === 0L)
+    assert(empty.schema === full.schema)
+    assert(empty.columns.toSeq === Seq("payload", "route", "batch_id"))
   }
 
   private def tsm(min: Int): Timestamp = new Timestamp(ts(0).getTime + min * 60000L)
@@ -788,6 +912,9 @@ class StreamingPipelineSpec extends SparkSpec {
 }
 
 object StreamingPipelineSpec {
+  /** an already-tagged row (top-level: MemoryStream needs a stable encoder) */
+  final case class Routed(payload: String, route: String)
+
   /** sessionize input row (top-level: MemoryStream needs a stable encoder). */
   final case class Ev(user_id: Long, ts: java.sql.Timestamp, event_type: String)
 
