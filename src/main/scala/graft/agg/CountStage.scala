@@ -32,34 +32,33 @@ object CountStage {
   /** Count metric over a static frame (no window). `resolve` maps an
     * attribute key to its column (top-level column, map entry, …). */
   def count(df: DataFrame, spec: MetricSpec,
-            resolve: String => Column = col): DataFrame = {
-    val conditioned = spec.conditions.reduceOption(_ || _) match {
-      case Some(c) => df.filter(coalesce(c, lit(false)))
-      case None    => df
-    }
-    // required attrs (no default): skip rows where missing
-    val required = spec.attrs.filter(_.default.isEmpty)
-    val skipped = required.foldLeft(conditioned)((d, a) => d.filter(resolve(a.key).isNotNull))
-    val keys = spec.attrs.map(a => attrCol(a, resolve))
-    if (keys.isEmpty) skipped.agg(sqlCount(lit(1)).as(spec.name))
-    else skipped.groupBy(keys: _*).agg(sqlCount(lit(1)).as(spec.name))
-  }
+            resolve: String => Column = col): DataFrame =
+    counted(df, spec, resolve, None)
 
   /** Windowed (tumbling, event-time) variant — the batch rendering of the
     * connector's delta temporality; in streaming the same expression runs
-    * under a watermark. Emits `window_start` instead of the struct. */
+    * under a watermark ([[graft.streaming.StreamingPipeline.windowedCounts]]).
+    * Emits `window_start` instead of the struct. */
   def countWindowed(df: DataFrame, spec: MetricSpec, tsCol: Column,
                     windowDuration: String,
-                    resolve: String => Column = col): DataFrame = {
+                    resolve: String => Column = col): DataFrame =
+    counted(df, spec, resolve, Some(window(tsCol, windowDuration)))
+      .withColumn("window_start", col("window.start"))
+      .drop("window")
+
+  /** The one condition-and-skip body: OR-ed conditions, rows missing a
+    * required attr (no default) skipped, grouped by the optional window
+    * then the attrs. */
+  private def counted(df: DataFrame, spec: MetricSpec,
+                      resolve: String => Column, win: Option[Column]): DataFrame = {
     val conditioned = spec.conditions.reduceOption(_ || _) match {
       case Some(c) => df.filter(coalesce(c, lit(false)))
       case None    => df
     }
     val required = spec.attrs.filter(_.default.isEmpty)
     val skipped = required.foldLeft(conditioned)((d, a) => d.filter(resolve(a.key).isNotNull))
-    val keys = window(tsCol, windowDuration) +: spec.attrs.map(a => attrCol(a, resolve))
-    skipped.groupBy(keys: _*).agg(sqlCount(lit(1)).as(spec.name))
-      .withColumn("window_start", col("window.start"))
-      .drop("window")
+    val keys = win.toSeq ++ spec.attrs.map(a => attrCol(a, resolve))
+    if (keys.isEmpty) skipped.agg(sqlCount(lit(1)).as(spec.name))
+    else skipped.groupBy(keys: _*).agg(sqlCount(lit(1)).as(spec.name))
   }
 }

@@ -305,8 +305,8 @@ object ConfigLoader {
       * PipelineJob single-scan plan): a count per fanOut frame would
       * re-scan the source and re-evaluate the pattern bank once per sink
       * (2k scans for k sinks when a caller materializes everything). The
-      * sink frames stay the lazy fanOut filters — a caller that writes
-      * them pays one scan each, or uses [[graft.run.PipelineJob]]'s
+      * sink frames are lazy route filters of that pass — a caller that
+      * writes them pays one scan each, or uses [[graft.run.PipelineJob]]'s
       * partitionBy fan-out for the one-scan write. */
     def run(spark: SparkSession, transcripts: DataFrame, windowDur: String = window)
         : (Map[String, DataFrame], Map[String, DataFrame]) = {

@@ -17,13 +17,11 @@ import graft.model.PipelineConfig.RouteTable
   *   - `error_mode=ignore` → a predicate that errors counts as no-match
   *     (we compile predicates null-safe, so nulls fall to default).
   *
-  * Physical strategy at 100 TB:
-  *   - `matchOnce`: ONE pass — tag each row with a `route` column via a
-  *     short-circuiting CASE chain, then a single write with
-  *     `partitionBy("route")`. No per-sink rescan.
-  *   - multi-match: one filtered write per sink from a cached upstream —
-  *     each sink's predicate is pushed into its own scan; with the
-  *     upstream persisted, the source is read once.
+  * Physical strategy at 100 TB: ONE pass either way, then a single
+  * write with `partitionBy("route")` — no per-sink rescan, no cache.
+  * [[routed]] picks the tag: `matchOnce` tags each row once via a
+  * short-circuiting CASE chain ([[tagged]]); multi-match explodes the
+  * array of matched routes ([[tagsExploded]]).
   */
 object RouteStage {
 
@@ -55,14 +53,6 @@ object RouteStage {
     sinks + (table.defaultName -> df.filter(noMatch))
   }
 
-  /** Single-pass partitioned write for the match_once plan: the
-    * `df.write.partitionBy("route")` path — one scan, one shuffle-free
-    * write, route directories as sink tables. */
-  def writeMatchOnce(df: DataFrame, table: RouteTable, outDir: String,
-                     format: String = "parquet"): Unit =
-    tagged(df, table).write.format(format).mode("overwrite")
-      .partitionBy("route").save(outDir)
-
   /** Array of ALL matching route names per row (empty → default) — the
     * multi-match verdict as data. */
   def routesArray(table: RouteTable): Column = {
@@ -83,27 +73,29 @@ object RouteStage {
   def tagsExploded(df: DataFrame, table: RouteTable): DataFrame =
     df.withColumn("route", explode(routesArray(table)))
 
-  def writeMultiMatch(df: DataFrame, table: RouteTable, outDir: String,
-                      format: String = "parquet"): Unit =
-    tagsExploded(df, table).write.format(format).mode("overwrite")
-      .partitionBy("route").save(outDir)
+  def writeMultiMatch(df: DataFrame, table: RouteTable, outDir: String): Unit =
+    tagsExploded(df, table).write.mode("overwrite")
+      .partitionBy("route").parquet(outDir)
 
-  /** Per-sink frames + the single-scan tagged stream, honoring the
-    * table's match semantics in ONE place (match_once → first-match
-    * single tag, `routingconnector/logs.go:87`; default → multi-match
-    * explosion). Both materialized run paths (Pipeline.run and the
-    * config surface's Compiled.run) route through here: they previously
-    * each hard-coded the multi-match pair, so a `match_once: true`
-    * config silently got fan-out duplicates in every matching sink and
-    * doubled every per-route count. Counts derived from the returned
-    * stream agree with the sinks by construction. */
+  /** The table's match semantics, decided in ONE place for every run
+    * path (PipelineJob's fan-out, StreamingJob's sinks and counts,
+    * [[sinksAndStream]]): match_once → first-match single tag
+    * (`routingconnector/logs.go:87`), default → multi-match explosion.
+    * A match_once config silently getting fan-out duplicates would
+    * inflate every per-route count. */
+  def routed(df: DataFrame, table: RouteTable): DataFrame =
+    if (table.matchOnce) tagged(df, table) else tagsExploded(df, table)
+
+  /** Per-sink frames + the single-scan [[routed]] stream they are cut
+    * from, so counts derived from the stream agree with the sinks by
+    * construction. Both materialized run paths (Pipeline.run and the
+    * config surface's Compiled.run) route through here. */
   def sinksAndStream(df: DataFrame, table: RouteTable)
-      : (Map[String, DataFrame], DataFrame) =
-    if (table.matchOnce) {
-      val t = tagged(df, table)
-      val names = table.routes.map(_.name) :+ table.defaultName
-      (names.map(n => n -> t.filter(col("route") === n).drop("route")).toMap, t)
-    } else (fanOut(df, table), tagsExploded(df, table))
+      : (Map[String, DataFrame], DataFrame) = {
+    val stream = routed(df, table)
+    val names = table.routes.map(_.name) :+ table.defaultName
+    (names.map(n => n -> stream.filter(col("route") === n).drop("route")).toMap, stream)
+  }
 
   /** Route-to-multiple-pipelines fan-out (`connector/routingconnector/
     * config.go:70-82` Pipelines lists; delivery grouped per consumer so a

@@ -6,6 +6,7 @@ import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{FileContext, Options, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 
 /** Resumable batch execution with per-sink lineage manifests — the batch
   * analog of the reference's file-consumer checkpoints
@@ -39,15 +40,19 @@ object Lineage {
   // silently never fire off-box. The local default FS keeps tests
   // byte-identical.
   // default when no session is threaded through; callers that HOLD a
-  // session (runResumable) pass its conf explicitly — the active-session
+  // session (commitSink) pass its conf explicitly — the active-session
   // fallback resolves the wrong filesystem when the passed session is
   // not the thread's active one (missing fs.s3a.* etc. settings)
   private def hadoopConf: org.apache.hadoop.conf.Configuration =
     scala.util.Try(SparkSession.active.sparkContext.hadoopConfiguration)
       .getOrElse(new org.apache.hadoop.conf.Configuration())
 
+  // the sink name escaped like a partition value: Hadoop parses a
+  // child name such as `counts_a:b.json` (the counts sink of a route
+  // `a:b`) as scheme `counts_a` and fails the commit
   private def manifestPath(outDir: String, sink: String): HPath =
-    new HPath(new HPath(outDir, "_lineage"), s"$sink.json")
+    new HPath(new HPath(outDir, "_lineage"),
+      s"${ExternalCatalogUtils.escapePathName(sink)}.json")
 
   /** Atomic small-file write through the output FS: temp +
     * single overwriting rename (same pattern as Incremental's ingest
@@ -108,7 +113,7 @@ object Lineage {
   /** Atomic manifest commit: write temp, fsync-rename into place
     * (the reference persister's save step, checkpoint.go:40-63). */
   private[run] def commitManifest(outDir: String, m: Manifest,
-      conf: org.apache.hadoop.conf.Configuration = hadoopConf): Unit =
+      conf: org.apache.hadoop.conf.Configuration): Unit =
     writeAtomic(manifestPath(outDir, m.sink), renderJson(m), conf)
 
   def isCommitted(outDir: String, sink: String, fingerprint: String,
@@ -124,6 +129,33 @@ object Lineage {
     }
   }
 
+  /** The one commit step of every sink: None when `sink` is already
+    * committed under `fingerprint`; else `write(dir)`, then the manifest
+    * of what landed in `dir` (recursively: a partitioned sink records
+    * `route=X/part-N` paths). Manifests go through the run's own Hadoop
+    * conf, not the active session's. */
+  private[run] def commitSink(spark: SparkSession, outDir: String, sink: String,
+      dir: String, fingerprint: String)(write: String => Unit): Option[Manifest] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    if (isCommitted(outDir, sink, fingerprint, conf)) None
+    else {
+      // INVALIDATE any stale manifest (a different fingerprint's)
+      // BEFORE the destructive overwrite: a kill between the
+      // overwrite and commitManifest would otherwise leave the old
+      // manifest standing over destroyed data — and a config
+      // rollback to that old fingerprint would then skip the sink
+      // and ship the partial mixed output as committed
+      val mp = manifestPath(outDir, sink)
+      val mfs = mp.getFileSystem(conf)
+      if (mfs.exists(mp)) mfs.delete(mp, false)
+      write(dir)
+      val lineage = fileLineage(spark, dir)
+      val m = Manifest(sink, fingerprint, lineage.map(_.rows).sum, lineage)
+      commitManifest(outDir, m, conf)
+      Some(m)
+    }
+  }
+
   /** Execute every sink not yet committed under `fingerprint`; skip the
     * rest. A sink failure is recorded and does NOT abort later sinks
     * (each sink is independent, matching connector fan-out isolation).
@@ -134,31 +166,16 @@ object Lineage {
     val skipped = scala.collection.mutable.ArrayBuffer[String]()
     val failed = scala.collection.mutable.LinkedHashMap[String, String]()
     val manifests = scala.collection.mutable.LinkedHashMap[String, Manifest]()
-    val conf = spark.sparkContext.hadoopConfiguration
     sinks.toSeq.sortBy(_._1).foreach { case (sink, df) =>
       // the committed check sits INSIDE the per-sink try: a transient
       // manifest-read error on one sink must not abort the remaining
       // sinks (the documented isolation contract); an unreadable
       // manifest degrades to "not committed" → idempotent re-execute
       try {
-        if (isCommitted(outDir, sink, fingerprint, conf)) skipped += sink
-        else {
-          val sinkDir = s"$outDir/$sink"
-          // INVALIDATE any stale manifest (a different fingerprint's)
-          // BEFORE the destructive overwrite: a kill between the
-          // overwrite and commitManifest would otherwise leave the old
-          // manifest standing over destroyed data — and a config
-          // rollback to that old fingerprint would then skip the sink
-          // and ship the partial mixed output as committed
-          val mp = manifestPath(outDir, sink)
-          val mfs = mp.getFileSystem(conf)
-          if (mfs.exists(mp)) mfs.delete(mp, false)
-          df.write.mode("overwrite").parquet(sinkDir)
-          val lineage = fileLineage(spark, sinkDir)
-          val m = Manifest(sink, fingerprint, lineage.map(_.rows).sum, lineage)
-          commitManifest(outDir, m, conf)
-          manifests += sink -> m
-          executed += sink
+        commitSink(spark, outDir, sink, s"$outDir/$sink", fingerprint)(
+          df.write.mode("overwrite").parquet(_)) match {
+          case Some(m) => manifests += sink -> m; executed += sink
+          case None    => skipped += sink
         }
       } catch {
         case NonFatal(e) => failed += sink -> String.valueOf(e.getMessage)

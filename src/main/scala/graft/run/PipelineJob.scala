@@ -21,8 +21,9 @@ import graft.sources.Transcripts
   * windowed counts, plus one `metric_<name>` table per metric of a
   * config file. Without a config file the flagship
   * (`src/main/resources/graft/flagship.yaml`) runs, without its
-  * `metric_*` tables. Every sink and every counts table commits through
-  * [[Lineage.runResumable]]: a killed run resumes without recomputing
+  * `metric_*` tables. The fan-out and every counts table commit through
+  * one step, [[Lineage.commitSink]] (the counts via
+  * [[Lineage.runResumable]]): a killed run resumes without recomputing
   * committed sinks (per-partition lineage in the manifests).
   *
   * On a real cluster: identical code at N and 4N executors; the
@@ -94,39 +95,16 @@ object PipelineJob {
     val fpCounts = Lineage.fingerprintOf("pipeline-v1", inPath, windowDur,
       configText)
 
-    // Stage 1+2+3: parse → enrich → single-pass routed fan-out.
-    // The fan-out itself is one idempotent partitioned write; its commit
-    // is the stage marker.
+    // Stage 1+2+3: parse → enrich → single-pass routed fan-out: one
+    // idempotent partitioned write, committed like every other sink (its
+    // manifest lists `route=X/part-N` files under the writer's escaped
+    // directory names). A failure here aborts the run before the counts.
     val sinksDir = s"$outDir/sinks"
-    val fanoutCommitted = Lineage.isCommitted(outDir, "sinks_fanout", fpFanout)
-    if (!fanoutCommitted) {
-      val enriched = cfg.parseEnrich(spark, table.read(spark, inPath))
-      // honor the table's match semantics: match_once = first-match-wins
-      // single-tag write (routingconnector logs.go:87), default =
-      // multi-match fan-out — a match_once config silently getting
-      // fan-out duplicates would inflate every per-route count
-      if (routeTable.matchOnce)
-        RouteStage.writeMatchOnce(enriched, routeTable, sinksDir)
-      else
-        RouteStage.writeMultiMatch(enriched, routeTable, sinksDir)
-      // per-route per-file lineage from the ACTUAL committed partition
-      // dirs (listed, not reconstructed from route names: Spark
-      // URI-escapes special characters in partition paths — a route
-      // named "a:b" writes to "route=a%3Ab", and a name-keyed lookup
-      // would silently record zero rows for it)
-      val sd = new org.apache.hadoop.fs.Path(sinksDir)
-      val sfs = sd.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val routePartDirs =
-        if (sfs.exists(sd))
-          sfs.listStatus(sd).filter(s => s.isDirectory &&
-            s.getPath.getName.startsWith("route=")).map(_.getPath).toSeq
-        else Seq.empty
-      val lineage = routePartDirs.flatMap(p =>
-        Lineage.fileLineage(spark, p.toString)
-          .map(f => f.copy(file = s"${p.getName}/${f.file}")))
-      Lineage.commitManifest(outDir, Lineage.Manifest("sinks_fanout", fpFanout,
-        lineage.map(_.rows).sum, lineage))
-    }
+    val fanoutCommitted = Lineage.commitSink(spark, outDir, "sinks_fanout",
+        sinksDir, fpFanout) { dir =>
+      RouteStage.routed(cfg.parseEnrich(spark, table.read(spark, inPath)), routeTable)
+        .write.mode("overwrite").partitionBy("route").parquet(dir)
+    }.isEmpty
 
     // Stage 4: per-sink windowed counts, each its own resumable sink —
     // PLUS, when a config file defines a metrics section, one resumable
@@ -137,7 +115,7 @@ object PipelineJob {
     // a ZERO-row input commits a fan-out with no part files; reading the
     // bare dir would then fail schema inference — and since the stage IS
     // committed, every resume would crash the same way. Fall back to an
-    // empty frame with the fan-out's schema (tagged ≡ exploded schema).
+    // empty frame with the fan-out's schema.
     val sinksHavePartFiles = {
       val dir = new org.apache.hadoop.fs.Path(sinksDir)
       val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -146,7 +124,7 @@ object PipelineJob {
     }
     val written =
       if (sinksHavePartFiles) spark.read.parquet(sinksDir)
-      else RouteStage.tagged(
+      else RouteStage.routed(
         cfg.parseEnrich(spark, table.read(spark, inPath)).limit(0), routeTable)
     val routeCounts = routeTable.routes.map(_.name)
       .:+(routeTable.defaultName).map { route =>

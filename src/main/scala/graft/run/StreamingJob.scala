@@ -17,8 +17,8 @@ import graft.streaming.StreamingPipeline
   * Same config surface as [[PipelineJob]] (a YAML file via
   * [[graft.config.ConfigLoader]], or the flagship
   * `src/main/resources/graft/flagship.yaml` when none is given), same
-  * route-table match semantics (match_once → first-match single tag,
-  * default → multi-match fan-out), driving:
+  * route-table match semantics ([[RouteStage.routed]]: match_once →
+  * first-match single tag, default → multi-match fan-out), driving:
   *
   *   - `outDir/sinks/<route>/batch_id=N` — the per-route sink tables via
   *     [[StreamingPipeline.startRoutedSinksMultiplexed]]: ONE upstream
@@ -28,7 +28,8 @@ import graft.streaming.StreamingPipeline
   *   - `outDir/counts` — the streaming count connector
   *     ([[StreamingPipeline.windowedCounts]]): per-(window, route, role)
   *     counts under a watermark, append-finalized — state is bounded by
-  *     `lateness`, not the stream;
+  *     `lateness`, not the stream. A row without a `role` is skipped, as
+  *     in PipelineJob's `counts_<route>` tables;
   *   - `outDir/metric_<name>` — each metric a config file declares
   *     (conditions + attrs, the count-connector surface), computed over
   *     the PRE-fan-out enriched frame exactly like [[PipelineJob]]
@@ -103,12 +104,7 @@ object StreamingJob {
     val cfg = fileCfg.getOrElse(Pipeline.flagship)
     val routeTable = cfg.routeTable
     val enriched = cfg.parseEnrich(spark, stream)
-    // honor the table's match semantics exactly like PipelineJob: a
-    // match_once config silently getting fan-out duplicates would
-    // inflate every per-route count
-    val tagged =
-      if (routeTable.matchOnce) RouteStage.tagged(enriched, routeTable)
-      else RouteStage.tagsExploded(enriched, routeTable)
+    val tagged = RouteStage.routed(enriched, routeTable)
     val trig = if (once) Some(Trigger.AvailableNow()) else None
 
     val sinkNames = routeTable.routes.map(_.name) :+ routeTable.defaultName

@@ -8,6 +8,8 @@ import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.agg.CountStage
+import graft.model.PipelineConfig.{AttrSpec, MetricSpec}
 import graft.model.Turn
 
 /** Structured-Streaming rendering of the pipeline (SURVEY.md §2.9).
@@ -22,18 +24,17 @@ import graft.model.Turn
   */
 object StreamingPipeline {
 
-  /** Windowed count with watermark — the streaming count connector.
-    * State is evicted `lateness` behind the max event time (the analog
-    * of the reference's metrics_expiration). */
+  /** Windowed count with watermark — the streaming count connector,
+    * [[CountStage.countWindowed]] under a watermark: every attr is
+    * required, so a row missing one is skipped like in the batch
+    * `counts_<route>` tables (`counter.go:71-73`). State is evicted
+    * `lateness` behind the max event time (the analog of the
+    * reference's metrics_expiration). */
   def windowedCounts(turns: DataFrame, windowDur: String, lateness: String,
-                     attrs: Seq[String]): DataFrame = {
-    val keys = window(col("ts"), windowDur) +: attrs.map(col)
-    turns.withWatermark("ts", lateness)
-      .groupBy(keys: _*)
-      .agg(count(lit(1)).as("n"))
-      .select((col("window.start").as("window_start") +: col("n").as("n")
-        +: attrs.map(col)): _*)
-  }
+                     attrs: Seq[String]): DataFrame =
+    CountStage.countWindowed(turns.withWatermark("ts", lateness),
+        MetricSpec("n", attrs = attrs.map(AttrSpec(_))), col("ts"), windowDur)
+      .select((col("window_start") +: col("n") +: attrs.map(col)): _*)
 
   /** Streaming spanmetrics — the RED-metrics connector rendered over
     * event-time windows (`connector/spanmetricsconnector/connector.go:

@@ -94,6 +94,77 @@ class PipelineJobSpec extends SparkSpec {
     assert(assistants > 0 && routeRows(out)("user_turns") == assistants)
   }
 
+  /** Rows per route of the flagship fan-out, from the hand-built oracle. */
+  private lazy val handRouteRows: Map[String, Long] =
+    RouteStage.tagsExploded(
+        FlagshipByHand.parseEnrich(spark, spark.read.parquet(inDir)),
+        FlagshipByHand.routeTableByHand)
+      .groupBy("route").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  /** (file, rows) entries of a committed manifest. */
+  private def manifestFiles(outDir: String, sink: String): Seq[(String, Long)] = {
+    val json = Files.readString(Path.of(outDir, "_lineage", s"$sink.json"))
+    """"file":"([^"]*)","rows":(\d+)""".r.findAllMatchIn(json)
+      .map(m => m.group(1) -> m.group(2).toLong).toSeq
+  }
+
+  test("a rollback after a fan-out that failed mid-overwrite re-runs the fan-out") {
+    val out = Files.createTempDirectory("graft_pj_rollback").toString
+    assert(PipelineJob.run(spark, inDir, out, Nil).executed.contains("sinks_fanout"))
+
+    // config B: a `where` edit whose regex only fails when a task runs,
+    // i.e. inside the fan-out write, after the overwrite cleared config
+    // A's output
+    val broken = flagshipFile(_.replace("""where: 'role == "user"'""",
+      """where: 'IsMatch(body, "(")'"""))
+    intercept[Exception](PipelineJob.run(spark, inDir, out, Seq(broken)))
+    val sinks = new java.io.File(s"$out/sinks")
+    assert(!sinks.exists() || sinks.listFiles().forall(!_.getName.startsWith("route=")),
+      "config B's failed write should have destroyed config A's fan-out")
+
+    // back to config A: its fan-out manifest must not survive B's
+    // overwrite, so the fan-out re-executes instead of shipping the
+    // destroyed sinks as committed
+    val back = PipelineJob.run(spark, inDir, out, Nil)
+    assert(back.failed.isEmpty, s"$back")
+    assert(back.executed.contains("sinks_fanout"), s"$back")
+    assert(routeRows(out) == handRouteRows)
+  }
+
+  test("a route named a:b: fan-out manifest lists its escaped route=a%3Ab files; its counts sink commits") {
+    val out = Files.createTempDirectory("graft_pj_escaped").toString
+    val cfg = flagshipFile(_.replace("- name: user_turns", "- name: 'a:b'")
+      .replaceAll("(?s)metrics:.*window:", "window:"))
+    val r = PipelineJob.run(spark, inDir, out, Seq(cfg))
+    assert(r.failed.isEmpty, s"$r")
+    assert(r.executed.toSet ==
+      countSinks - "counts_user_turns" + "counts_a:b" + "sinks_fanout")
+
+    val files = manifestFiles(out, "sinks_fanout")
+    val got = routeRows(out)
+    val escaped = files.filter(_._1.startsWith("route=a%3Ab/"))
+    assert(escaped.nonEmpty, s"no route=a%3Ab/ files in ${files.map(_._1)}")
+    assert(escaped.map(_._2).sum == got("a:b"))
+    assert(got("a:b") == handRouteRows("user_turns"))
+    assert(files.map(_._2).sum == got.values.sum)
+  }
+
+  test("a zero-row input commits empty counts and its re-run skips every sink") {
+    val in = Files.createTempDirectory("graft_pj_empty_in").toString
+    spark.read.parquet(inDir).limit(0).write.mode("overwrite").parquet(in)
+    val out = Files.createTempDirectory("graft_pj_empty").toString
+    val r = PipelineJob.run(spark, in, out, Nil)
+    assert(r.failed.isEmpty, s"$r")
+    assert(r.executed.toSet == countSinks + "sinks_fanout")
+    assert(manifestFiles(out, "sinks_fanout").isEmpty)
+    countSinks.foreach(c => assert(spark.read.parquet(s"$out/$c").count() == 0, c))
+
+    val again = PipelineJob.run(spark, in, out, Nil)
+    assert(again.executed.isEmpty && again.failed.isEmpty, s"$again")
+    assert(again.skipped.toSet == countSinks + "sinks_fanout")
+  }
+
   test("extra args: at most one config file and one window, else the usage line") {
     val cfg = flagshipFile()
     val (model, compiled, window) = PipelineJob.parseExtraArgs(Seq("30 minutes", cfg))

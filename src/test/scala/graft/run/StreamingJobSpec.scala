@@ -61,6 +61,37 @@ class StreamingJobSpec extends SparkSpec {
       s"post-empty-start drain must fan out like batch: got $gotRows want $wantRows")
   }
 
+  test("a null role is skipped alike by the batch counts_<route> and the streaming counts") {
+    val inDir = Files.createTempDirectory("graft_sj_null_in").toString
+    val noRole = Turn("c4", 0, null, "user=4 action=msg cents=1", "", ts(0, 40))
+    (part1 ++ part2 :+ noRole).toDS().toDF().write.mode("append").parquet(inDir)
+    val sinkNames =
+      Pipeline.routeTable.routes.map(_.name) :+ Pipeline.routeTable.defaultName
+
+    val batchOut = Files.createTempDirectory("graft_sj_null_batch").toString
+    val r = PipelineJob.run(spark, inDir, batchOut, Nil)
+    assert(r.failed.isEmpty, s"$r")
+    val batch = sinkNames.flatMap { n =>
+      spark.read.parquet(s"$batchOut/counts_$n")
+        .select("window_start", "role", "count").as[(Timestamp, String, Long)]
+        .collect().map { case (w, role, c) => (w, n, role, c) }
+    }.toSet
+
+    // one drain: the no-data batch after it finalizes the hour-0 windows
+    val streamOut = Files.createTempDirectory("graft_sj_null_stream").toString
+    val hs = StreamingJob.start(spark, inDir, streamOut, fileCfg = None,
+      windowDur = "1 hour", lateness = "10 minutes", once = true)
+    try hs.all.foreach(_.awaitTermination())
+    finally hs.all.foreach(_.stop())
+    val streamed = spark.read.parquet(s"$streamOut/counts")
+      .select("window_start", "route", "role", "n")
+      .as[(Timestamp, String, String, Long)].collect().toSet
+
+    val hour0 = batch.filter(_._1.before(ts(2)))
+    assert(hour0.nonEmpty && !batch.exists(_._3 == null), s"$batch")
+    assert(streamed === hour0)
+  }
+
   test("--once runs are incremental; sinks ≡ batch fan-out; windows finalize across runs") {
     val inDir = Files.createTempDirectory("graft_sj_in").toString
     val outDir = Files.createTempDirectory("graft_sj_out").toString
