@@ -1,12 +1,18 @@
 package graft.run
 
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.TimeUnit
 
-import scala.util.control.NonFatal
+import scala.util.{Failure, Success, Try}
 
-import org.apache.hadoop.fs.{FileContext, Options, Path => HPath}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileContext, FileStatus, Options, Path => HPath}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Resumable batch execution with per-sink lineage manifests — the batch
   * analog of the reference's file-consumer checkpoints
@@ -20,9 +26,14 @@ import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
   * manifest — no recomputation of completed sinks, no duplicate rows.
   *
   * The manifest carries per-output-file row counts (per-partition
-  * lineage) read from the parquet footers of the committed write plus
-  * the job-level metrics, so a resumed run can verify integrity without
-  * rescanning data.
+  * lineage) read from the parquet footers of the committed write, so a
+  * resumed run can verify integrity without rescanning data. Every
+  * manifest, footer and small-file access goes through the run
+  * session's Hadoop conf.
+  *
+  * The sinks of one [[runResumable]] call commit concurrently, like the
+  * reference's exporters, each of which drains its own queue; a failed
+  * sink is recorded and the others still commit.
   */
 object Lineage {
 
@@ -39,13 +50,14 @@ object Lineage {
   // other driver, and resume — the module's whole contract — would
   // silently never fire off-box. The local default FS keeps tests
   // byte-identical.
-  // default when no session is threaded through; callers that HOLD a
-  // session (commitSink) pass its conf explicitly — the active-session
-  // fallback resolves the wrong filesystem when the passed session is
-  // not the thread's active one (missing fs.s3a.* etc. settings)
-  private def hadoopConf: org.apache.hadoop.conf.Configuration =
-    scala.util.Try(SparkSession.active.sparkContext.hadoopConfiguration)
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
+  // isCommitted's default when no session is threaded through; callers
+  // that HOLD a session (commitSink) pass its conf explicitly — the
+  // active-session fallback resolves the wrong filesystem when the
+  // passed session is not the thread's active one (missing fs.s3a.*
+  // etc. settings)
+  private def hadoopConf: Configuration =
+    Try(SparkSession.active.sparkContext.hadoopConfiguration)
+      .getOrElse(new Configuration())
 
   // the sink name escaped like a partition value: Hadoop parses a
   // child name such as `counts_a:b.json` (the counts sink of a route
@@ -58,7 +70,7 @@ object Lineage {
     * single overwriting rename (same pattern as Incremental's ingest
     * manifest; Hadoop local FS makes this an atomic move in tests). */
   private[graft] def writeAtomic(path: HPath, content: String,
-      conf: org.apache.hadoop.conf.Configuration = hadoopConf): Unit = {
+      conf: Configuration): Unit = {
     val fs = path.getFileSystem(conf)
     fs.mkdirs(path.getParent)
     val tmp = new HPath(path.getParent, path.getName + ".tmp")
@@ -84,40 +96,49 @@ object Lineage {
     "\"fingerprint\":\"([^\"]*)\"".r.findFirstMatchIn(json).map(_.group(1))
 
   /** Per-file row counts from the parquet footers of a committed sink —
-    * metadata-only read (no data scan). Hadoop FS API, RECURSIVE: a
-    * local-only `java.nio.Files.list` would silently find zero files on
-    * HDFS/S3 and miss nested partitioned layouts (route=X/part-N). */
+    * metadata-only read (no data scan), sorted by sink-relative path.
+    *
+    * The listing is a plain recursive `listStatus` through the Hadoop FS
+    * API: a local-only `java.nio.Files.list` would silently find zero
+    * files on HDFS/S3 and miss nested partitioned layouts
+    * (`route=X/part-N`), and `listFiles(dir, true)` fetches block
+    * locations no footer read needs. Each footer is opened once, with
+    * read options built from the run's Hadoop conf
+    * (`HadoopReadOptions.builder(conf, path)`): `ParquetFileReader.open`
+    * without options builds a fresh default configuration per file,
+    * which costs several ms a footer and ignores the session's parquet
+    * settings (a decryption factory, for one). A footer that does not
+    * parse fails the call with the reader's message. */
   def fileLineage(spark: SparkSession, sinkDir: String): Seq[FileLineage] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new org.apache.hadoop.fs.Path(sinkDir)
+    val dir = new HPath(sinkDir)
     val fs = dir.getFileSystem(conf)
     if (!fs.exists(dir)) return Nil
-    val files = fs.listFiles(dir, true)
-    val out = scala.collection.mutable.ArrayBuffer[FileLineage]()
+    def parquetFiles(d: HPath): Seq[FileStatus] = fs.listStatus(d).toSeq.flatMap { st =>
+      if (st.isDirectory) parquetFiles(st.getPath)
+      else if (st.isFile && st.getPath.getName.endsWith(".parquet")) Seq(st)
+      else Nil
+    }
     // manifest records the sink-RELATIVE path so partitioned sinks
     // stay identifiable and manifests stay portable across mounts
     val qualified = fs.makeQualified(dir).toString
-    while (files.hasNext) {
-      val f = files.next()
-      if (f.isFile && f.getPath.getName.endsWith(".parquet")) {
-        val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf))
-        val rel = f.getPath.toString.stripPrefix(qualified).stripPrefix("/")
-        try out += FileLineage(rel, footer.getRecordCount)
-        finally footer.close()
-      }
-    }
-    out.sortBy(_.file).toSeq
+    parquetFiles(dir).map { st =>
+      val footer = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf),
+        HadoopReadOptions.builder(conf, st.getPath).build())
+      val rel = st.getPath.toString.stripPrefix(qualified).stripPrefix("/")
+      try FileLineage(rel, footer.getRecordCount)
+      finally footer.close()
+    }.sortBy(_.file)
   }
 
   /** Atomic manifest commit: write temp, fsync-rename into place
     * (the reference persister's save step, checkpoint.go:40-63). */
   private[run] def commitManifest(outDir: String, m: Manifest,
-      conf: org.apache.hadoop.conf.Configuration): Unit =
+      conf: Configuration): Unit =
     writeAtomic(manifestPath(outDir, m.sink), renderJson(m), conf)
 
   def isCommitted(outDir: String, sink: String, fingerprint: String,
-      conf: org.apache.hadoop.conf.Configuration = hadoopConf): Boolean = {
+      conf: Configuration = hadoopConf): Boolean = {
     val p = manifestPath(outDir, sink)
     val fs = p.getFileSystem(conf)
     fs.exists(p) && {
@@ -156,32 +177,53 @@ object Lineage {
     }
   }
 
+  /** Most threads one [[runResumable]] call commits its sinks on. The
+    * sinks share the session's executor threads, so past a handful of
+    * concurrent jobs a wider pool only queues more on the scheduler. */
+  private val MaxConcurrentSinks = 8
+
   /** Execute every sink not yet committed under `fingerprint`; skip the
-    * rest. A sink failure is recorded and does NOT abort later sinks
+    * rest. A sink failure is recorded and does NOT abort the other sinks
     * (each sink is independent, matching connector fan-out isolation).
+    *
+    * The sinks commit concurrently, each through [[commitSink]] on its
+    * own thread of a per-call daemon pool, as wide as there are sinks
+    * up to [[MaxConcurrentSinks]]. Every thread carries the caller's
+    * active session and Spark local properties (job group, job
+    * description, scheduler pool, any tag a listener keys on), captured
+    * at the call. The pool is shut down before the call returns, also
+    * when a sink fails. `executed` and `skipped` list sinks in name
+    * order, whatever order they finish in.
     */
   def runResumable(spark: SparkSession, sinks: Map[String, DataFrame],
                    outDir: String, fingerprint: String): RunReport = {
-    val executed = scala.collection.mutable.ArrayBuffer[String]()
-    val skipped = scala.collection.mutable.ArrayBuffer[String]()
-    val failed = scala.collection.mutable.LinkedHashMap[String, String]()
-    val manifests = scala.collection.mutable.LinkedHashMap[String, Manifest]()
-    sinks.toSeq.sortBy(_._1).foreach { case (sink, df) =>
-      // the committed check sits INSIDE the per-sink try: a transient
-      // manifest-read error on one sink must not abort the remaining
-      // sinks (the documented isolation contract); an unreadable
-      // manifest degrades to "not committed" → idempotent re-execute
-      try {
-        commitSink(spark, outDir, sink, s"$outDir/$sink", fingerprint)(
-          df.write.mode("overwrite").parquet(_)) match {
-          case Some(m) => manifests += sink -> m; executed += sink
-          case None    => skipped += sink
+    val ordered = sinks.toSeq.sortBy(_._1)
+    if (ordered.isEmpty) return RunReport(Nil, Nil, Map.empty, Map.empty)
+    val pool = Bridge.newDaemonFixedThreadPool(
+      math.min(ordered.size, MaxConcurrentSinks), "graft-sink-commit")
+    val outcomes = try {
+      ordered.map { case (sink, df) =>
+        // the committed check sits INSIDE the per-sink Try: a transient
+        // manifest-read error on one sink must not abort the remaining
+        // sinks (the documented isolation contract); an unreadable
+        // manifest degrades to "not committed" → idempotent re-execute
+        sink -> Bridge.withThreadLocalCaptured(spark, pool) {
+          Try(commitSink(spark, outDir, sink, s"$outDir/$sink", fingerprint)(
+            df.write.mode("overwrite").parquet(_)))
         }
-      } catch {
-        case NonFatal(e) => failed += sink -> String.valueOf(e.getMessage)
-      }
+      }.map { case (sink, outcome) => sink -> outcome.join() }
+    } finally {
+      // every future has joined unless the caller is unwinding from a
+      // fatal error; then the sinks still running are interrupted
+      pool.shutdownNow()
+      pool.awaitTermination(1, TimeUnit.MINUTES)
     }
-    RunReport(executed.toSeq, skipped.toSeq, failed.toMap, manifests.toMap)
+    RunReport(
+      executed = outcomes.collect { case (sink, Success(Some(_))) => sink },
+      skipped = outcomes.collect { case (sink, Success(None)) => sink },
+      failed = outcomes.collect { case (sink, Failure(e)) =>
+        sink -> String.valueOf(e.getMessage) }.toMap,
+      manifests = outcomes.collect { case (sink, Success(Some(m))) => sink -> m }.toMap)
   }
 
   /** Config fingerprint: stable hash of pipeline identity (input path +

@@ -23,8 +23,9 @@ import graft.sources.Transcripts
   * (`src/main/resources/graft/flagship.yaml`) runs, without its
   * `metric_*` tables. The fan-out and every counts table commit through
   * one step, [[Lineage.commitSink]] (the counts via
-  * [[Lineage.runResumable]]): a killed run resumes without recomputing
-  * committed sinks (per-partition lineage in the manifests).
+  * [[Lineage.runResumable]], which commits them concurrently): a killed
+  * run resumes without recomputing committed sinks (per-partition
+  * lineage in the manifests).
   *
   * On a real cluster: identical code at N and 4N executors; the
   * fan-out write shuffles nothing (partitionBy on the tag), the count
@@ -154,7 +155,8 @@ object PipelineJob {
     org.apache.spark.sql.graftbridge.Bridge.waitListenerBusEmpty(
       spark.sparkContext, 30000L)
     spark.sparkContext.removeSparkListener(metrics)
-    metrics.writeJson(s"$outDir/_lineage/run_metrics.json")
+    metrics.writeJson(s"$outDir/_lineage/run_metrics.json",
+      spark.sparkContext.hadoopConfiguration)
     println(s"[pipeline] executed=${report.executed.mkString(",")} " +
       s"skipped=${report.skipped.mkString(",")} failed=${report.failed.keys.mkString(",")}")
     report
@@ -238,10 +240,11 @@ class MetricsListener extends org.apache.spark.scheduler.SparkListener {
     }
   }
 
-  def writeJson(path: String): Unit =
-    // through the output FS (Lineage.writeAtomic) — a java.nio write
-    // would land driver-local when outDir is on HDFS/S3
+  def writeJson(path: String, conf: org.apache.hadoop.conf.Configuration): Unit =
+    // through the output FS of the run's conf (Lineage.writeAtomic) — a
+    // java.nio write would land driver-local when outDir is on HDFS/S3
     Lineage.writeAtomic(new org.apache.hadoop.fs.Path(path),
       s"""{"records_read":${recordsRead.get},"records_written":${recordsWritten.get},""" +
-      s""""shuffle_bytes_written":${shuffleBytes.get},"task_millis":${taskMillis.get}}""")
+      s""""shuffle_bytes_written":${shuffleBytes.get},"task_millis":${taskMillis.get}}""",
+      conf)
 }
