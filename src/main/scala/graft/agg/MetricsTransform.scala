@@ -72,11 +72,4 @@ object MetricsTransform {
     merged.groupBy(labelCols.map(col): _*)
       .agg(aggExpr(how, col(valueCol)).as(valueCol))
   }
-
-  /** action=combine (`config.go:61-79`): data points of several matched
-    * metrics merge into one new metric. Frames must be union-compatible;
-    * the metric-name distinction becomes a label only if the caller kept
-    * one. */
-  def combine(frames: Seq[DataFrame]): DataFrame =
-    frames.reduce(_ unionByName _)
 }

@@ -25,9 +25,9 @@ object SpanMetrics {
     * (O(k) state per group per partition, associative merges). The
     * round-2 `row_number().over(Window)` rendering shuffled every span
     * of a group to one reducer and fully sorted it — a serialization
-    * point on a hot `tool` value at 10^12 spans; it survives as
-    * [[callsWithExemplarsWindowed]], the differential oracle
-    * (SpanMetricsSpec asserts frame equality).
+    * point on a hot `tool` value at 10^12 spans; it survives in the
+    * test sources as `ProcessorOpsSpec.callsWithExemplarsWindowed`, the
+    * differential oracle (ProcessorOpsSpec asserts frame equality).
     */
   def callsWithExemplars(spans: DataFrame, dims: Seq[String], durCol: String,
                          idCol: String, maxPerDataPoint: Int): DataFrame = {
@@ -37,32 +37,6 @@ object SpanMetrics {
         sum(durCol).as("sum_dur"),
         TopKExemplars.of(col(durCol).cast("bigint"), col(idCol),
           maxPerDataPoint).as("exemplars"))
-  }
-
-  /** Round-2 window rendering — kept as the differential oracle for
-    * [[callsWithExemplars]]: bounds memory per group before the collect,
-    * but partitions the FULL span set by the dimension key and sorts it,
-    * which serializes hot groups at scale. */
-  def callsWithExemplarsWindowed(spans: DataFrame, dims: Seq[String], durCol: String,
-                                 idCol: String, maxPerDataPoint: Int): DataFrame = {
-    val keys = dims.map(col)
-    val byKey = Window.partitionBy(keys: _*)
-    // rank by the SAME bigint-truncated duration the aggregator
-    // receives — ordering by the raw column would select different
-    // exemplars for fractional durations (5.7 outranking 5.2 here while
-    // the aggregator sees the 5===5 tie and breaks on id), breaking the
-    // frame-equality contract between the two renderings
-    val w = byKey.orderBy(col(durCol).cast("bigint").desc, col(idCol).desc)
-    spans
-      .withColumn("_rn", row_number().over(w))
-      .withColumn("calls", count(lit(1)).over(byKey))
-      .withColumn("sum_dur", sum(durCol).over(byKey))
-      .filter(col("_rn") <= maxPerDataPoint)
-      .groupBy((keys :+ col("calls") :+ col("sum_dur")): _*)
-      .agg(sort_array(collect_list(struct(
-        col(durCol).cast("bigint").as("value"), col(idCol).as("span_id"))), asc = false)
-        .as("exemplars"))
-      .select((keys :+ col("calls") :+ col("sum_dur") :+ col("exemplars")): _*)
   }
 
   /** Summary-type data points: exact nearest-rank latency quantiles per

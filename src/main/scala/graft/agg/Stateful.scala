@@ -51,23 +51,6 @@ object Stateful {
         .otherwise(col(valueCol) / (dt.cast("double") / 1e6)))
   }
 
-  /** interval processor (`processor/intervalprocessor/processor.go:70-163`):
-    * last value per stream per tumbling window. */
-  def intervalLast(df: DataFrame, idCols: Seq[String], tsCol: String,
-                   valueCol: String, interval: String,
-                   tieBreak: Seq[String] = Nil): DataFrame = {
-    val keys = window(col(tsCol), interval) +: idCols.map(col)
-    // max_by over (ts, tieBreak...) — bare max_by(value, ts) picks an
-    // ARBITRARY row when timestamps collide, violating this file's
-    // determinism contract (pass the tie-break columns on inputs where
-    // equal-ts points per stream are possible)
-    val ord = struct((tsCol +: tieBreak).map(col): _*)
-    df.groupBy(keys: _*)
-      .agg(max_by(col(valueCol), ord).as("last_value"))
-      .withColumn("window_start", col("window.start"))
-      .drop("window")
-  }
-
   /** metricstransform aggregate-across-label-sets
     * (`processor/metricstransformprocessor/config.go:224-233`):
     * sum/mean/min/max over kept labels. */

@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions._
   *
   * Batch rendering: gather per-conversation stats once (one shuffle),
   * evaluate the policy tree as a Column, release or drop ENTIRE
-  * conversations (semi-join back to the turns). The policies are
-  * compile-time composable exactly like the reference's and/composite
-  * policy nodes.
+  * conversations (semi-join back to the turns). A policy is a Column
+  * over the gathered statistics, so `&&` / `||` compose policies like
+  * the reference's and/composite policy nodes.
   */
 object TailSampling {
 
@@ -25,23 +25,10 @@ object TailSampling {
       (unix_micros(max(col("ts")).cast("timestamp"))
         - unix_micros(min(col("ts")).cast("timestamp"))).as("span_micros"))
 
-  // ---- policy combinators (internal/sampling/{and,composite,...}.go) ----
+  // ---- policies (internal/sampling/*.go) ----
 
   /** status-code/attribute policy: conversation contains an error turn. */
   val errorPolicy: Column = col("has_error") === 1
-
-  /** numeric-attribute policy: turn count in range. */
-  def turnCountPolicy(min: Long, max: Long): Column =
-    col("n_turns").between(min, max)
-
-  /** probabilistic policy (`internal/sampling/probabilistic.go`):
-    * deterministic keyed hash — same conversation, same verdict. */
-  def probabilisticPolicy(permille: Int): Column =
-    pmod(xxhash64(col("conv_id")), lit(1000L)) < permille
-
-  /** AND / OR / composite (first-match priority list). */
-  def and(ps: Column*): Column = ps.reduce(_ && _)
-  def or(ps: Column*): Column = ps.reduce(_ || _)
 
   /** Apply: keep every turn of every conversation the policy admits
     * (whole-trace release, `processor.go:192` onTick decision). */

@@ -16,8 +16,8 @@ import org.apache.spark.sql.expressions.Aggregator
   * round-2 `row_number().over(Window)` rendering that shuffled EVERY
   * span of the group to one reducer and fully sorted it — the one
   * scale-killer the round-2 audit found
-  * (`SpanMetrics.callsWithExemplarsWindowed` is kept as the
-  * differential oracle; SpanMetricsSpec asserts equality).
+  * (the window rendering is kept in the test sources as the
+  * differential oracle; ProcessorOpsSpec asserts equality).
   */
 object TopKExemplars {
 

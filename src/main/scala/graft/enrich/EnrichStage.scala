@@ -70,19 +70,4 @@ object EnrichStage {
         "dim_tool(tool, tool_family, is_sandboxed, cost_class) AS (SELECT * FROM (VALUES ",
         ", ",
         "))")
-
-  /** Role dimension (speaker metadata). */
-  val dimRoleRows: Seq[(String, String, Boolean)] = Seq(
-    ("user", "human", true),
-    ("assistant", "model", true),
-    ("system", "silicon", false),
-    ("tool", "machine", false)
-  )
-
-  val dimRoleSqlValues: String =
-    dimRoleRows.map { case (r, k, c) => s"('$r','$k',$c)" }
-      .mkString(
-        "dim_role(role, speaker_kind, counts_as_turn) AS (SELECT * FROM (VALUES ",
-        ", ",
-        "))")
 }

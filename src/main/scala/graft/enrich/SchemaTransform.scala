@@ -104,31 +104,4 @@ object SchemaTransform {
         }
       }.toIndexedSeq: _*)
     }
-
-  /** Translate a map-typed attributes COLUMN (one `transform_keys` +
-    * possibly one `map_filter` per revision; revisions compose, entries
-    * within a revision do not). A rename landing on an existing
-    * untouched key OVERWRITES it when the rename's source key is
-    * present in the row's map (the renamed value wins, matching
-    * [[translate]]) — without the filter, transform_keys would emit a
-    * duplicate key and crash with DUPLICATED_MAP_KEY under the default
-    * mapKeyDedupPolicy. */
-  def translateAttrs(attrs: Column, family: Family,
-                     fromVersion: String, toVersion: String): Column = {
-    val chain = renameChain(family, fromVersion, toVersion)
-    chain.foldLeft(attrs) { (m, rev) =>
-      val sources = rev.map(_._1).toSet
-      // targets that could collide with an untouched key: not renamed
-      // away this revision (a swap's targets ARE its sources — exempt)
-      val collidable = rev.filter { case (s, t) => s != t && !sources(t) }
-      val cleaned =
-        if (collidable.isEmpty) m
-        else map_filter(m, (k, _) =>
-          collidable.map { case (s, t) =>
-            !(k === lit(t) && map_contains_key(m, lit(s)))
-          }.reduce(_ && _))
-      transform_keys(cleaned, (k, _) =>
-        graft.functions.Ottl.simultaneousRemap(k, rev))
-    }
-  }
 }

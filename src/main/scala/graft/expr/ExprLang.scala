@@ -362,8 +362,7 @@ object ExprLang {
       // try_to_timestamp, not to_timestamp: an unparseable value is an
       // OTTL eval error (row → non-match under error_mode=ignore); the
       // plain form throws under default-ANSI Spark 4 and kills the
-      // batch. The Ottl.timeParse surface keeps strict semantics for
-      // the parse-stage path, where on_error handles the failure.
+      // batch.
       case "Time" => try_to_timestamp(c(0), lit(str(1)))
       case "TruncateTime" => Ottl.truncateTime(c(0), str(1))
       case "UnixSeconds" => Ottl.unixSeconds(c(0))

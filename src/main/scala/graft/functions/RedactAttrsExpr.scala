@@ -80,7 +80,8 @@ case class RedactAttrsExpr(child: Expression, cfg: graft.ops.Redaction.Config)
       if (auditKeySet.contains(kStr)) {
         // stale audit attribute from a previous redaction pass: dropped
         // and replaced by THIS pass's audit (duplicate map keys
-        // otherwise; mirrors redactAttrsDeclarative's base stripping)
+        // otherwise; the declarative oracle in ProcessorOpsSpec strips
+        // them the same way)
       } else if (ignoredSet.contains(kStr)) {
         ignoredK.add(k); ignoredV.add(v)
       } else if (!cfg.allowAllKeys && !allowedSet.contains(kStr)) {

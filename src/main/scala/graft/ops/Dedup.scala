@@ -7,24 +7,13 @@ import org.apache.spark.sql.functions._
 /** Deduplication operators for large-scale training-data pipelines.
   *
   * Scale design: exact dedup is a hash groupBy (one shuffle on the text
-  * hash, not the text — see [[exactByHash]]); near-dup avoids the O(n²)
-  * pair space via MinHash+LSH banding — only documents sharing a band
-  * bucket are compared, so the candidate join is shuffle-partitioned by
-  * (band, bucket) and the verify step touches a tiny candidate set.
+  * hash, not the text — see [[exactDedupBestSurvivor]]); near-dup
+  * avoids the O(n²) pair space via MinHash+LSH banding — only documents
+  * sharing a band bucket are compared, so the candidate join is
+  * shuffle-partitioned by (band, bucket) and the verify step touches a
+  * tiny candidate set.
   */
 object Dedup {
-
-  /** Exact dedup: keep first doc per identical value. */
-  def exact(df: DataFrame, cols: Seq[String]): DataFrame = df.dropDuplicates(cols)
-
-  /** Exact-dup groups keyed by a 64-bit content hash instead of the full
-    * text — at 100 TB the shuffle carries 8-byte keys, not documents.
-    * (xxhash64 collisions at 10^12 docs: ~3e-8 expected pairs — callers
-    * needing certainty re-verify within groups.) */
-  def exactByHash(df: DataFrame, textCol: String, idCol: String): DataFrame =
-    df.select(xxhash64(col(textCol)).as("text_hash"), col(idCol))
-      .groupBy("text_hash")
-      .agg(min(idCol).as("keep_id"), count(lit(1)).as("n_dups"))
 
   /** Token n-gram shingle set (distinct), guarded for short docs: a doc
     * shorter than n yields one degenerate whole-doc shingle. One codegen
@@ -258,7 +247,7 @@ object Dedup {
   /** Quality-aware survivor selection for exact-normalized dedup: group
     * documents by canonical text ([[TextAnalysis.normalizeForDedup]])
     * and keep the HIGHEST-scoring member instead of the smallest id —
-    * the curation refinement of [[exactByHash]]/d12 (among reformatted
+    * the curation refinement of d12 (among reformatted
     * copies, retain the best-quality rendition). The pick is decided on
     * the caller's integer score column (score desc, then id asc), so a
     * SQL oracle replays it exactly.
@@ -271,7 +260,7 @@ object Dedup {
     * dropped too — inside min(struct(-score, id)) a null score would
     * sort FIRST and win every argmax (the d20 null-conflation trap);
     * an unscored member can be neither ranked nor kept. Collision
-    * caveat as [[exactByHash]]: ~n²/2⁶⁵ across the corpus. */
+    * caveat of the 64-bit key: ~n²/2⁶⁵ across the corpus. */
   def exactDedupBestSurvivor(df: DataFrame, idCol: String,
                              textCol: String, scoreCol: String,
                              hashed: Boolean = true): DataFrame = {
@@ -642,16 +631,11 @@ object Dedup {
     * member list — at 10^12 docs a single exact-dup group can hold
     * millions of ids and an unbounded collect_list is exactly the
     * hot-group trap this engine avoids elsewhere; the delete set is the
-    * row-per-member frame from [[dedupDeleteList]] instead. */
+    * row-per-member frame of the non-survivors instead. */
   def dedupGroupSummary(groups: DataFrame): DataFrame =
     groups.groupBy("group")
       .agg(count(lit(1)).as("n_members"))
       .select(col("group").as("keep_id"), col("n_members"))
-
-  /** The rows to DELETE: every group member except the survivor. */
-  def dedupDeleteList(groups: DataFrame): DataFrame =
-    groups.filter(col("id") =!= col("group"))
-      .select(col("id").as("delete_id"), col("group").as("keep_id"))
 
   /** Group formation + per-member summary row in one call — the
     * (member, group, group size) frame the d11/e07 queries render;
@@ -734,23 +718,5 @@ object Dedup {
   def removeRepeatedSpans(textCol: Column, n: Int = 3): Column = {
     import org.apache.spark.sql.graftbridge.Bridge
     Bridge.column(graft.functions.DedupSpans(Bridge.expression(textCol), n))
-  }
-
-  /** SimHash near-dup pairs: hamming distance ≤ maxHamming. Scale path:
-    * block on the top `blockBits` bits so only same-block pairs compare
-    * (near-dups agree on most bits, so high-bit blocking has high
-    * recall for small hamming radii; multi-probe = rotate which bits
-    * form the block). */
-  def nearDupSimhash(df: DataFrame, idCol: String, textCol: String,
-                     maxHamming: Int = 3, blockBits: Int = 16): DataFrame = {
-    val withSig = df.select(col(idCol).as("id"), simhash64(col(textCol)).as("sig"))
-      .withColumn("block", shiftrightunsigned(col("sig"), 64 - blockBits))
-    val a = withSig.select(col("block"), col("id").as("id_a"), col("sig").as("sig_a"))
-    val b = withSig.select(col("block"), col("id").as("id_b"), col("sig").as("sig_b"))
-    a.join(b, Seq("block"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
   }
 }

@@ -22,18 +22,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("modality", StringType, nullable = false), // image|audio|video
-    StructField("bytes", BinaryType, nullable = false),
-    StructField("meta", StructType(Seq(
-      StructField("width", IntegerType, nullable = true),
-      StructField("height", IntegerType, nullable = true),
-      StructField("dur_ms", IntegerType, nullable = true),
-      StructField("codec", StringType, nullable = true)
-    )), nullable = false)
-  ))
-
   /** Deterministic synthetic media table (blob = text bytes; metadata
     * derived from id with plain INTEGER arithmetic, so a DuckDB oracle
     * can reproduce it — xxhash64 here would make the metadata queries
@@ -98,28 +86,6 @@ object Multimodal {
       }
     }(enc)
   }
-
-  /** STUB resize: a real implementation decodes + rescales pixels; the
-    * stub rewrites the typed metadata and tags the blob untouched (the
-    * Spark-side contract — schema in/out, narrow map — is the real part). */
-  def resizeStub(media: DataFrame, maxW: Int, maxH: Int): DataFrame =
-    media.withColumn("meta", struct(
-      least(col("meta.width"), lit(maxW)).as("width"),
-      least(col("meta.height"), lit(maxH)).as("height"),
-      col("meta.dur_ms").as("dur_ms"),
-      concat(col("meta.codec"), lit("+resized")).as("codec")))
-
-  /** STUB frame sampling for video rows: emits one row per sampled frame
-    * index (every `everyMs` of duration) with frame metadata — the
-    * explode-shaped plumbing a real decoder would feed. */
-  def frameSampleStub(media: DataFrame, everyMs: Int): DataFrame =
-    media.filter(col("modality") === "video")
-      .select(col("media_id"), col("meta.dur_ms").as("dur_ms"),
-        posexplode(sequence(lit(0),
-          greatest((col("meta.dur_ms") / everyMs).cast("int") - 1, lit(0))))
-          .as(Seq("frame_idx", "frame_ms_idx")))
-      .select(col("media_id"), col("frame_idx"),
-        (col("frame_ms_idx") * everyMs).as("frame_at_ms"))
 
   /** Metadata-only stats — must NOT read the blob column (verified by
     * plan in tests: ReadSchema excludes `bytes`). */

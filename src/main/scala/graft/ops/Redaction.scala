@@ -45,57 +45,9 @@ object Redaction {
   /** Redact one attributes map; returns the new map (surviving keys,
     * masked values, audit attributes). One codegen pass
     * ([[graft.functions.RedactAttrsExpr]]); the declarative rendering
-    * below is the differential oracle. */
+    * in ProcessorOpsSpec is the differential oracle. */
   def redactAttrs(m: Column, cfg: Config): Column = {
     import org.apache.spark.sql.graftbridge.Bridge
     Bridge.column(graft.functions.RedactAttrsExpr(Bridge.expression(m), cfg))
-  }
-
-  /** Declarative map_filter/transform_values rendering of
-    * [[redactAttrs]] (differential oracle — identical semantics): ~10
-    * interpreted-lambda passes over the map per row, NOT for hot paths. */
-  def redactAttrsDeclarative(m: Column, cfg: Config): Column = {
-    def isIgnored(k: Column): Column =
-      if (cfg.ignoredKeys.isEmpty) lit(false) else k.isin(cfg.ignoredKeys: _*)
-    def isAllowed(k: Column): Column =
-      if (cfg.allowAllKeys) lit(true)
-      else k.isin((cfg.allowedKeys ++ AuditKeys): _*)
-    def matchesBlocked(v: Column): Column =
-      if (cfg.blockedValues.isEmpty) lit(false)
-      else cfg.blockedValues.map(v.rlike).reduce(_ || _)
-
-    // drop STALE audit attributes first: re-redacting already-redacted
-    // data (the processor at two pipeline stages) would otherwise carry
-    // the old audit entries into maskedPart and map_concat them with
-    // this pass's same-keyed audits → DUPLICATED_MAP_KEY at runtime;
-    // this pass's audit REPLACES the previous one (the reference
-    // upserts audit attrs — same observable result)
-    val base = map_filter(m, (k, _) => !k.isin(AuditKeys: _*))
-    val ignoredPart = map_filter(base, (k, _) => isIgnored(k))
-    val allowedPart = map_filter(base, (k, _) => !isIgnored(k) && isAllowed(k))
-    val deletedKeys = sort_array(map_keys(
-      map_filter(base, (k, _) => !isIgnored(k) && !isAllowed(k))))
-    val maskedKeys = sort_array(map_keys(
-      map_filter(allowedPart, (_, v) => matchesBlocked(v))))
-    val maskedPart = transform_values(allowedPart, (_, v) =>
-      cfg.blockedValues.foldLeft(v)((acc, re) => regexp_replace(acc, re, "****")))
-    val ignoredCount = size(map_entries(ignoredPart))
-
-    // typed empty map<string,string> (bare map() would be map<null,null>
-    // and map_concat would reject the mix)
-    val emptyMap = map_filter(m, (_, _) => lit(false))
-    def audit(cond: Column, key: String, value: Column): Column =
-      when(cond, map(lit(key), value.cast("string"))).otherwise(emptyMap)
-
-    val debugOn = cfg.summary == "debug"
-    val infoOn = cfg.summary == "info" || debugOn
-    val audits = Seq(
-      if (debugOn) audit(size(deletedKeys) > 0, RedactedKeys, array_join(deletedKeys, ",")) else emptyMap,
-      if (infoOn) audit(size(deletedKeys) > 0, RedactedCount, size(deletedKeys)) else emptyMap,
-      if (debugOn) audit(size(maskedKeys) > 0, MaskedKeys, array_join(maskedKeys, ",")) else emptyMap,
-      if (infoOn) audit(size(maskedKeys) > 0, MaskedCount, size(maskedKeys)) else emptyMap,
-      if (infoOn) audit(ignoredCount > 0, IgnoredCount, ignoredCount) else emptyMap)
-
-    (Seq(ignoredPart, maskedPart) ++ audits).reduce(map_concat(_, _))
   }
 }

@@ -121,31 +121,13 @@ object Similarity {
     * sums order-free exact integer arithmetic (bitwise reproducible in
     * any engine), (b) mirrors real PQ, whose distance tables are
     * quantized lookups, not float math. */
-  private def pqDistE6(dv: Column, j: Int, centroid: Array[Double]): Column = {
+  private[ops] def pqDistE6(dv: Column, j: Int, centroid: Array[Double]): Column = {
     val sub = centroid.length
     val terms = (0 until sub).map { i =>
       val el = element_at(dv, j * sub + i + 1)
       (el - lit(centroid(i))) * (el - lit(centroid(i)))
     }
     floor(lit(1e6) * terms.reduceLeft(_ + _)).cast("bigint")
-  }
-
-  /** PQ-encode: adds `code_0 … code_{m-1}` int columns — per subspace
-    * the index of the nearest centroid (quantized L2, ties → smaller
-    * code). A narrow codegen map: at 10^12 vectors the encoded index is
-    * m small ints per row (64-dim float → m=8 codes ≈ 32× smaller), the
-    * compression that lets a PQ index sit in memory where raw vectors
-    * cannot. */
-  def pqEncode(df: DataFrame, vecCol: String,
-               codebook: Seq[Seq[Array[Double]]]): DataFrame = {
-    val dv = col(vecCol).cast("array<double>")
-    codebook.zipWithIndex.foldLeft(df) { case (acc, (cents, j)) =>
-      val scored = cents.zipWithIndex.map { case (c, ci) =>
-        struct(pqDistE6(dv, j, c).as("d"), lit(ci).as("c"))
-      }
-      val best = if (scored.size == 1) scored.head else least(scored: _*)
-      acc.withColumn(s"code_$j", best.getField("c"))
-    }
   }
 
   /** PQ ANN top-k: asymmetric-distance search over the encoded index.

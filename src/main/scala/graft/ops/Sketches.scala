@@ -88,10 +88,9 @@ object Sketches {
     udaf(kmvAggregator(k), Encoders.scalaLong)(hash)
 
   /** The KMV estimator columns shared by every rendering of the sketch
-    * (batch aggregator, declarative differential, streaming window) —
-    * ONE definition so the streaming path's "bitwise equal to
-    * [[distinctKmv]] per window" contract is enforced by construction,
-    * not by keeping hand-written copies in sync. `ks` is the ascending
+    * (the batch aggregator and SketchesSpec's declarative differential)
+    * — ONE definition, so the renderings agree by construction, not by
+    * keeping hand-written copies in sync. `ks` is the ascending
     * bottom-k hash array; returns (n_kept, kth_hash, est_distinct)
     * where est_distinct = n_kept exactly while the sketch is short of
     * k, else `(k-1)·M div h_(k)` in integer division. */
@@ -122,23 +121,6 @@ object Sketches {
       .agg(kmvOf(col("hv"), k).as("ks"))
     val (nKept, kthHash, estDistinct) = kmvEstimate(col("ks"), k)
     sketch.select(nKept, kthHash, estDistinct)
-  }
-
-  /** Declarative rendering of the same sketch (differential oracle for
-    * the bounded aggregator): global distinct + ascending sort + limit.
-    * Exact but unbounded — a full distinct shuffle — kept ONLY to pin
-    * the aggregator's semantics in SketchesSpec. */
-  def distinctKmvDeclarative(docs: DataFrame, textCol: String,
-                             k: Int = 256): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val ks = docs.filter(col(textCol).isNotNull)
-      .select(TextAnalysis.fingerprint(col(textCol)).as("hv"))
-      .distinct().orderBy(col("hv").asc).limit(k)
-      .as[Long].collect().toSeq // bounded: ≤k longs, test-only path
-    val arr = typedLit(ks)
-    val (nKept, kthHash, estDistinct) = kmvEstimate(arr, k)
-    docs.sparkSession.range(1).select(nKept, kthHash, estDistinct)
   }
 
   // ---- count-min frequency sketch ----

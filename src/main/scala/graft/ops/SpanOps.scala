@@ -29,14 +29,4 @@ object SpanOps {
     Bridge.column(graft.functions.SpanToAttributes(
       Bridge.expression(name), rules, breakAfterMatch))
   }
-
-  /** set_status (`span.go:228-244`): code upsert; the message survives
-    * only for error (Ok/Unset clear it, like the reference). */
-  def setStatus(code: String, description: String = ""): (Column, Column) =
-    code match {
-      case "Ok"    => (lit("Ok"), lit(""))
-      case "Error" => (lit("Error"), lit(description))
-      case "Unset" => (lit("Unset"), lit(""))
-      case other => throw new IllegalArgumentException(s"unknown status code: $other")
-    }
 }

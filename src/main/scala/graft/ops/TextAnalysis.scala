@@ -469,12 +469,6 @@ object TextAnalysis {
   def tokenCountWhitespace(text: Column): Column =
     size(split(text, "\\s+"))
 
-  /** BPE-ish token count: word pieces + standalone punctuation — a
-    * deterministic proxy for subword tokenizers (counts `\w+` runs and
-    * non-space symbols separately). */
-  def tokenCountBpeIsh(text: Column): Column =
-    size(regexp_extract_all(text, lit("\\w+|[^\\w\\s]"), lit(0)))
-
   // ---- language ID (n-gram/stopword heuristic) ----
 
   /** Tiny per-language stopword banks (public common-word lists). */

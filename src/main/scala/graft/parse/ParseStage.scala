@@ -143,15 +143,6 @@ object ParseStage {
       Bridge.expression(c), severityAliases)).as("severity_num")
   }
 
-  /** CASE-chain rendering of [[parseSeverity]] (differential oracle for
-    * the hash-lookup expression): up to ~90 string comparisons per row. */
-  def parseSeverityCase(c: Column): Column = {
-    val lc = lower(c)
-    severityAliases.foldLeft(lit(0)) { case (acc, (name, num)) =>
-      when(lc === name, lit(num)).otherwise(acc)
-    }.as("severity_num")
-  }
-
   /** Custom severity mapping on top of the builtin table
     * (`severity_builder.go:94-104,205-214`): the special values
     * `2xx`..`5xx` match every HTTP status in that range (the reference

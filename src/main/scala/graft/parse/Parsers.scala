@@ -112,22 +112,6 @@ object Parsers {
   /** scope parser (`parser/scope/parser.go:20`): set scope from a field. */
   def parseScope(c: Column): Column = c.as("scope")
 
-  /** Newline split (`pkg/stanza/split/split.go:141` NewlineSplitFunc):
-    * one raw blob → one row per line, with (source, line_no) identity.
-    * A newline-TERMINATED blob emits no trailing empty row (Spark's
-    * split keeps trailing empties; the reference's split func does not
-    * emit an entry after the final delimiter — the spurious '' row
-    * would fail every bank pattern and inflate error-rate metrics by
-    * one per source blob). Interior empty lines are real entries and
-    * are kept. */
-  def splitLines(df: DataFrame, blobCol: String, sourceCol: String): DataFrame = {
-    val parts = split(col(blobCol), "\n")
-    val trimmed = when(element_at(parts, -1) === "",
-      slice(parts, lit(1), size(parts) - 1)).otherwise(parts)
-    df.select(col(sourceCol).as("source"),
-        posexplode(trimmed).as(Seq("line_no", "line")))
-  }
-
   /** Multiline recombine by line-start pattern (`split.go:59`
     * LineStartSplitFunc + the recombine transformer): consecutive lines
     * group under the last line matching `startPattern`; groups concat in

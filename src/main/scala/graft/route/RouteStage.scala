@@ -96,45 +96,4 @@ object RouteStage {
     val names = table.routes.map(_.name) :+ table.defaultName
     (names.map(n => n -> stream.filter(col("route") === n).drop("route")).toMap, stream)
   }
-
-  /** Route-to-multiple-pipelines fan-out (`connector/routingconnector/
-    * config.go:70-82` Pipelines lists; delivery grouped per consumer so a
-    * row reaching one pipeline via several routes arrives ONCE,
-    * `logs.go:99-102`). Relational rendering: pipeline p's predicate =
-    * OR of its routes' predicates (∨ default-membership when no route
-    * matches) — single pass, once-delivery by construction. */
-  def fanOutPipelines(df: DataFrame,
-                      routes: Seq[(Column, Seq[String])],
-                      defaultPipelines: Seq[String]): Map[String, DataFrame] = {
-    val safe = routes.map { case (p, ps) => (coalesce(p, lit(false)), ps) }
-    val noMatch = safe.map(r => !r._1).reduceOption(_ && _).getOrElse(lit(true))
-    val pipelines = (routes.flatMap(_._2) ++ defaultPipelines).distinct
-    pipelines.map { p =>
-      val viaRoutes = safe.collect { case (pred, ps) if ps.contains(p) => pred }
-      val viaDefault = if (defaultPipelines.contains(p)) Seq(noMatch) else Nil
-      val predicate = (viaRoutes ++ viaDefault).reduce(_ || _)
-      p -> df.filter(predicate)
-    }.toMap
-  }
-
-  /** match_once with multi-pipeline routes (`logs.go:87` first-match break
-    * + per-route Pipelines list): the FIRST matching route's pipelines all
-    * receive the row; later matches are ignored. Rendered as a first-match
-    * route index tag + per-pipeline membership filter. */
-  def matchOncePipelines(df: DataFrame,
-                         routes: Seq[(Column, Seq[String])],
-                         defaultPipelines: Seq[String]): Map[String, DataFrame] = {
-    val safe = routes.map { case (p, ps) => (coalesce(p, lit(false)), ps) }
-    val idx = safe.zipWithIndex.foldRight(lit(-1): Column) { case (((pred, _), i), rest) =>
-      when(pred, lit(i)).otherwise(rest)
-    } // when-chains evaluate FIRST match (short-circuit CASE)
-    val taggedDf = df.withColumn("_route_idx", idx)
-    val pipelines = (routes.flatMap(_._2) ++ defaultPipelines).distinct
-    pipelines.map { p =>
-      val idxs = safe.zipWithIndex.collect { case ((_, ps), i) if ps.contains(p) => i }
-      val viaRoutes = if (idxs.isEmpty) lit(false) else col("_route_idx").isin(idxs: _*)
-      val viaDefault = if (defaultPipelines.contains(p)) col("_route_idx") === -1 else lit(false)
-      p -> taggedDf.filter(viaRoutes || viaDefault).drop("_route_idx")
-    }.toMap
-  }
 }

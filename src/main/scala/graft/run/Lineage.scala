@@ -49,26 +49,16 @@ object Lineage {
   // bogus driver-local dir, isCommitted would always be false from any
   // other driver, and resume — the module's whole contract — would
   // silently never fire off-box. The local default FS keeps tests
-  // byte-identical.
-  // isCommitted's default when no session is threaded through; callers
-  // that HOLD a session (commitSink) pass its conf explicitly — the
-  // active-session fallback resolves the wrong filesystem when the
-  // passed session is not the thread's active one (missing fs.s3a.*
-  // etc. settings)
-  private def hadoopConf: Configuration =
-    Try(SparkSession.active.sparkContext.hadoopConfiguration)
-      .getOrElse(new Configuration())
-
-  // the sink name escaped like a partition value: Hadoop parses a
-  // child name such as `counts_a:b.json` (the counts sink of a route
-  // `a:b`) as scheme `counts_a` and fails the commit
+  // byte-identical. The sink name is escaped like a partition value:
+  // Hadoop parses a child name such as `counts_a:b.json` (the counts
+  // sink of a route `a:b`) as scheme `counts_a` and fails the commit
   private def manifestPath(outDir: String, sink: String): HPath =
     new HPath(new HPath(outDir, "_lineage"),
       s"${ExternalCatalogUtils.escapePathName(sink)}.json")
 
   /** Atomic small-file write through the output FS: temp +
-    * single overwriting rename (same pattern as Incremental's ingest
-    * manifest; Hadoop local FS makes this an atomic move in tests). */
+    * single overwriting rename (Hadoop local FS makes this an atomic
+    * move in tests). */
   private[graft] def writeAtomic(path: HPath, content: String,
       conf: Configuration): Unit = {
     val fs = path.getFileSystem(conf)
@@ -138,7 +128,7 @@ object Lineage {
     writeAtomic(manifestPath(outDir, m.sink), renderJson(m), conf)
 
   def isCommitted(outDir: String, sink: String, fingerprint: String,
-      conf: Configuration = hadoopConf): Boolean = {
+      conf: Configuration): Boolean = {
     val p = manifestPath(outDir, sink)
     val fs = p.getFileSystem(conf)
     fs.exists(p) && {

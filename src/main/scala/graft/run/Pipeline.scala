@@ -21,7 +21,6 @@ object Pipeline {
   val flagship: ConfigLoader.Compiled = ConfigLoader.compile(config)
 
   def parseConfig: ParseConfig = flagship.parse
-  def patternBank: Seq[PatternSpec] = parseConfig.patterns
   def parsedFields: Set[String] = flagship.parsedFields
   def exprResolver: ExprLang.Resolver = flagship.resolver
   def routeTable: RouteTable = flagship.routeTable

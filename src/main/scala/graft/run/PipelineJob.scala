@@ -81,80 +81,82 @@ object PipelineJob {
     val metrics = new MetricsListener
     spark.sparkContext.addSparkListener(metrics)
 
-    val table = Transcripts.TranscriptTable()
-    // The fingerprint covers the WHOLE effective config, not just
-    // pattern regexes and route names: editing a route's WHERE clause,
-    // the enrich spec, on_error, or a metric definition while keeping
-    // names identical must invalidate committed sinks, or a resume
-    // silently ships outputs computed under the OLD config. The
-    // canonical rendered YAML is the config identity.
-    val configText = ConfigLoader.render(fileModel.getOrElse(Pipeline.config))
-    // per-STAGE fingerprints: the fan-out's output does not depend on
-    // the window, so changing only windowDur must not invalidate the
-    // dominant routed write (it re-runs only the cheap count sinks)
-    val fpFanout = Lineage.fingerprintOf("pipeline-v1", inPath, configText)
-    val fpCounts = Lineage.fingerprintOf("pipeline-v1", inPath, windowDur,
-      configText)
+    // removed in the finally: a failed stage must not leave the
+    // listener on the caller's session
+    val report = try {
+      val table = Transcripts.TranscriptTable()
+      // The fingerprint covers the WHOLE effective config, not just
+      // pattern regexes and route names: editing a route's WHERE clause,
+      // the enrich spec, on_error, or a metric definition while keeping
+      // names identical must invalidate committed sinks, or a resume
+      // silently ships outputs computed under the OLD config. The
+      // canonical rendered YAML is the config identity.
+      val configText = ConfigLoader.render(fileModel.getOrElse(Pipeline.config))
+      // per-STAGE fingerprints: the fan-out's output does not depend on
+      // the window, so changing only windowDur must not invalidate the
+      // dominant routed write (it re-runs only the cheap count sinks)
+      val fpFanout = Lineage.fingerprintOf("pipeline-v1", inPath, configText)
+      val fpCounts = Lineage.fingerprintOf("pipeline-v1", inPath, windowDur,
+        configText)
 
-    // Stage 1+2+3: parse → enrich → single-pass routed fan-out: one
-    // idempotent partitioned write, committed like every other sink (its
-    // manifest lists `route=X/part-N` files under the writer's escaped
-    // directory names). A failure here aborts the run before the counts.
-    val sinksDir = s"$outDir/sinks"
-    val fanoutCommitted = Lineage.commitSink(spark, outDir, "sinks_fanout",
-        sinksDir, fpFanout) { dir =>
-      RouteStage.routed(cfg.parseEnrich(spark, table.read(spark, inPath)), routeTable)
-        .write.mode("overwrite").partitionBy("route").parquet(dir)
-    }.isEmpty
+      // Stage 1+2+3: parse → enrich → single-pass routed fan-out: one
+      // idempotent partitioned write, committed like every other sink (its
+      // manifest lists `route=X/part-N` files under the writer's escaped
+      // directory names). A failure here aborts the run before the counts.
+      val sinksDir = s"$outDir/sinks"
+      val fanoutCommitted = Lineage.commitSink(spark, outDir, "sinks_fanout",
+          sinksDir, fpFanout) { dir =>
+        RouteStage.routed(cfg.parseEnrich(spark, table.read(spark, inPath)), routeTable)
+          .write.mode("overwrite").partitionBy("route").parquet(dir)
+      }.isEmpty
 
-    // Stage 4: per-sink windowed counts, each its own resumable sink —
-    // PLUS, when a config file defines a metrics section, one resumable
-    // sink per user metric (count-connector semantics over the enriched
-    // stream): the "user ships a YAML file" surface must actually
-    // deliver the metrics the file declares, not only the built-in
-    // per-route role counts.
-    // a ZERO-row input commits a fan-out with no part files; reading the
-    // bare dir would then fail schema inference — and since the stage IS
-    // committed, every resume would crash the same way. Fall back to an
-    // empty frame with the fan-out's schema.
-    val sinksHavePartFiles = {
-      val dir = new org.apache.hadoop.fs.Path(sinksDir)
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.exists(dir) && fs.globStatus(
-        new org.apache.hadoop.fs.Path(dir, "route=*/*.parquet")).nonEmpty
-    }
-    val written =
-      if (sinksHavePartFiles) spark.read.parquet(sinksDir)
-      else RouteStage.routed(
-        cfg.parseEnrich(spark, table.read(spark, inPath)).limit(0), routeTable)
-    val routeCounts = routeTable.routes.map(_.name)
-      .:+(routeTable.defaultName).map { route =>
-        s"counts_$route" -> CountStage.countWindowed(
-          written.filter(col("route") === route),
-          MetricSpec("count", attrs = Seq(AttrSpec("role"))),
-          col("ts"), windowDur)
-      }.toMap
-    // over the enriched frame (pre-fan-out: multi-match duplicates
-    // rows per route, which would double-count global metrics);
-    // re-deriving costs one extra scan of the input, only when a config
-    // file declares metrics. The effective window (CLI arg wins over the
-    // config file) keeps metric_* and counts_* on one window.
-    val userMetrics = fileCfg.filter(_.metrics.nonEmpty).toSeq.flatMap { c =>
-      c.countMetrics(c.parseEnrich(spark, table.read(spark, inPath)), windowDur)
-        .map { case (n, df) => s"metric_$n" -> df }
-    }
-    val counts = Lineage.runResumable(spark, routeCounts ++ userMetrics,
-      outDir, fpCounts)
-    val report =
+      // Stage 4: per-sink windowed counts, each its own resumable sink —
+      // PLUS, when a config file defines a metrics section, one resumable
+      // sink per user metric (count-connector semantics over the enriched
+      // stream): the "user ships a YAML file" surface must actually
+      // deliver the metrics the file declares, not only the built-in
+      // per-route role counts.
+      // a ZERO-row input commits a fan-out with no part files; reading the
+      // bare dir would then fail schema inference — and since the stage IS
+      // committed, every resume would crash the same way. Fall back to an
+      // empty frame with the fan-out's schema.
+      val sinksHavePartFiles = {
+        val dir = new org.apache.hadoop.fs.Path(sinksDir)
+        val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        fs.exists(dir) && fs.globStatus(
+          new org.apache.hadoop.fs.Path(dir, "route=*/*.parquet")).nonEmpty
+      }
+      val written =
+        if (sinksHavePartFiles) spark.read.parquet(sinksDir)
+        else RouteStage.routed(
+          cfg.parseEnrich(spark, table.read(spark, inPath)).limit(0), routeTable)
+      val routeCounts = routeTable.routes.map(_.name)
+        .:+(routeTable.defaultName).map { route =>
+          s"counts_$route" -> CountStage.countWindowed(
+            written.filter(col("route") === route),
+            MetricSpec("count", attrs = Seq(AttrSpec("role"))),
+            col("ts"), windowDur)
+        }.toMap
+      // over the enriched frame (pre-fan-out: multi-match duplicates
+      // rows per route, which would double-count global metrics);
+      // re-deriving costs one extra scan of the input, only when a config
+      // file declares metrics. The effective window (CLI arg wins over the
+      // config file) keeps metric_* and counts_* on one window.
+      val userMetrics = fileCfg.filter(_.metrics.nonEmpty).toSeq.flatMap { c =>
+        c.countMetrics(c.parseEnrich(spark, table.read(spark, inPath)), windowDur)
+          .map { case (n, df) => s"metric_$n" -> df }
+      }
+      val counts = Lineage.runResumable(spark, routeCounts ++ userMetrics,
+        outDir, fpCounts)
+
+      // metrics manifest (rows read/written, shuffle, task time) — drain
+      // the async listener bus first or the final tasks' onTaskEnd events
+      // may still be queued and the snapshot undercounts
+      org.apache.spark.sql.graftbridge.Bridge.waitListenerBusEmpty(
+        spark.sparkContext, 30000L)
       if (fanoutCommitted) counts.copy(skipped = "sinks_fanout" +: counts.skipped)
       else counts.copy(executed = "sinks_fanout" +: counts.executed)
-
-    // metrics manifest (rows read/written, shuffle, task time) — drain
-    // the async listener bus first or the final tasks' onTaskEnd events
-    // may still be queued and the snapshot undercounts
-    org.apache.spark.sql.graftbridge.Bridge.waitListenerBusEmpty(
-      spark.sparkContext, 30000L)
-    spark.sparkContext.removeSparkListener(metrics)
+    } finally spark.sparkContext.removeSparkListener(metrics)
     metrics.writeJson(s"$outDir/_lineage/run_metrics.json",
       spark.sparkContext.hadoopConfiguration)
     println(s"[pipeline] executed=${report.executed.mkString(",")} " +

@@ -1,5 +1,8 @@
 package graft.run
 
+import scala.util.chaining._
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
@@ -39,8 +42,7 @@ import graft.streaming.StreamingPipeline
   * `--once` runs with `Trigger.AvailableNow` (drain what's there, then
   * exit): the streaming service doubling as an incremental batch job —
   * re-launching later processes only NEW files, positions tracked in the
-  * checkpoint, which is the streaming rendering of
-  * [[graft.sources.Incremental]]'s ingest ledger.
+  * checkpoint: this is the product's incremental ingest.
   *
   * Append-mode semantics note (standard Structured Streaming): a window
   * finalizes when the watermark passes its end, so the trailing window
@@ -111,39 +113,48 @@ object StreamingJob {
     val qSinks = StreamingPipeline.startRoutedSinksMultiplexed(
       tagged, sinkNames, s"$outDir/sinks", s"$outDir/_ck/sinks", trig)
 
-    // the streaming count connector over the SAME tag column (two
-    // queries = two upstream passes — mirroring the batch path, where
-    // counts also derive from their own exploded-tag pass; the sink
-    // query's multiplexer keeps ITS pass single regardless of k). One
-    // (window, route, role) table — the streaming rendering of
-    // PipelineJob's per-route `counts_<route>` tables, route as a column
-    def startAppend(df: org.apache.spark.sql.DataFrame, path: String,
-                    ck: String): StreamingQuery =
-      trig.foldLeft(
-          df.writeStream
-            .outputMode(OutputMode.Append)
-            .option("checkpointLocation", ck)
-            .option("path", path)
-        )(_.trigger(_))
-        .format("parquet")
-        .start()
-    val qCounts = startAppend(
-      StreamingPipeline.windowedCounts(tagged, windowDur, lateness,
-        Seq("route", "role")),
-      s"$outDir/counts", s"$outDir/_ck/counts")
+    // a later start that fails must not leave the queries already
+    // started running with no handle returned to the caller
+    val started = scala.collection.mutable.ArrayBuffer(qSinks)
+    try {
+      // the streaming count connector over the SAME tag column (two
+      // queries = two upstream passes — mirroring the batch path, where
+      // counts also derive from their own exploded-tag pass; the sink
+      // query's multiplexer keeps ITS pass single regardless of k). One
+      // (window, route, role) table — the streaming rendering of
+      // PipelineJob's per-route `counts_<route>` tables, route as a column
+      def startAppend(df: org.apache.spark.sql.DataFrame, path: String,
+                      ck: String): StreamingQuery =
+        trig.foldLeft(
+            df.writeStream
+              .outputMode(OutputMode.Append)
+              .option("checkpointLocation", ck)
+              .option("path", path)
+          )(_.trigger(_))
+          .format("parquet")
+          .start()
+          .tap(started += _)
+      val qCounts = startAppend(
+        StreamingPipeline.windowedCounts(tagged, windowDur, lateness,
+          Seq("route", "role")),
+        s"$outDir/counts", s"$outDir/_ck/counts")
 
-    // configured count-connector metrics (`metric_<name>`, matching
-    // PipelineJob): over the PRE-fan-out enriched frame — multi-match
-    // explosion duplicates rows per route and would double-count global
-    // metrics. Metrics are a config-sized set, so one streaming query
-    // per metric (each its own checkpoint/table, independently
-    // restartable — the per-query variant's isolation is the RIGHT
-    // trade here, unlike the k-sink ingest path).
-    val wmEnriched = enriched.withWatermark("ts", lateness)
-    val metricFrames = fileCfg.toSeq.flatMap(_.countMetrics(wmEnriched, windowDur))
-    val qMetrics = metricFrames.map { case (name, df) =>
-      name -> startAppend(df, s"$outDir/metric_$name", s"$outDir/_ck/metric_$name")
+      // configured count-connector metrics (`metric_<name>`, matching
+      // PipelineJob): over the PRE-fan-out enriched frame — multi-match
+      // explosion duplicates rows per route and would double-count global
+      // metrics. Metrics are a config-sized set, so one streaming query
+      // per metric (each its own checkpoint/table, independently
+      // restartable — the per-query variant's isolation is the RIGHT
+      // trade here, unlike the k-sink ingest path).
+      val wmEnriched = enriched.withWatermark("ts", lateness)
+      val metricFrames = fileCfg.toSeq.flatMap(_.countMetrics(wmEnriched, windowDur))
+      val qMetrics = metricFrames.map { case (name, df) =>
+        name -> startAppend(df, s"$outDir/metric_$name", s"$outDir/_ck/metric_$name")
+      }
+      Handles(qSinks, qCounts, qMetrics)
+    } catch { case NonFatal(e) =>
+      started.foreach(q => try q.stop() catch { case NonFatal(s) => e.addSuppressed(s) })
+      throw e
     }
-    Handles(qSinks, qCounts, qMetrics)
   }
 }

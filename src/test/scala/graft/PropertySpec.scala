@@ -147,23 +147,6 @@ class PropertySpec extends SparkSpec {
     })
   }
 
-  // ---- OTTL merge_maps algebra (func_merge_maps.go strategies) ----
-
-  private val genSmallMap: Gen[Map[String, String]] =
-    Gen.mapOf(Gen.zip(Gen.oneOf("a", "b", "c", "d"), Gen.oneOf("1", "2", "3")))
-
-  test("property: merge_maps upsert/insert/update laws") {
-    check("merge_maps", 10)(Prop.forAll(genSmallMap, genSmallMap) { (t, s) =>
-      val df = Seq((t, s)).toDF("t", "s")
-      def got(strategy: String): Map[String, String] =
-        df.select(Ottl.mergeMaps(col("t"), col("s"), strategy).as("m"))
-          .collect().head.getMap[String, String](0).toMap
-      got("upsert") == t ++ s &&
-        got("insert") == s ++ t &&
-        got("update") == t.map { case (k, v) => k -> s.getOrElse(k, v) }
-    })
-  }
-
   // ---- k-means Lloyd step laws (Similarity.kmeansStep / e21) ----
 
   test("property: kmeansStep partitions the corpus; means bounded; input-order invariant") {

@@ -67,10 +67,22 @@ class AggSpec extends SparkSpec {
     assert(back.forall { case (v, d) => v == d })
   }
 
+  /** p19 (the interval processor's rendering: last value per user and
+    * hour, a `row_number` window) over `rows` written as an events
+    * table; `cents` is `round(value * 100)`. */
+  private def p19(rows: Seq[(String, String, Timestamp, Long)]): Seq[(String, Long)] = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_p19").toString
+    rows.map { case (id, user, t, cents) => (id, user, t, cents / 100.0) }
+      .toDF("event_id", "user_id", "ts", "value")
+      .write.parquet(s"$dir/events.parquet")
+    graft.SparkEntry.queries("p19_interval_last")(spark, dir)
+      .select("user_id", "last_cents").as[(String, Long)].collect().toSeq
+  }
+
   test("stateful: interval last-value per window") {
-    val out = Stateful.intervalLast(logs, Seq("svc"), "ts", "v", "1 hour")
-      .select("svc", "last_value").as[(String, Long)].collect().toSet
-    assert(out == Set(("a", 20L), ("a", 50L), ("b", 30L), ("b", 40L)))
+    val out = p19(logs.select(monotonically_increasing_id().cast("string"),
+      col("svc"), col("ts"), col("v")).as[(String, String, Timestamp, Long)].collect().toSeq)
+    assert(out.toSet == Set(("a", 20L), ("a", 50L), ("b", 30L), ("b", 40L)))
   }
 
   test("aggregate labels: sum/mean/min/max (metricstransform config.go:224-233)") {
@@ -96,14 +108,10 @@ class AggSpec extends SparkSpec {
   }
 
   test("stateful: interval last-value breaks timestamp ties deterministically") {
-    val dup = Seq(
-      ("a", ts("2024-01-01 00:10:00"), 1L, "m"),
-      ("a", ts("2024-01-01 00:10:00"), 2L, "z"), // max tie-break → kept
-      ("a", ts("2024-01-01 00:10:00"), 3L, "k")
-    ).toDF("svc", "ts", "v", "tb")
-    val out = Stateful.intervalLast(dup, Seq("svc"), "ts", "v", "1 hour",
-      tieBreak = Seq("tb"))
-      .select("last_value").as[Long].collect().toSeq
-    assert(out == Seq(2L)) // max_by (ts, tb): "z" wins, every run
+    val out = p19(Seq(
+      ("m", "a", ts("2024-01-01 00:10:00"), 1L),
+      ("z", "a", ts("2024-01-01 00:10:00"), 2L), // max tie-break → kept
+      ("k", "a", ts("2024-01-01 00:10:00"), 3L)))
+    assert(out == Seq(("a", 2L))) // (ts, event_id) descending: "z" wins, every run
   }
 }

@@ -1,5 +1,7 @@
 package graft.agg
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -138,7 +140,7 @@ class ProcessorOpsSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getAs[scala.collection.Seq[String]](3).toList)).toSet
     val fast = norm(SpanMetrics.callsWithExemplars(spans, Seq("tool"), "dur", "sid", 3))
-    val slow = norm(SpanMetrics.callsWithExemplarsWindowed(spans, Seq("tool"), "dur", "sid", 3))
+    val slow = norm(ProcessorOpsSpec.callsWithExemplarsWindowed(spans, Seq("tool"), "dur", "sid", 3))
     assert(fast == slow)
     // FRACTIONAL durations: both renderings must rank by the same
     // bigint-truncated value (the window used to order by the raw
@@ -151,7 +153,7 @@ class ProcessorOpsSpec extends SparkSpec {
         .getAs[scala.collection.Seq[org.apache.spark.sql.Row]](0)
         .map(_.getString(1)).toSeq
     val fastF = exIds(SpanMetrics.callsWithExemplars(frac, Seq("tool"), "dur", "sid", 1))
-    val slowF = exIds(SpanMetrics.callsWithExemplarsWindowed(frac, Seq("tool"), "dur", "sid", 1))
+    val slowF = exIds(ProcessorOpsSpec.callsWithExemplarsWindowed(frac, Seq("tool"), "dur", "sid", 1))
     assert(fastF == slowF, s"fast=$fastF slow=$slowF")
   }
 
@@ -170,7 +172,7 @@ class ProcessorOpsSpec extends SparkSpec {
       .select(expr("transform(exemplars, e -> e.span_id)").as("ex"))
       .as[Seq[String]].head().toList
     val fast = top2(SpanMetrics.callsWithExemplars(spans, Seq("tool"), "dur", "sid", 2))
-    val slow = top2(SpanMetrics.callsWithExemplarsWindowed(spans, Seq("tool"), "dur", "sid", 2))
+    val slow = top2(ProcessorOpsSpec.callsWithExemplarsWindowed(spans, Seq("tool"), "dur", "sid", 2))
     assert(fast == slow)
     assert(fast.head == "s😀") // supplementary char sorts highest
   }
@@ -256,7 +258,7 @@ class ProcessorOpsSpec extends SparkSpec {
         blockedValues = Seq("\\d{4}-\\d{4}"), summary = summary)
       val both = rows.select(
         Redaction.redactAttrs(col("attrs"), cfg).as("fast"),
-        Redaction.redactAttrsDeclarative(col("attrs"), cfg).as("slow"))
+        ProcessorOpsSpec.redactAttrsDeclarative(col("attrs"), cfg).as("slow"))
         .collect()
       both.foreach { r =>
         val fast = r.getMap[String, String](0).toMap
@@ -272,7 +274,7 @@ class ProcessorOpsSpec extends SparkSpec {
       .toDF("s")
     val diff = inputs.select(
       ParseStage.parseSeverity(col("s")).as("fast"),
-      ParseStage.parseSeverityCase(col("s")).as("slow"))
+      ProcessorOpsSpec.parseSeverityCase(col("s")).as("slow"))
       .as[(Int, Int)].collect()
     assert(diff.nonEmpty && diff.forall { case (f, h) => f == h })
   }
@@ -298,12 +300,6 @@ class ProcessorOpsSpec extends SparkSpec {
     assert(partial.columns.toSeq == Seq("b", "x", "z"))
     val down = translate(up, family, "1.10.0", "1.0.0")
     assert(down.columns.toSeq == df.columns.toSeq) // round-trip identity
-    // map-typed attributes: one transform_keys pass
-    val attrs = Seq(1).toDF("i").select(map(lit("a"), lit("v1"), lit("z"), lit("v2")).as("m"))
-    val keys = attrs.select(map_keys(
-      translateAttrs(col("m"), family, "1.0.0", "1.10.0")).as("k"))
-      .as[Seq[String]].head()
-    assert(keys.toSet == Set("d", "z"))
     // same-version translation is a no-op
     assert(translate(df, family, "1.1.0", "1.1.0").columns.toSeq == df.columns.toSeq)
   }
@@ -321,15 +317,6 @@ class ProcessorOpsSpec extends SparkSpec {
     val swapped = translate(df, swapFam, "1.0.0", "2.0.0")
     assert(swapped.columns.toSeq == Seq("b", "a"))
     assert(swapped.select("a").head().getInt(0) == 2) // values followed the swap
-    // map-typed attrs: same semantics through transform_keys
-    val attrs = Seq(1).toDF("i")
-      .select(map(lit("a"), lit("v1"), lit("b"), lit("v2")).as("m"))
-    val m = attrs.select(translateAttrs(col("m"), swapFam, "1.0.0", "2.0.0").as("t"))
-      .head().getMap[String, String](0).toMap
-    assert(m == Map("b" -> "v1", "a" -> "v2"))
-    val m2 = attrs.select(translateAttrs(col("m"), chainFam, "1.0.0", "2.0.0").as("t"))
-      .head().getMap[String, String](0).toMap
-    assert(m2 == Map("b" -> "v1", "c" -> "v2"))
   }
 
   test("schema translation: a rename landing on an untouched key OVERWRITES it") {
@@ -342,18 +329,6 @@ class ProcessorOpsSpec extends SparkSpec {
     val up = translate(df, fam, "1.0.0", "2.0.0")
     assert(up.columns.toSeq == Seq("b", "z"))
     assert(up.select("b").head().getInt(0) == 1) // a's value won
-    // map-typed attrs: same overwrite, value-dependent (only when the
-    // SOURCE key is present in the row's map)
-    val both = Seq(1).toDF("i")
-      .select(map(lit("a"), lit("va"), lit("b"), lit("vb")).as("m"))
-    val got = both.select(translateAttrs(col("m"), fam, "1.0.0", "2.0.0").as("t"))
-      .head().getMap[String, String](0).toMap
-    assert(got == Map("b" -> "va"))
-    // source absent → untouched target survives with ITS value
-    val onlyB = Seq(1).toDF("i").select(map(lit("b"), lit("vb")).as("m"))
-    val kept = onlyB.select(translateAttrs(col("m"), fam, "1.0.0", "2.0.0").as("t"))
-      .head().getMap[String, String](0).toMap
-    assert(kept == Map("b" -> "vb"))
     // a non-numeric version component errors WITH the version string
     val bad = intercept[IllegalArgumentException] { versionKey("1.0.0-rc1") }
     assert(bad.getMessage.contains("1.0.0-rc1"))
@@ -380,8 +355,8 @@ class ProcessorOpsSpec extends SparkSpec {
     assert(twice("redaction.ignored.count") == "1")
     // declarative rendering agrees (it map_concat's audits — duplicate
     // keys would throw DUPLICATED_MAP_KEY here before the fix)
-    val twiceDecl = df.select(Redaction.redactAttrsDeclarative(
-      Redaction.redactAttrsDeclarative(col("attrs"), cfg), cfg).as("r"))
+    val twiceDecl = df.select(ProcessorOpsSpec.redactAttrsDeclarative(
+      ProcessorOpsSpec.redactAttrsDeclarative(col("attrs"), cfg), cfg).as("r"))
       .head().getMap[String, String](0).toMap
     assert(twiceDecl == twice)
   }
@@ -397,5 +372,96 @@ class ProcessorOpsSpec extends SparkSpec {
     val again = ParseStage.dropRatioFilter(df, col("kind") === "drop", 0.25, col("id"))
       .filter(col("kind") === "drop").count()
     assert(again == dropKept)
+  }
+}
+
+object ProcessorOpsSpec {
+  private val RedactedKeys = "redaction.redacted.keys"
+  private val RedactedCount = "redaction.redacted.count"
+  private val MaskedKeys = "redaction.masked.keys"
+  private val MaskedCount = "redaction.masked.count"
+  private val IgnoredCount = "redaction.ignored.count"
+
+  /** Round-2 window rendering — kept as the differential oracle for
+    * [[SpanMetrics.callsWithExemplars]]: bounds memory per group before the collect,
+    * but partitions the FULL span set by the dimension key and sorts it,
+    * which serializes hot groups at scale. */
+  def callsWithExemplarsWindowed(spans: DataFrame, dims: Seq[String], durCol: String,
+                                 idCol: String, maxPerDataPoint: Int): DataFrame = {
+    val keys = dims.map(col)
+    val byKey = Window.partitionBy(keys: _*)
+    // rank by the SAME bigint-truncated duration the aggregator
+    // receives — ordering by the raw column would select different
+    // exemplars for fractional durations (5.7 outranking 5.2 here while
+    // the aggregator sees the 5===5 tie and breaks on id), breaking the
+    // frame-equality contract between the two renderings
+    val w = byKey.orderBy(col(durCol).cast("bigint").desc, col(idCol).desc)
+    spans
+      .withColumn("_rn", row_number().over(w))
+      .withColumn("calls", count(lit(1)).over(byKey))
+      .withColumn("sum_dur", sum(durCol).over(byKey))
+      .filter(col("_rn") <= maxPerDataPoint)
+      .groupBy((keys :+ col("calls") :+ col("sum_dur")): _*)
+      .agg(sort_array(collect_list(struct(
+        col(durCol).cast("bigint").as("value"), col(idCol).as("span_id"))), asc = false)
+        .as("exemplars"))
+      .select((keys :+ col("calls") :+ col("sum_dur") :+ col("exemplars")): _*)
+  }
+
+  /** Declarative map_filter/transform_values rendering of
+    * [[Redaction.redactAttrs]] (differential oracle — identical semantics): ~10
+    * interpreted-lambda passes over the map per row, NOT for hot paths. */
+  def redactAttrsDeclarative(m: Column, cfg: Redaction.Config): Column = {
+    def isIgnored(k: Column): Column =
+      if (cfg.ignoredKeys.isEmpty) lit(false) else k.isin(cfg.ignoredKeys: _*)
+    def isAllowed(k: Column): Column =
+      if (cfg.allowAllKeys) lit(true)
+      else k.isin((cfg.allowedKeys ++ Redaction.AuditKeys): _*)
+    def matchesBlocked(v: Column): Column =
+      if (cfg.blockedValues.isEmpty) lit(false)
+      else cfg.blockedValues.map(v.rlike).reduce(_ || _)
+
+    // drop STALE audit attributes first: re-redacting already-redacted
+    // data (the processor at two pipeline stages) would otherwise carry
+    // the old audit entries into maskedPart and map_concat them with
+    // this pass's same-keyed audits → DUPLICATED_MAP_KEY at runtime;
+    // this pass's audit REPLACES the previous one (the reference
+    // upserts audit attrs — same observable result)
+    val base = map_filter(m, (k, _) => !k.isin(Redaction.AuditKeys: _*))
+    val ignoredPart = map_filter(base, (k, _) => isIgnored(k))
+    val allowedPart = map_filter(base, (k, _) => !isIgnored(k) && isAllowed(k))
+    val deletedKeys = sort_array(map_keys(
+      map_filter(base, (k, _) => !isIgnored(k) && !isAllowed(k))))
+    val maskedKeys = sort_array(map_keys(
+      map_filter(allowedPart, (_, v) => matchesBlocked(v))))
+    val maskedPart = transform_values(allowedPart, (_, v) =>
+      cfg.blockedValues.foldLeft(v)((acc, re) => regexp_replace(acc, re, "****")))
+    val ignoredCount = size(map_entries(ignoredPart))
+
+    // typed empty map<string,string> (bare map() would be map<null,null>
+    // and map_concat would reject the mix)
+    val emptyMap = map_filter(m, (_, _) => lit(false))
+    def audit(cond: Column, key: String, value: Column): Column =
+      when(cond, map(lit(key), value.cast("string"))).otherwise(emptyMap)
+
+    val debugOn = cfg.summary == "debug"
+    val infoOn = cfg.summary == "info" || debugOn
+    val audits = Seq(
+      if (debugOn) audit(size(deletedKeys) > 0, RedactedKeys, array_join(deletedKeys, ",")) else emptyMap,
+      if (infoOn) audit(size(deletedKeys) > 0, RedactedCount, size(deletedKeys)) else emptyMap,
+      if (debugOn) audit(size(maskedKeys) > 0, MaskedKeys, array_join(maskedKeys, ",")) else emptyMap,
+      if (infoOn) audit(size(maskedKeys) > 0, MaskedCount, size(maskedKeys)) else emptyMap,
+      if (infoOn) audit(ignoredCount > 0, IgnoredCount, ignoredCount) else emptyMap)
+
+    (Seq(ignoredPart, maskedPart) ++ audits).reduce(map_concat(_, _))
+  }
+
+  /** CASE-chain rendering of [[ParseStage.parseSeverity]] (differential oracle for
+    * the hash-lookup expression): up to ~90 string comparisons per row. */
+  def parseSeverityCase(c: Column): Column = {
+    val lc = lower(c)
+    ParseStage.severityAliases.foldLeft(lit(0)) { case (acc, (name, num)) =>
+      when(lc === name, lit(num)).otherwise(acc)
+    }.as("severity_num")
   }
 }

@@ -32,17 +32,4 @@ class TailSamplingSpec extends SparkSpec {
     assert(got == expect)
   }
 
-  test("policy combinators: and / or / probabilistic determinism") {
-    val stats = TailSampling.convStats(parsed).cache()
-    val a = stats.filter(TailSampling.and(
-      TailSampling.errorPolicy, TailSampling.turnCountPolicy(2, 10000))).count()
-    val o = stats.filter(TailSampling.or(
-      TailSampling.errorPolicy, TailSampling.turnCountPolicy(2, 10000))).count()
-    assert(a <= o)
-    val p1 = stats.filter(TailSampling.probabilisticPolicy(500))
-      .select("conv_id").collect().map(_.getString(0)).toSet
-    val p2 = stats.filter(TailSampling.probabilisticPolicy(500))
-      .select("conv_id").collect().map(_.getString(0)).toSet
-    assert(p1 == p2, "probabilistic policy is not deterministic")
-  }
 }

@@ -19,14 +19,14 @@ class GoldenOttlSpec extends SparkSpec {
   }
 
   test("""ExtractPatterns("aa123bb", "(?P<numbers>\d+)") → {numbers: 123} — PARTIAL match (e2e_test.go:319)""") {
+    // the product's ExtractPatterns is the parse bank's one-pass
+    // extractor, which takes Go `(?P<x>` group syntax and finds the
+    // first partial match
+    val bank = Seq(graft.model.PipelineConfig.PatternSpec("p", "(?P<numbers>\\d+)", Seq("numbers")))
     val m = Seq(Tuple1("x")).toDF("dummy")
-      .select(Ottl.extractPatterns(lit("aa123bb"), "(?P<numbers>\\d+)", Seq("numbers")).as("r"))
+      .select(graft.parse.ParseStage.extract(lit("aa123bb"), bank).getField("fields").as("r"))
       .collect().head.getMap[String, String](0).toMap
     assert(m == Map("numbers" -> "123"))
-  }
-
-  test("""Base64Decode("cGFzcw==") == "pass" (e2e_test.go:253)""") {
-    assert(eval1[String](Ottl.base64Decode(lit("cGFzcw=="))) == "pass")
   }
 
   test("""Concat(["A","B"], ":") == "A:B" (e2e_test.go:259)""") {
@@ -41,7 +41,8 @@ class GoldenOttlSpec extends SparkSpec {
   }
 
   test("""Hour(Time("12", "%H")) == 12 (e2e_test.go:332)""") {
-    assert(eval1[Int](Ottl.hourOf(Ottl.timeParse(lit("12"), "HH"))) == 12)
+    // Time(...) compiles to try_to_timestamp (ExprLang's "Time" converter)
+    assert(eval1[Int](Ottl.hourOf(try_to_timestamp(lit("12"), lit("HH")))) == 12)
   }
 
   test("""Hours(Duration("90m")) == 1.5 (e2e_test.go:338)""") {
@@ -50,26 +51,20 @@ class GoldenOttlSpec extends SparkSpec {
 
   test("duration-unit family returns Go time.Duration accessor types (func_hours.go …)") {
     assert(eval1[Double](Ottl.durationHours(lit("90m"))) == 1.5)
-    assert(eval1[Double](Ottl.durationMinutes(lit("90s"))) == 1.5)
     assert(eval1[Double](Ottl.durationSeconds(lit("1h2m3s"))) == 3723.0)
     assert(eval1[Long](Ottl.durationMillis(lit("1.5s"))) == 1500L)
-    assert(eval1[Long](Ottl.durationMicros(lit("1.5s"))) == 1500000L)
     assert(eval1[Long](Ottl.durationNanos(lit("1.5s"))) == 1500000000L)
     // double-representation hazard: 0.3*1e9 = 2.9999999999999994e8 — a
     // bare bigint cast truncated this to 299999999; Go's exact integer
     // Duration reads 300000000 (round-at-nanos fix)
     assert(eval1[Long](Ottl.durationNanos(lit("0.3s"))) == 300000000L)
-    assert(eval1[Long](Ottl.durationMicros(lit("0.3s"))) == 300000L)
     // ...while Go TRUNCATES genuine sub-unit remainders:
     // Duration("0.0015s").Milliseconds() == 1, not 2
     assert(eval1[Long](Ottl.durationMillis(lit("0.0015s"))) == 1L)
-    assert(eval1[Long](Ottl.durationMicros(lit("0.0000015s"))) == 1L)
     // sub-second units (time.ParseDuration grammar): "100ms" is 0.1 s,
     // NOT 100 minutes — the minutes regex must not grab the 'm' of "ms"
     assert(eval1[Double](Ottl.durationSeconds(lit("100ms"))) == 0.1)
     assert(eval1[Long](Ottl.durationMillis(lit("100ms"))) == 100L)
-    assert(eval1[Long](Ottl.durationMicros(lit("1.5ms"))) == 1500L)
-    assert(eval1[Long](Ottl.durationMicros(lit("2us"))) == 2L)
     assert(eval1[Long](Ottl.durationNanos(lit("300ns"))) == 300L)
     // fractional non-second units parse whole ("1.5m" is 90 s, not 5 min)
     assert(eval1[Double](Ottl.durationSeconds(lit("1.5m"))) == 90.0)
@@ -92,41 +87,17 @@ class GoldenOttlSpec extends SparkSpec {
       .getTime == 1500L)
   }
 
-  test("Now() is plan-time-fixed: all rows in a batch agree (func_now.go)") {
-    val two = Seq(1, 2).toDF("i")
-      .select(Ottl.now().as("t")).collect().map(_.getTimestamp(0)).toSeq
-    assert(two.head != null && two.head == two(1))
-  }
-
-  test("replace_all_matches: whole-value glob over map values (func_replace_all_matches_test.go)") {
-    val m = map(lit("k1"), lit("hello world"), lit("k2"), lit("goodbye"))
-    val out = Seq(Tuple1("x")).toDF("dummy")
-      .select(Ottl.replaceAllMatches(m, "hello*", "hello {universe}").as("r"))
-      .collect().head.getMap[String, String](0).toMap
-    assert(out == Map("k1" -> "hello {universe}", "k2" -> "goodbye"))
-  }
-
-  test("IsBool/IsInt/IsDouble/IsString/IsMap/IsList on variant values (func_is_bool.go …)") {
-    def v(json: String) = parse_json(lit(json))
-    assert(eval1[Boolean](Ottl.isBool(v("true"))))
-    assert(eval1[Boolean](Ottl.isInt(v("1"))))
-    assert(eval1[Boolean](Ottl.isDouble(v("1.5"))))
-    assert(eval1[Boolean](Ottl.isString(v("\"abc\""))))
-    assert(eval1[Boolean](Ottl.isMap(v("""{"a":1}"""))))
-    assert(eval1[Boolean](Ottl.isList(v("[1,2]"))))
-    // strings stay strings: IsDouble("1.5") is false like the Go type switch
-    assert(!eval1[Boolean](Ottl.isDouble(v("\"1.5\""))))
-    assert(!eval1[Boolean](Ottl.isInt(v("true"))))
-  }
+  private def converter(expr: String): Column =
+    graft.expr.ExprLang.value(expr, graft.expr.ExprLang.transcriptResolver(Set.empty))
 
   test("""Int coercion family: Int(1.0)=1, Int("1")=1 (e2e_test.go:344-350)""") {
-    assert(eval1[Long](Ottl.toInt(lit(1.0))) == 1L)
-    assert(eval1[Long](Ottl.toInt(lit("1"))) == 1L)
+    assert(eval1[Long](converter("Int(1.0)")) == 1L)
+    assert(eval1[Long](converter("""Int("1")""")) == 1L)
   }
 
   test("""Double coercions: Double(1)=1.0, Double("1")=1.0 (e2e_test.go:289-307)""") {
-    assert(eval1[Double](Ottl.toDouble(lit(1))) == 1.0)
-    assert(eval1[Double](Ottl.toDouble(lit("1"))) == 1.0)
+    assert(eval1[Double](converter("Double(1)")) == 1.0)
+    assert(eval1[Double](converter("""Double("1")""")) == 1.0)
   }
 
   test("severity default mapping matches severity_builder.go + entry/severity.go exactly") {
@@ -141,14 +112,4 @@ class GoldenOttlSpec extends SparkSpec {
     }
   }
 
-  test("merge_maps insert/update/upsert against the e2e map shapes (e2e_test.go:126-143)") {
-    // target {flags: A}, source {bear: moose, flags: C}
-    val target = map(lit("flags"), lit("A"))
-    val source = map(lit("bear"), lit("moose"), lit("flags"), lit("C"))
-    def m(c: Column) = Seq(Tuple1("x")).toDF("dummy").select(c.as("r"))
-      .collect().head.getMap[String, String](0).toMap
-    assert(m(Ottl.mergeMaps(target, source, "insert")) == Map("flags" -> "A", "bear" -> "moose"))
-    assert(m(Ottl.mergeMaps(target, source, "update")) == Map("flags" -> "C"))
-    assert(m(Ottl.mergeMaps(target, source, "upsert")) == Map("flags" -> "C", "bear" -> "moose"))
-  }
 }

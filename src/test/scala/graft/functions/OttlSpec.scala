@@ -22,18 +22,13 @@ class OttlSpec extends SparkSpec {
       .collect().head.getMap[String, String](0).toMap
 
   test("editors: set / delete / keep / merge / limit / truncate") {
+    // merge_maps has no rendering: no config or query merges two maps
     assert(asMap(Ottl.setKey(attrs, "env", lit("dev")))("env") == "dev")
     assert(asMap(Ottl.setKey(attrs, "new", lit("v")))("new") == "v")
     assert(!asMap(Ottl.deleteKey(attrs, "secret")).contains("secret"))
     assert(asMap(Ottl.deleteMatchingKeys(attrs, "^sec.*")).keySet == Set("env", "team"))
     assert(asMap(Ottl.keepKeys(attrs, Seq("env"))).keySet == Set("env"))
     assert(asMap(Ottl.keepMatchingKeys(attrs, "^(env|team)$")).keySet == Set("env", "team"))
-    val src = map(lit("env"), lit("stage"), lit("extra"), lit("1"))
-    assert(asMap(Ottl.mergeMaps(attrs, src, "upsert"))
-      == Map("env" -> "stage", "team" -> "ml", "secret" -> "hunter2", "extra" -> "1"))
-    assert(asMap(Ottl.mergeMaps(attrs, src, "insert"))("env") == "prod")
-    assert(asMap(Ottl.mergeMaps(attrs, src, "update"))
-      == Map("env" -> "stage", "team" -> "ml", "secret" -> "hunter2"))
     assert(asMap(Ottl.limitMap(attrs, 2)).size == 2)
     assert(asMap(Ottl.truncateAll(attrs, 2)).values.forall(_.length <= 2))
   }
@@ -57,28 +52,37 @@ class OttlSpec extends SparkSpec {
 
   test("IsMatch / ExtractPatterns (the grok primitive)") {
     assert(eval1[Boolean](Ottl.isMatch(lit("v1.2.3"), "^v\\d+")))
-    val m = asMap(Ottl.extractPatterns(lit("id=42 name=x"),
+    // ExtractPatterns renders as the parse bank's one-pass extractor
+    val bank = Seq(graft.model.PipelineConfig.PatternSpec("kv",
       "^id=(?P<id>\\d+) name=(?P<name>\\w+)$", Seq("id", "name")))
+    val m = asMap(graft.parse.ParseStage.extract(lit("id=42 name=x"), bank).getField("fields"))
     assert(m == Map("id" -> "42", "name" -> "x"))
   }
 
   test("parse: json / csv / kv / base64") {
+    // ParseJSON renders as the parse stage's field lookup; base64
+    // decoding has no rendering (no config or query decodes base64)
     val j = Seq(Tuple1("""{"a": 1, "b": "x"}""")).toDF("s")
-      .select(Ottl.parseJson(col("s"), "a INT, b STRING").as("r"))
-      .select("r.a", "r.b").as[(Int, String)].head()
+      .select(graft.parse.ParseStage.parseJsonField(col("s"), "$.a").cast("int").as("a"),
+        graft.parse.ParseStage.parseJsonField(col("s"), "$.b").as("b"))
+      .as[(Int, String)].head()
     assert(j == ((1, "x")))
     val c = Seq(Tuple1("1,foo")).toDF("s")
-      .select(Ottl.parseCsv(col("s"), "a INT, b STRING").as("r"))
+      .select(graft.parse.ParseStage.parseCsv(col("s"), "a INT, b STRING").as("r"))
       .select("r.a", "r.b").as[(Int, String)].head()
     assert(c == ((1, "foo")))
     assert(asMap(Ottl.parseKeyValue(lit("k1=v1 k2=v2"))) == Map("k1" -> "v1", "k2" -> "v2"))
-    assert(eval1[String](Ottl.base64Decode(lit("aGVsbG8="))) == "hello")
   }
 
   test("ParseXML: element text and attribute by xpath") {
-    val xml = lit("""<e id="7"><t>view</t></e>""")
-    assert(eval1[String](Ottl.parseXmlString(xml, "/e/t")) == "view")
-    assert(eval1[Long](Ottl.parseXmlLong(xml, "/e/@id")) == 7L)
+    // p39 reads what the `/e/t` and `/e/@id` xpaths name, in one
+    // from_xml pass over `<e id="event_id"><t>event_type</t></e>`
+    val dir = java.nio.file.Files.createTempDirectory("graft_p39").toString
+    Seq((7L, "view"), (8L, "click")).toDF("event_id", "event_type")
+      .write.parquet(s"$dir/events.parquet")
+    val got = graft.SparkEntry.queries("p39_parse_xml")(spark, dir)
+      .select("event_id", "t", "id").as[(Long, String, Long)].collect().toSet
+    assert(got == Set((7L, "view", 7L), (8L, "click", 8L)))
   }
 
   test("ParseXML: single-pass from_xml struct (element + attribute)") {
@@ -99,7 +103,7 @@ class OttlSpec extends SparkSpec {
   }
 
   test("time: parse, truncate, unix epoch family, duration") {
-    val t = Ottl.timeParse(lit("2024-03-05 06:07:08"), "yyyy-MM-dd HH:mm:ss")
+    val t = to_timestamp(lit("2024-03-05 06:07:08"), "yyyy-MM-dd HH:mm:ss")
     assert(eval1[Long](Ottl.unixSeconds(t)) == 1709618828L)
     assert(eval1[Long](Ottl.unixMillis(t)) == 1709618828000L)
     assert(eval1[java.sql.Timestamp](Ottl.truncateTime(t, "hour")).toString
@@ -109,13 +113,15 @@ class OttlSpec extends SparkSpec {
   }
 
   test("numeric: casts and log") {
-    assert(eval1[Long](Ottl.toInt(lit("42"))) == 42L)
-    assert(eval1[Double](Ottl.toDouble(lit("2.5"))) == 2.5)
+    def converter(expr: String): Column =
+      graft.expr.ExprLang.value(expr, graft.expr.ExprLang.transcriptResolver(Set.empty))
+    assert(eval1[Long](converter("""Int("42")""")) == 42L)
+    assert(eval1[Double](converter("""Double("2.5")""")) == 2.5)
     assert(math.abs(eval1[Double](Ottl.ottlLog(lit(math.E))) - 1.0) < 1e-12)
   }
 
   test("trace/span id hex decode") {
-    val b = eval1[Array[Byte]](Ottl.traceIdFromHex(lit("00ff")))
+    val b = eval1[Array[Byte]](Ottl.spanIdFromHex(lit("00ff")))
     assert(b.toSeq == Seq(0.toByte, 0xff.toByte))
   }
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -23,10 +24,14 @@ class DedupSpec extends SparkSpec {
   }
 
   test("exactByHash groups identical texts") {
-    val groups = Dedup.exactByHash(corpus, "text", "doc_id")
+    // d01 is the exact dedup: one group per distinct text, its first
+    // doc kept
+    val dir = java.nio.file.Files.createTempDirectory("graft_d01").toString
+    corpus.write.parquet(s"$dir/documents.parquet")
+    val groups = graft.SparkEntry.queries("d01_dedup_exact")(spark, dir)
     assert(groups.count() == 40) // 41 docs, one exact dup
-    val dupGroup = groups.filter(col("n_dups") === 2).collect()
-    assert(dupGroup.length == 1 && dupGroup(0).getAs[Long]("keep_id") == 0L)
+    val dupGroup = groups.filter(col("n") === 2).collect()
+    assert(dupGroup.length == 1 && dupGroup(0).getAs[Long]("first_doc") == 0L)
   }
 
   test("brute-force jaccard finds exactly the planted near-dup pairs") {
@@ -133,12 +138,6 @@ class DedupSpec extends SparkSpec {
     assert(edges.forall { case (f, h) => f == h })
   }
 
-  test("simhash blocked near-dup join finds exact dups") {
-    val out = Dedup.nearDupSimhash(corpus, "doc_id", "text", maxHamming = 3)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(out.contains((0L, 200L)))
-  }
-
   test("embedding near-dup: LSH finds planted near-identical vectors") {
     val rnd = new scala.util.Random(13)
     val base = Seq.tabulate(100)(i =>
@@ -164,7 +163,7 @@ class DedupSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     for (i <- 0 until 5) assert(summary(i.toLong) == 2L,
       s"group $i: ${summary.get(i.toLong)}")
-    val deletes = Dedup.dedupDeleteList(groups)
+    val deletes = DedupSpec.dedupDeleteList(groups)
       .as[(Long, Long)].collect().toSet
     assert((0 until 5).map(i => (500L + i, i.toLong)).toSet.subsetOf(deletes))
   }
@@ -412,7 +411,7 @@ class DedupSpec extends SparkSpec {
     val summary = Dedup.dedupGroupSummary(groups)
       .as[(Long, Long)].collect().toMap
     assert(summary == Map(1L -> 4L, 5L -> 2L, 8L -> 3L, 20L -> 7L))
-    val deletes = Dedup.dedupDeleteList(groups).as[(Long, Long)].collect().toSet
+    val deletes = DedupSpec.dedupDeleteList(groups).as[(Long, Long)].collect().toSet
     assert(!deletes.exists { case (del, _) => Set(1L, 5L, 8L, 20L)(del) })
     assert(deletes.size == m.size - 4) // everything but the 4 survivors
   }
@@ -629,4 +628,11 @@ class DedupSpec extends SparkSpec {
       .as[(String, Long, Long, Long)].collect().toSet
     assert(str == want)
   }
+}
+
+object DedupSpec {
+  /** The rows to DELETE: every group member except the survivor. */
+  def dedupDeleteList(groups: DataFrame): DataFrame =
+    groups.filter(col("id") =!= col("group"))
+      .select(col("id").as("delete_id"), col("group").as("keep_id"))
 }

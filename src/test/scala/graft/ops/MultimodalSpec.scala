@@ -33,7 +33,7 @@ class MultimodalSpec extends SparkSpec {
   test("synth media matches the declared schema (names + types)") {
     def shape(s: org.apache.spark.sql.types.StructType) =
       s.fields.map(f => (f.name, f.dataType.sql.replace(" NOT NULL", ""))).toSeq
-    assert(shape(media.schema) == shape(Multimodal.mediaSchema))
+    assert(shape(media.schema) == shape(MultimodalSpec.mediaSchema))
   }
 
   test("decodeFeatures: batch shape, dimension, determinism") {
@@ -49,19 +49,6 @@ class MultimodalSpec extends SparkSpec {
       == again.map(_.getSeq[Float](3).toSeq).toSeq)
     // n_bytes round-trips the blob length
     assert(out.map(_.getAs[Int]("n_bytes")).toSeq == Seq(17, 12, 5))
-  }
-
-  test("resize stub caps dimensions; frame sampling explodes video rows") {
-    val resized = Multimodal.resizeStub(media, 100, 100)
-      .select("meta.width", "meta.height", "meta.codec").collect()
-    assert(resized.forall(r => r.getInt(0) <= 100 && r.getInt(1) <= 100))
-    assert(resized.forall(_.getString(2).endsWith("+resized")))
-    val frames = Multimodal.frameSampleStub(media, 1000)
-    val perVideo = frames.groupBy("media_id").count().collect()
-    assert(perVideo.nonEmpty) // at least one video row in the synth corpus
-    val f = frames.orderBy("media_id", "frame_idx").limit(2)
-      .select("frame_idx", "frame_at_ms").collect()
-    assert(f(0).getInt(0) == 0 && f(0).getAs[Number]("frame_at_ms").longValue == 0L)
   }
 
   test("metadata-only stats never read the blob column (columnar pruning)") {
@@ -110,4 +97,20 @@ class MultimodalSpec extends SparkSpec {
     assert(!mediaScan.contains("bytes"),
       s"blob column leaked into the media scan: $mediaScan")
   }
+}
+
+object MultimodalSpec {
+  import org.apache.spark.sql.types._
+
+  val mediaSchema: StructType = StructType(Seq(
+    StructField("media_id", LongType, nullable = false),
+    StructField("modality", StringType, nullable = false), // image|audio|video
+    StructField("bytes", BinaryType, nullable = false),
+    StructField("meta", StructType(Seq(
+      StructField("width", IntegerType, nullable = true),
+      StructField("height", IntegerType, nullable = true),
+      StructField("dur_ms", IntegerType, nullable = true),
+      StructField("codec", StringType, nullable = true)
+    )), nullable = false)
+  ))
 }

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 class SketchesSpec extends SparkSpec {
@@ -25,7 +25,7 @@ class SketchesSpec extends SparkSpec {
   test("kmv: estimator formula replayed from the declarative rendering") {
     val docs = corpus(900, 2)
     val fast = Sketches.distinctKmv(docs, "text", k = 64).collect()(0)
-    val slow = Sketches.distinctKmvDeclarative(docs, "text", k = 64).collect()(0)
+    val slow = SketchesSpec.distinctKmvDeclarative(docs, "text", k = 64).collect()(0)
     assert(fast === slow)
     assert(fast.getInt(0) === 64) // sketch full
     val kth = fast.getLong(1)
@@ -178,5 +178,24 @@ class SketchesSpec extends SparkSpec {
     val onlyNull = Seq((1L, null: String)).toDF("doc_id", "text")
     val out = Sketches.cmsTokenCounts(onlyNull, "text", Seq("x")).collect()
     assert(out.toSeq === Seq(Row("x", 0L, 0L)))
+  }
+}
+
+object SketchesSpec {
+  /** Declarative rendering of the same sketch (differential oracle for
+    * the bounded aggregator): global distinct + ascending sort + limit.
+    * Exact but unbounded — a full distinct shuffle — kept ONLY to pin
+    * the aggregator's semantics in SketchesSpec. */
+  def distinctKmvDeclarative(docs: DataFrame, textCol: String,
+                             k: Int = 256): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val ks = docs.filter(col(textCol).isNotNull)
+      .select(TextAnalysis.fingerprint(col(textCol)).as("hv"))
+      .distinct().orderBy(col("hv").asc).limit(k)
+      .as[Long].collect().toSeq // bounded: ≤k longs, test-only path
+    val arr = typedLit(ks)
+    val (nKept, kthHash, estDistinct) = Sketches.kmvEstimate(arr, k)
+    docs.sparkSession.range(1).select(nKept, kthHash, estDistinct)
   }
 }

@@ -68,12 +68,6 @@ class SpanOpsSpec extends SparkSpec {
       Seq("svc", "op"))).getString(0) == "authlogin")
   }
 
-  test("set_status: error keeps description, ok/unset clear it (span.go:228-244)") {
-    assert(SpanOps.setStatus("Error", "boom")._2.toString.contains("boom"))
-    val (code, msg) = SpanOps.setStatus("Ok", "ignored")
-    assert(one(code).getString(0) == "Ok" && one(msg).getString(0) == "")
-  }
-
   test("to_attributes rejects NESTED named groups at construction, not per row") {
     // the {attr} rewrite is ill-defined for overlapping spans (the Go
     // reference panics at match time on oldName[idx:start] with

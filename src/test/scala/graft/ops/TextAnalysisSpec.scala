@@ -24,13 +24,17 @@ class TextAnalysisSpec extends SparkSpec {
   test("token counts: whitespace vs BPE-ish") {
     val r = Seq(Tuple1("hello, world! it's 42"))
       .toDF("text")
-      .select(
-        TextAnalysis.tokenCountWhitespace(col("text")).as("ws"),
-        TextAnalysis.tokenCountBpeIsh(col("text")).as("bpe"))
-      .as[(Int, Int)].head()
-    assert(r._1 == 4)
-    // hello , world ! it ' s 42 → 8
-    assert(r._2 == 8)
+      .select(TextAnalysis.tokenCountWhitespace(col("text")).as("ws"))
+      .as[Int].head()
+    assert(r == 4)
+    // the BPE count is the merge encoder's: "the band is on the stand"
+    // → [the][ ][b][and][ ][i][s][ ][on][ ][the][ ][st][and] is 14
+    // symbols under the demo merges, against 6 whitespace tokens
+    val docs = Seq((1L, "the band is on the stand")).toDF("doc_id", "text")
+    val ws = docs.select(TextAnalysis.tokenCountWhitespace(col("text"))).as[Int].head()
+    val bpe = TextAnalysis.bpeEncodeCounts(docs, "doc_id", "text", TextAnalysis.bpeDemoMerges)
+      .select("n_bpe_tokens").as[Long].head()
+    assert(ws == 6 && bpe == 14)
   }
 
   test("repetition metrics: hand-computed fractions and the Gopher cut") {

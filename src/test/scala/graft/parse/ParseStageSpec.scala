@@ -67,7 +67,7 @@ class ParseStageSpec extends SparkSpec {
   }
 
   test("MultiPatternExtract works in both codegen and interpreted eval") {
-    val bank = Pipeline.patternBank
+    val bank = Pipeline.parseConfig.patterns
     val input = turns("CALL tool=bash args={\"k\": 1} dur_ms=5")
     // codegen path (default)
     val viaDf = input.select(ParseStage.extract(col("text"), bank).as("x"))

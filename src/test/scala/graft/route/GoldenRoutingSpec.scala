@@ -1,12 +1,12 @@
 package graft.route
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.model.PipelineConfig.{RouteSpec, RouteTable}
 
 /** Differential golden test against the reference's OWN routing-connector
-  * test (`/root/reference/connector/routingconnector/logs_test.go:78-232`,
+  * test (`connector/routingconnector/logs_test.go:78-232`,
   * TestLogsAreCorrectlySplitPerResourceAttributeWithOTTL): the exact
   * routing table —
   *   route0: IsMatch(X-Tenant, ".*acme")        → pipeline logs0
@@ -15,20 +15,44 @@ import graft.SparkSpec
   *   default pipeline: logsDefault
   * — and each of the five sub-cases' expected sink contents. OTTL
   * IsMatch is regex containment (rlike).
+  *
+  * The routing verdict is the product's [[RouteStage.sinksAndStream]]
+  * (one sink per route); a route's pipeline list is the config-side
+  * fan of that sink, applied here.
   */
 class GoldenRoutingSpec extends SparkSpec {
   import spark.implicits._
 
-  private def routesFor(df: DataFrame) = Seq(
-    (col("tenant").rlike(".*acme"), Seq("logs0")),
-    (col("tenant").rlike("_acme"), Seq("logs1")),
-    (col("tenant") === "ecorp", Seq("default", "logs0")))
+  private def table(matchOnce: Boolean) = RouteTable(Seq(
+    RouteSpec("route0", col("tenant").rlike(".*acme")),
+    RouteSpec("route1", col("tenant").rlike("_acme")),
+    RouteSpec("route2", col("tenant") === "ecorp")),
+    defaultName = "default", matchOnce = matchOnce)
+
+  private val pipelines = Map(
+    "route0" -> Seq("logs0"),
+    "route1" -> Seq("logs1"),
+    "route2" -> Seq("default", "logs0"),
+    "default" -> Seq("default"))
+
+  /** Pipeline → the payloads it received, each delivery listed once;
+    * pipelines that received nothing are left out. */
+  private def deliveries(rows: Seq[String], matchOnce: Boolean): Map[String, Seq[String]] = {
+    val (sinks, _) = RouteStage.sinksAndStream(rows.toDF("tenant"), table(matchOnce))
+    sinks.toSeq
+      .flatMap { case (route, f) =>
+        val got = f.as[String].collect().toSeq
+        pipelines(route).map(_ -> got) }
+      .groupBy(_._1)
+      .map { case (p, hits) => p -> hits.flatMap(_._2).sorted }
+      .filter(_._2.nonEmpty)
+  }
 
   private def sinks(rows: Seq[String]): Map[String, Set[String]] = {
-    val df = rows.toDF("tenant")
-    RouteStage.fanOutPipelines(df, routesFor(df), Seq("default"))
-      .map { case (p, f) => p -> f.as[String].collect().toSet }
-      .filter(_._2.nonEmpty)
+    val out = deliveries(rows, matchOnce = false)
+    // a payload reaches each of its pipelines exactly once
+    out.foreach { case (p, got) => assert(got.distinct == got, s"$p got duplicates: $got") }
+    out.map { case (p, got) => p -> got.toSet }
   }
 
   test("logs matched by no expressions → default only") {
@@ -56,20 +80,16 @@ class GoldenRoutingSpec extends SparkSpec {
   }
 
   test("one expression routed to multiple pipelines → delivered once to each") {
-    val out = sinks(Seq("ecorp"))
+    val out = deliveries(Seq("ecorp"), matchOnce = false)
     assert(out == Map(
-      "default" -> Set("ecorp"),
-      "logs0" -> Set("ecorp")))
+      "default" -> Seq("ecorp"),
+      "logs0" -> Seq("ecorp")))
   }
 
   // ---- match_once variant (logs_test.go:233-384) ----
 
-  private def sinksOnce(rows: Seq[String]): Map[String, Set[String]] = {
-    val df = rows.toDF("tenant")
-    RouteStage.matchOncePipelines(df, routesFor(df), Seq("default"))
-      .map { case (p, f) => p -> f.as[String].collect().toSet }
-      .filter(_._2.nonEmpty)
-  }
+  private def sinksOnce(rows: Seq[String]): Map[String, Set[String]] =
+    deliveries(rows, matchOnce = true).map { case (p, got) => p -> got.toSet }
 
   test("match_once: multi-expression match goes only to the FIRST route's pipeline") {
     // '_acme' matches routes 0 and 1; match_once → logs0 only

@@ -57,7 +57,7 @@ class LineageSpec extends SparkSpec {
     val fp2 = Lineage.fingerprintOf("pipeline", "v2")
     val data = Map("alpha" -> Seq((1, "a")).toDF("id", "v"))
     assert(Lineage.runResumable(spark, data, out, fp1).executed == Seq("alpha"))
-    assert(Lineage.isCommitted(out, "alpha", fp1))
+    assert(Lineage.isCommitted(out, "alpha", fp1, spark.sparkContext.hadoopConfiguration))
     // the v2 run's write fails mid-overwrite (the kill window): the v1
     // manifest must already be gone, or a rollback to v1 would skip the
     // sink and ship the destroyed/partial data as committed under v1
@@ -65,7 +65,7 @@ class LineageSpec extends SparkSpec {
       .withColumn("boom", expr("raise_error('killed mid-overwrite')")))
     val r2 = Lineage.runResumable(spark, poisoned, out, fp2)
     assert(r2.failed.keySet == Set("alpha"))
-    assert(!Lineage.isCommitted(out, "alpha", fp1),
+    assert(!Lineage.isCommitted(out, "alpha", fp1, spark.sparkContext.hadoopConfiguration),
       "stale v1 manifest survived a failed v2 overwrite")
     // the v1 rerun re-executes (not skips) and restores a committed state
     val r3 = Lineage.runResumable(spark, data, out, fp1)

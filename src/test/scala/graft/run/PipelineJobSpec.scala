@@ -3,6 +3,7 @@ package graft.run
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
 
+import org.apache.spark.graftspec.ListenerBusProbe
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -119,6 +120,8 @@ class PipelineJobSpec extends SparkSpec {
     val broken = flagshipFile(_.replace("""where: 'role == "user"'""",
       """where: 'IsMatch(body, "(")'"""))
     intercept[Exception](PipelineJob.run(spark, inDir, out, Seq(broken)))
+    assert(ListenerBusProbe.registered[MetricsListener](spark.sparkContext).isEmpty,
+      "the failed run left its MetricsListener on the session's listener bus")
     val sinks = new java.io.File(s"$out/sinks")
     assert(!sinks.exists() || sinks.listFiles().forall(!_.getName.startsWith("route=")),
       "config B's failed write should have destroyed config A's fan-out")

@@ -1,6 +1,6 @@
 package graft.run
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
@@ -59,6 +59,22 @@ class StreamingJobSpec extends SparkSpec {
       Pipeline.parseEnrich(spark, part1.toDS().toDF()), Pipeline.routeTable).count()
     assert(wantRows > 0 && gotRows == wantRows,
       s"post-empty-start drain must fan out like batch: got $gotRows want $wantRows")
+  }
+
+  test("a query that fails to start stops the queries started before it") {
+    val inDir = Files.createTempDirectory("graft_sj_fail_in").toString
+    part1.toDS().toDF().write.mode("append").parquet(inDir)
+    val outDir = Files.createTempDirectory("graft_sj_fail_out").toString
+    // a plain file where the counts query's checkpoint directory goes:
+    // the sinks query starts, then the counts query's start throws
+    Files.createDirectories(Paths.get(outDir, "_ck"))
+    Files.createFile(Paths.get(outDir, "_ck", "counts"))
+    try {
+      intercept[Exception](StreamingJob.start(spark, inDir, outDir, fileCfg = None,
+        windowDur = "1 hour", lateness = "10 minutes", once = false))
+      assert(spark.streams.active.isEmpty,
+        s"left running: ${spark.streams.active.map(_.name).toSeq}")
+    } finally spark.streams.active.foreach(_.stop())
   }
 
   test("a null role is skipped alike by the batch counts_<route> and the streaming counts") {

@@ -44,281 +44,6 @@ class StreamingPipelineSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("windowed KMV distinct estimate: finalized windows ≡ batch sketch per window") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Turn]
-    val est = StreamingPipeline.windowedDistinctKmv(
-      mem.toDF(), "text", "ts", "10 minutes", "5 minutes", k = 4)
-    val q = est.writeStream.format("memory").queryName("kmvw")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // window [0,10): 3 distinct texts (< k → exact); window [10,20):
-      // 6 distinct texts over 7 rows (> k → estimator path)
-      mem.addData(
-        turn("c1", 0, 1, "alpha"), turn("c1", 1, 2, "beta"),
-        turn("c1", 2, 3, "alpha"), turn("c2", 0, 4, "gamma"),
-        turn("c3", 0, 11, "t0"), turn("c3", 1, 12, "t1"),
-        turn("c3", 2, 13, "t2"), turn("c3", 3, 14, "t3"),
-        turn("c3", 4, 15, "t4"), turn("c3", 5, 16, "t5"),
-        turn("c3", 6, 17, "t0"))
-      q.processAllAvailable()
-      mem.addData(turn("c9", 0, 40, "closer")) // watermark past both windows
-      q.processAllAvailable()
-      val got = spark.table("kmvw")
-        .select("window_start", "n_kept", "est_distinct")
-        .as[(Timestamp, Int, Long)].collect().toSet
-      // the batch sketch over the same rows is the differential oracle
-      import org.apache.spark.sql.functions.lit
-      def batch(texts: Seq[String]) = {
-        val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-          .toDF("doc_id", "text")
-        val r = graft.ops.Sketches.distinctKmv(df, "text", k = 4).collect()(0)
-        (r.getInt(0), r.getLong(2))
-      }
-      val w0 = batch(Seq("alpha", "beta", "alpha", "gamma"))
-      val w1 = batch(Seq("t0", "t1", "t2", "t3", "t4", "t5", "t0"))
-      assert(got.contains((ts(0), w0._1, w0._2)), s"got $got")
-      assert(got.contains((ts(10), w1._1, w1._2)), s"got $got")
-      assert(w0 === (3, 3L))  // below k: exact
-      assert(w1._1 === 4)     // at k: estimator path exercised
-    } finally q.stop()
-  }
-
-  test("streaming spanmetrics: windowed delta histograms finalize per bucket") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Timestamp, String, Long)]
-    val metrics = StreamingPipeline.spanMetricsStream(
-      mem.toDF().toDF("ts", "tool", "dur_ms"),
-      "10 minutes", "5 minutes", Seq("tool"), "dur_ms", bucketWidthMs = 1000L)
-    val q = metrics.writeStream.format("memory").queryName("sm")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // window [0,10): search 500ms ×2 (bucket 0), search 2500ms (bucket 2),
-      // fetch 500ms (bucket 0); late-but-in-watermark arrival included
-      mem.addData((ts(1), "search", 500L), (ts(2), "search", 2500L),
-        (ts(3), "fetch", 500L))
-      q.processAllAvailable()
-      mem.addData((ts(4), "search", 700L)) // late within watermark, same window
-      q.processAllAvailable()
-      mem.addData((ts(25), "search", 100L)) // watermark → 20min, finalizes [0,10)
-      q.processAllAvailable()
-      val rows = spark.table("sm")
-        .select("window_start", "tool", "lin_bucket", "calls", "sum_dur")
-        .as[(Timestamp, String, Long, Long, Long)].collect().toSet
-      assert(rows == Set(
-        (ts(0), "search", 0L, 2L, 1200L),
-        (ts(0), "search", 2L, 1L, 2500L),
-        (ts(0), "fetch", 0L, 1L, 500L)), s"got $rows")
-    } finally q.stop()
-  }
-
-  test("streaming recombine emits one ordered rollup per conversation on session timeout") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Turn]
-    val sessions = StreamingPipeline.recombine(mem.toDS(), "0 seconds", gapMs = 60000)
-    val q = sessions.writeStream.format("memory").queryName("sess")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // out-of-order arrival within conv c1
-      mem.addData(turn("c1", 1, 2, "second"), turn("c1", 0, 1, "first"))
-      q.processAllAvailable()
-      // push watermark far past c1's last turn + gap → timeout fires
-      mem.addData(turn("c2", 0, 30, "other"))
-      q.processAllAvailable()
-      mem.addData(turn("c3", 0, 59, "latest"))
-      q.processAllAvailable()
-      val out = spark.table("sess").as[StreamingPipeline.ConvSession]
-        .collect().map(s => s.conv_id -> s).toMap
-      assert(out.contains("c1"), s"c1 not emitted: ${out.keySet}")
-      assert(out("c1").full_text == "first\nsecond") // turn_idx order despite arrival order
-      assert(out("c1").n_turns == 2)
-    } finally q.stop()
-  }
-
-  test("hot conversation: recombine state stays bounded via maxTurns chunk flush") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Turn]
-    // 1000 turns into ONE conversation with maxTurns=64: state must never
-    // hold more than 64 turns; overflow chunks emit immediately
-    val sessions = StreamingPipeline.recombine(
-      mem.toDS(), "0 seconds", gapMs = 60000, maxTurns = 64)
-    val q = sessions.writeStream.format("memory").queryName("hot")
-      .outputMode(OutputMode.Append).start()
-    try {
-      val hot = (0 until 1000).map(i => turn("hot", i, 1, s"t$i"))
-      mem.addData(hot: _*)
-      q.processAllAvailable()
-      mem.addData(turn("zz", 0, 59, "push watermark")) // fire the tail timeout
-      q.processAllAvailable()
-      val out = spark.table("hot").as[StreamingPipeline.ConvSession]
-        .collect().filter(_.conv_id == "hot")
-      assert(out.map(_.n_turns).sum == 1000, s"lost turns: ${out.map(_.n_turns).toSeq}")
-      assert(out.forall(_.n_turns <= 64), s"chunk exceeded maxTurns: ${out.map(_.n_turns).toSeq}")
-      assert(out.length >= 1000 / 64, s"expected chunked flushes, got ${out.length}")
-    } finally q.stop()
-  }
-
-  test("streaming tail sampling: decision_wait releases/drops whole conversations on timeout") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Turn]
-    // decision fires 5 minutes (event time) after a conversation's FIRST turn
-    val kept = StreamingPipeline.tailSample(
-      mem.toDS(), "0 seconds", decisionWaitMs = 5 * 60000L,
-      StreamingPipeline.streamErrorPolicy)
-    val q = kept.writeStream.format("memory").queryName("tail")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // c_err has an ERROR turn → must be released wholesale, ordered;
-      // c_ok has none → dropped wholesale
-      mem.addData(
-        turn("c_err", 1, 2, "ERROR [db] boom"), turn("c_err", 0, 1, "INFO [db] start"),
-        turn("c_ok", 0, 1, "INFO [web] fine"), turn("c_ok", 1, 3, "INFO [web] done"))
-      q.processAllAvailable()
-      assert(spark.table("tail").isEmpty) // undecided: nothing released yet
-      mem.addData(turn("c_push", 0, 30, "watermark push")) // wm → 30min > 1+5min
-      q.processAllAvailable()
-      val out = spark.table("tail").as[Turn].collect()
-      assert(out.map(_.conv_id).toSet == Set("c_err"), s"got ${out.toSeq}")
-      assert(out.sortBy(_.turn_idx).map(_.text).toSeq ==
-        Seq("INFO [db] start", "ERROR [db] boom"))
-      // post-decision turn of a kept conversation forwards immediately
-      mem.addData(turn("c_err", 2, 31, "INFO [db] late"))
-      q.processAllAvailable()
-      assert(spark.table("tail").as[Turn].collect().count(_.conv_id == "c_err") == 3)
-      // post-decision turn of a dropped conversation stays dropped
-      mem.addData(turn("c_ok", 2, 31, "INFO [web] late"))
-      q.processAllAvailable()
-      assert(!spark.table("tail").as[Turn].collect().exists(_.conv_id == "c_ok"))
-    } finally q.stop()
-  }
-
-  test("streaming tail sampling: maxBuffer forces an early decision (bounded state)") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Turn]
-    val kept = StreamingPipeline.tailSample(
-      mem.toDS(), "0 seconds", decisionWaitMs = 5 * 60000L,
-      StreamingPipeline.streamLatencyPolicy(60000L), maxBuffer = 50)
-    val q = kept.writeStream.format("memory").queryName("tailhot")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // 200 turns spanning >1 minute in one undecided conversation:
-      // the 50-turn bound forces the decision without any timeout
-      mem.addData((0 until 200).map(i => turn("hot", i, 1 + i % 10, s"t$i")): _*)
-      q.processAllAvailable()
-      val got = spark.table("tailhot").as[Turn].collect()
-      assert(got.length >= 50, s"early decision did not release: ${got.length}")
-    } finally q.stop()
-  }
-
-  test("forced early decision: cache anchored at decision time, no second verdict") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Turn]
-    // error policy: the first 30 turns contain an ERROR turn → the
-    // forced verdict at maxBuffer=30 is KEEP; the late turn alone is
-    // plain and would get DROP if a second independent decision ran
-    val kept = StreamingPipeline.tailSample(
-      mem.toDS(), "0 seconds", decisionWaitMs = 5 * 60000L,
-      StreamingPipeline.streamErrorPolicy, maxBuffer = 30)
-    val q = kept.writeStream.format("memory").queryName("tailpurge")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // turns span min 1-3; firstMs anchor would purge at min 6, the
-      // decision-time anchor (max buffered ts = min 3) purges at min 8
-      mem.addData(turn("c1", 0, 1, "ERROR boom") +:
-        (1 until 30).map(i => turn("c1", i, 1 + i % 3, s"t$i")): _*)
-      q.processAllAvailable()
-      assert(spark.table("tailpurge").count() == 30)
-      // advance the watermark to min 7 (past the OLD purge point, short
-      // of the new one)...
-      mem.addData(turn("adv1", 0, 7, "advance"))
-      q.processAllAvailable()
-      // ...and give c1's timeout a DATA-LESS batch to fire in: under the
-      // firstMs anchor the cached verdict self-purges here (timeout
-      // min 6 ≤ watermark min 7); under the decision-time anchor it
-      // survives (min 8 > min 7)
-      mem.addData(turn("adv2", 0, 7, "advance"))
-      q.processAllAvailable()
-      // a late c1 turn must follow the cached KEEP verdict immediately —
-      // a purged cache would re-open an undecided buffer and silently
-      // hold (then re-decide DROP: the turn has no ERROR)
-      mem.addData(turn("c1", 30, 8, "late-after-old-purge-point"))
-      q.processAllAvailable()
-      val texts = spark.table("tailpurge").as[Turn].collect().map(_.text).toSet
-      assert(texts.contains("late-after-old-purge-point"),
-        "cached KEEP verdict was purged early — late turn re-decided (old bug)")
-    } finally q.stop()
-  }
-
-  test("tail sampling decided cache: post-decision turns re-arm the purge (no state leak)") {
-    // GroupState clears the timeout on EVERY invocation — before the
-    // fix, a post-decision turn left the cached verdict armed with NO
-    // timeout, leaking one state row per straggler-touched conversation
-    // for the life of the query. Observable: the final state-store row
-    // count (the leaked entry survives every later watermark advance).
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Turn]
-    val kept = StreamingPipeline.tailSample(
-      mem.toDS(), "0 seconds", decisionWaitMs = 2 * 60000L,
-      StreamingPipeline.streamErrorPolicy)
-    val q = kept.writeStream.format("memory").queryName("tailleak")
-      .outputMode(OutputMode.Append).start()
-    try {
-      mem.addData(turn("c1", 0, 1, "ERROR boom")) // decision deadline min 3
-      q.processAllAvailable()
-      mem.addData(turn("a0", 0, 10, "advance")) // wm → 10
-      q.processAllAvailable()
-      mem.addData(turn("a0", 1, 11, "advance")) // c1 decides KEEP; purge ~12
-      q.processAllAvailable()
-      // two post-decision turns: each must forward AND re-arm the purge
-      mem.addData(turn("c1", 1, 12, "late1"))
-      q.processAllAvailable()
-      mem.addData(turn("c1", 2, 20, "late2")) // re-arms purge to ~min 22
-      q.processAllAvailable()
-      mem.addData(turn("a1", 0, 30, "advance")) // wm → 30, past every purge
-      q.processAllAvailable()
-      mem.addData(turn("a1", 1, 31, "advance")) // purge batch: c1 + a0 evict
-      q.processAllAvailable()
-      val outs = spark.table("tailleak").as[Turn].collect()
-      assert(outs.count(_.conv_id == "c1") == 3,
-        s"cached KEEP verdict must forward both late turns: ${outs.toSeq}")
-      assert(!outs.exists(_.conv_id == "a0")) // plain conv dropped
-      // only a1's undecided buffer may remain: c1's cache (touched by
-      // stragglers — the leak case) and a0's cache must both have purged
-      val stateRows = q.lastProgress.stateOperators.head.numRowsTotal
-      assert(stateRows == 1L,
-        s"expected only a1's buffer in state, got $stateRows rows (leak)")
-    } finally q.stop()
-  }
-
-  test("groupbytrace fixed wait_duration: releases one gathered session, deadline not extended") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Turn]
-    val sessions = StreamingPipeline.recombineFixedWait(
-      mem.toDS(), "0 seconds", waitMs = 5 * 60000L)
-    val q = sessions.writeStream.format("memory").queryName("gbt")
-      .outputMode(OutputMode.Append).start()
-    try {
-      mem.addData(turn("c1", 0, 1, "first"), turn("c1", 1, 2, "second"))
-      q.processAllAvailable()
-      // a turn at minute 4 does NOT extend the deadline (fixed wait from
-      // the FIRST turn at minute 1, unlike recombine's gap timeout)
-      mem.addData(turn("c1", 2, 4, "third"))
-      q.processAllAvailable()
-      assert(spark.table("gbt").isEmpty)
-      mem.addData(turn("cx", 0, 30, "watermark push")) // wm 30 > 1+5
-      q.processAllAvailable()
-      val out = spark.table("gbt").as[StreamingPipeline.ConvSession]
-        .collect().filter(_.conv_id == "c1")
-      assert(out.length == 1 && out.head.n_turns == 3)
-      assert(out.head.full_text == "first\nsecond\nthird")
-      // post-release turns are dropped (reference forwards them ungrouped)
-      mem.addData(turn("c1", 3, 31, "late"))
-      q.processAllAvailable()
-      assert(spark.table("gbt").as[StreamingPipeline.ConvSession]
-        .collect().count(_.conv_id == "c1") == 1)
-    } finally q.stop()
-  }
-
   test("late data beyond the watermark is dropped from finalized windows") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Turn]
@@ -402,23 +127,6 @@ class StreamingPipelineSpec extends SparkSpec {
       assert(out(2L) == (("assistant", "unknown", "expired_no_server", false)))
       assert(out(9L) == (("user", "search", "expired_no_client", false)))
     } finally q.stop()
-  }
-
-  test("servicegraph metrics aggregate edges per (client, server, type) window") {
-    // batch rendering of the same expressions (withWatermark is a no-op
-    // in batch): the flush-loop aggregate over a small edge frame
-    val edges = Seq(
-      ("c1", 1L, "assistant", "bash", "complete", true, ts(1), ts(2)),
-      ("c1", 2L, "assistant", "bash", "complete", false, ts(3), ts(4)),
-      ("c2", 3L, "assistant", "unknown", "expired_no_server", false, ts(5), null)
-    ).toDF("conv_id", "corr_id", "client_service", "server_service",
-      "connection_type", "failed", "client_ts", "server_ts")
-    val m = StreamingPipeline.serviceGraphMetrics(edges, "1 hour", "0 seconds")
-      .select("client_service", "server_service", "connection_type", "n_edges", "n_failed")
-      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)) ->
-        ((r.getLong(3), r.getLong(4)))).toMap
-    assert(m(("assistant", "bash", "complete")) == ((2L, 1L)))
-    assert(m(("assistant", "unknown", "expired_no_server")) == ((1L, 0L)))
   }
 
   test("routed streaming sinks deliver disjoint route partitions") {
@@ -662,231 +370,6 @@ class StreamingPipelineSpec extends SparkSpec {
       .select("user_id", "n_events", "session_start", "session_end")
       .as[(Long, Long, Timestamp, Timestamp)].collect().toSet
     assert(got == want, s"diff: ${(got diff want) ++ (want diff got)}")
-  }
-
-  test("streaming dedup: duplicates suppressed inside the delay, re-admitted after state eviction") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Turn]
-    val out = StreamingPipeline.dedupStream(mem.toDF(), Seq("text"), "ts", "5 minutes")
-    val q = out.writeStream.format("memory").queryName("dedup_stream")
-      .outputMode(OutputMode.Append).start()
-    try {
-      mem.addData(turn("c1", 0, 1, "dup"), turn("c2", 0, 2, "dup"),
-        turn("c3", 0, 2, "uniq"))
-      q.processAllAvailable()
-      val first = spark.table("dedup_stream").as[Turn].collect()
-      assert(first.count(_.text == "dup") == 1, s"got ${first.toSeq}") // 2nd copy dropped
-      assert(first.count(_.text == "uniq") == 1)
-      // move the watermark far past min 1 + 5m -> "dup" state evicted
-      mem.addData(turn("c4", 0, 30, "wm push"))
-      q.processAllAvailable()
-      mem.addData(turn("c5", 0, 31, "dup")) // later duplicate: re-admitted
-      q.processAllAvailable()
-      val all = spark.table("dedup_stream").as[Turn].collect()
-      assert(all.count(_.text == "dup") == 2, s"got ${all.toSeq}")
-    } finally q.stop()
-  }
-
-  test("poison rows: null ts dropped, null text doesn't kill the decision policy") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Turn]
-    val kept = StreamingPipeline.tailSample(
-      mem.toDS(), "0 seconds", decisionWaitMs = 5 * 60000L,
-      StreamingPipeline.streamErrorPolicy)
-    val q = kept.writeStream.format("memory").queryName("poison")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // corrupt lines under the nullable input_hint schema: a null
-      // event time has no orderable position (dropped pre-watermark),
-      // and a null text must not NPE the policy when the decision
-      // fires — both previously killed the query from inside
-      // flatMapGroupsWithState, and kept killing it on restart since
-      // the poison state is checkpointed
-      mem.addData(
-        Turn("c1", 0, "user", null, "", ts(1)),
-        Turn("c1", 1, "user", "ERROR [db] boom", "", ts(2)),
-        Turn("cx", 0, "user", "lost in time", "", null))
-      q.processAllAvailable()
-      mem.addData(turn("c_push", 0, 30, "watermark push"))
-      q.processAllAvailable()
-      val out = spark.table("poison").as[Turn].collect()
-      assert(out.map(_.conv_id).toSet == Set("c1"), s"got ${out.toSeq}")
-      assert(out.length == 2) // the null-text turn releases with its conv
-    } finally q.stop()
-  }
-
-  test("metric series: a null-ts point is dropped, not query-killing") {
-    import StreamingPipeline.{CumulativePoint, MetricPoint}
-    implicit val sqlCtx = spark.sqlContext
-    def mp(s: String, min: Long, v: Double) =
-      MetricPoint(s, new Timestamp(ts(0).getTime + min * 60000L), v)
-    val mem = MemoryStream[MetricPoint]
-    val out = StreamingPipeline.deltaToCumulativeStream(
-      mem.toDS(), "5 minutes", maxStaleMs = 30 * 60000L)
-    val q = out.writeStream.format("memory").queryName("d2c_poison")
-      .outputMode(OutputMode.Append).start()
-    try {
-      mem.addData(mp("a", 1, 1.0), MetricPoint("a", null, 99.0), mp("a", 2, 2.0))
-      q.processAllAvailable()
-      val got = spark.table("d2c_poison").as[CumulativePoint].collect()
-        .map(p => (p.ts.getTime / 60000 % 60, p.cumulative)).toSet
-      assert(got == Set((1L, 1.0), (2L, 3.0)), s"got $got") // 99.0 never folded
-    } finally q.stop()
-  }
-
-  test("streaming deltatocumulative: running sum carried across micro-batches, O(1) state") {
-    import StreamingPipeline.{CumulativePoint, MetricPoint}
-    implicit val sqlCtx = spark.sqlContext
-    def mp(s: String, min: Long, v: Double) =
-      MetricPoint(s, new Timestamp(ts(0).getTime + min * 60000L), v)
-    val mem = MemoryStream[MetricPoint]
-    val out = StreamingPipeline.deltaToCumulativeStream(
-      mem.toDS(), "5 minutes", maxStaleMs = 30 * 60000L)
-    val q = out.writeStream.format("memory").queryName("d2c_stream")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // batch 1: out-of-order arrival inside the batch → folded in ts order
-      mem.addData(mp("a", 2, 2.0), mp("a", 1, 1.0), mp("b", 1, 10.0))
-      q.processAllAvailable()
-      // batch 2: state carries the total forward
-      mem.addData(mp("a", 3, 4.0))
-      q.processAllAvailable()
-      val got = spark.table("d2c_stream").as[CumulativePoint].collect()
-        .map(p => (p.series, p.ts.getTime / 60000 % 60, p.cumulative)).toSet
-      assert(got == Set(("a", 1L, 1.0), ("a", 2L, 3.0), ("a", 3L, 7.0),
-        ("b", 1L, 10.0)), s"got $got")
-    } finally q.stop()
-  }
-
-  test("streaming deltatocumulative: stale series evicted, revived series restarts from zero") {
-    import StreamingPipeline.{CumulativePoint, MetricPoint}
-    implicit val sqlCtx = spark.sqlContext
-    def mp(s: String, min: Long, v: Double) =
-      MetricPoint(s, new Timestamp(ts(0).getTime + min * 60000L), v)
-    val mem = MemoryStream[MetricPoint]
-    val out = StreamingPipeline.deltaToCumulativeStream(
-      mem.toDS(), "1 minutes", maxStaleMs = 10 * 60000L)
-    val q = out.writeStream.format("memory").queryName("d2c_stale")
-      .outputMode(OutputMode.Append).start()
-    try {
-      mem.addData(mp("a", 1, 5.0))
-      q.processAllAvailable()
-      // push the watermark far past a's timeout (1 + 10 stale), then one
-      // more batch so the timeout actually fires (timeouts are evaluated
-      // against the PREVIOUS batch's watermark)
-      mem.addData(mp("wm", 60, 0.0))
-      q.processAllAvailable()
-      mem.addData(mp("wm", 61, 0.0))
-      q.processAllAvailable()
-      mem.addData(mp("a", 62, 3.0)) // revived: starts over, not 5+3
-      q.processAllAvailable()
-      val a = spark.table("d2c_stale").as[CumulativePoint].collect()
-        .filter(_.series == "a").map(p => p.value -> p.cumulative).toSet
-      assert(a == Set(5.0 -> 5.0, 3.0 -> 3.0), s"got $a")
-    } finally q.stop()
-  }
-
-  test("streaming deltatocumulative: late in-watermark point cannot drag the eviction deadline backwards") {
-    import StreamingPipeline.{CumulativePoint, MetricPoint}
-    implicit val sqlCtx = spark.sqlContext
-    def mp(s: String, min: Long, v: Double) =
-      MetricPoint(s, new Timestamp(ts(0).getTime + min * 60000L), v)
-    val mem = MemoryStream[MetricPoint]
-    val out = StreamingPipeline.deltaToCumulativeStream(
-      mem.toDS(), "40 minutes", maxStaleMs = 10 * 60000L)
-    val q = out.writeStream.format("memory").queryName("d2c_late")
-      .outputMode(OutputMode.Append).start()
-    try {
-      mem.addData(mp("a", 100, 1.0)) // deadline anchored at 100+10=110min
-      q.processAllAvailable()        // watermark → 60min
-      // late but in-watermark: must NOT re-anchor the deadline at 70+10
-      mem.addData(mp("a", 70, 2.0))
-      q.processAllAvailable()
-      // watermark → 90min, then one more batch so timeouts are checked
-      // against it: a deadline wrongly moved to 80min would evict here
-      mem.addData(mp("wm", 130, 0.0))
-      q.processAllAvailable()
-      mem.addData(mp("wm", 131, 0.0))
-      q.processAllAvailable()
-      mem.addData(mp("a", 95, 5.0)) // alive: 1+2+5, not a restart at 5
-      q.processAllAvailable()
-      val a = spark.table("d2c_late").as[CumulativePoint].collect()
-        .filter(_.series == "a").map(p => p.value -> p.cumulative).toSet
-      assert(a == Set(1.0 -> 1.0, 2.0 -> 3.0, 5.0 -> 8.0), s"got $a")
-    } finally q.stop()
-  }
-
-  test("streaming cumulativetodelta: null first delta, cross-batch continuation, stale restart") {
-    import StreamingPipeline.{DeltaPoint, MetricPoint}
-    implicit val sqlCtx = spark.sqlContext
-    def mp(s: String, min: Long, v: Double) =
-      MetricPoint(s, new Timestamp(ts(0).getTime + min * 60000L), v)
-    val mem = MemoryStream[MetricPoint]
-    val out = StreamingPipeline.cumulativeToDeltaStream(
-      mem.toDS(), "1 minutes", maxStaleMs = 10 * 60000L)
-    val q = out.writeStream.format("memory").queryName("c2d_stream")
-      .outputMode(OutputMode.Append).start()
-    try {
-      mem.addData(mp("a", 2, 7.0), mp("a", 1, 5.0)) // in-batch ts order
-      q.processAllAvailable()
-      mem.addData(mp("a", 3, 10.0)) // continues from state (7 → 10)
-      q.processAllAvailable()
-      // stale eviction: watermark far past a's 3+10min deadline
-      mem.addData(mp("wm", 60, 0.0))
-      q.processAllAvailable()
-      mem.addData(mp("wm", 61, 0.0))
-      q.processAllAvailable()
-      mem.addData(mp("a", 62, 12.0)) // revived: first delta null again
-      q.processAllAvailable()
-      val a = spark.table("c2d_stream").as[DeltaPoint].collect()
-        .filter(_.series == "a").map(p => p.value -> p.delta).toSet
-      assert(a == Set(5.0 -> None, 7.0 -> Some(2.0), 10.0 -> Some(3.0),
-        12.0 -> None), s"got $a")
-    } finally q.stop()
-  }
-
-  test("streaming deltatorate: per-second rate, null on first point and non-positive gap") {
-    import StreamingPipeline.{MetricPoint, RatePoint}
-    implicit val sqlCtx = spark.sqlContext
-    def mp(s: String, min: Long, v: Double) =
-      MetricPoint(s, new Timestamp(ts(0).getTime + min * 60000L), v)
-    val mem = MemoryStream[MetricPoint]
-    val out = StreamingPipeline.deltaToRateStream(
-      mem.toDS(), "5 minutes", maxStaleMs = 60 * 60000L)
-    val q = out.writeStream.format("memory").queryName("d2r_stream")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // 120 over 2 min = 1.0/s; duplicate-ts point → null rate
-      mem.addData(mp("a", 1, 5.0), mp("a", 3, 120.0))
-      q.processAllAvailable()
-      mem.addData(mp("a", 3, 120.0)) // same ts as state's last → null
-      q.processAllAvailable()
-      val a = spark.table("d2r_stream").as[RatePoint].collect()
-        .filter(_.series == "a").map(p => p.rate).toSet
-      assert(a == Set(None, Some(1.0)), s"got $a")
-    } finally q.stop()
-  }
-
-  test("interval processor (streaming): batch intervalLast composes with a watermark, append mode") {
-    import StreamingPipeline.MetricPoint
-    implicit val sqlCtx = spark.sqlContext
-    def mp(s: String, min: Long, v: Double) =
-      MetricPoint(s, new Timestamp(ts(0).getTime + min * 60000L), v)
-    val mem = MemoryStream[MetricPoint]
-    val out = graft.agg.Stateful.intervalLast(
-      mem.toDF().withWatermark("ts", "2 minutes"),
-      Seq("series"), "ts", "value", "10 minutes")
-    val q = out.writeStream.format("memory").queryName("interval_stream")
-      .outputMode(OutputMode.Append).start()
-    try {
-      mem.addData(mp("a", 1, 1.0), mp("a", 7, 2.0), mp("a", 4, 9.0))
-      q.processAllAvailable()
-      mem.addData(mp("a", 25, 0.0)) // watermark 23min → [0,10) finalizes
-      q.processAllAvailable()
-      val rows = spark.table("interval_stream")
-        .select("series", "last_value").as[(String, Double)].collect().toSet
-      assert(rows == Set(("a", 2.0)), s"got $rows") // last by ts, not max
-    } finally q.stop()
   }
 
   test("sessionize (streaming): sessions finalize in append mode once the watermark passes") {

@@ -3,7 +3,7 @@ package graft.synth
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.model.Turn
+import graft.sources.Transcripts
 
 class TranscriptSynthSpec extends SparkSpec {
 
@@ -20,7 +20,7 @@ class TranscriptSynthSpec extends SparkSpec {
   test("schema matches the input_hint Turn shape") {
     val df = TranscriptSynth.generate(spark, TranscriptSynth.Config(10, 2))
     assert(df.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
-      Turn.schema.fields.map(f => (f.name, f.dataType)).toSeq)
+      Transcripts.transcriptSchema.fields.map(f => (f.name, f.dataType)).toSeq)
   }
 
   test("turn_idx is dense and unique per conversation") {
