@@ -57,10 +57,10 @@ object SparkEntry {
   /** Flagship: full parse→enrich→route→aggregate on sf0.001. */
   def entry(spark: SparkSession): DataFrame = {
     val tr = Transcripts.fromEvents(spark, "/root/testdata/sf0.001")
-    val (_, counts) = Pipeline.run(spark, tr)
-    counts.toSeq.sortBy(_._1).map { case (sink, df) =>
-      df.select(lit(sink).as("sink"), col("window_start"), col("count"))
-    }.reduce(_ unionByName _)
+    val routed = RouteStage.routed(Pipeline.parseEnrich(spark, tr), Pipeline.routeTable)
+    CountStage.countWindowed(routed.withColumnRenamed("route", "sink"),
+        MetricSpec("count", attrs = Seq(AttrSpec("sink"))), col("ts"), Pipeline.flagship.window)
+      .select("sink", "window_start", "count")
   }
 
   // ---------------- queries + oracles ----------------
@@ -123,7 +123,7 @@ object SparkEntry {
       {
         import s.implicits._
         val table = Pipeline.routeTable
-        val sinkNames = (table.routes.map(_.name) :+ table.defaultName).toDF("sink")
+        val sinkNames = table.sinkNames.toDF("sink")
         RouteStage.tagsExploded(Pipeline.parseEnrich(s, t(s, dir)), table)
           .groupBy("route").agg(count(lit(1)).as("cnt"))
           .join(sinkNames, col("route") === col("sink"), "right")

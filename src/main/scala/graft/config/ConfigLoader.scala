@@ -14,7 +14,6 @@ import graft.enrich.EnrichStage
 import graft.expr.ExprLang
 import graft.model.PipelineConfig._
 import graft.parse.ParseStage
-import graft.route.RouteStage
 
 /** YAML pipeline-config surface — the last step to "a user ships a
   * config file, not Scala": the analog of the reference collector's
@@ -297,29 +296,6 @@ object ConfigLoader {
       }
     }
 
-    /** Full batch run: (per-sink frames, per-sink windowed counts).
-      * Callers write each sink frame to its own table (multi-match
-      * fan-out, routing-connector semantics).
-      *
-      * ALL count frames derive from ONE exploded-tag pass (the p07 /
-      * PipelineJob single-scan plan): a count per fanOut frame would
-      * re-scan the source and re-evaluate the pattern bank once per sink
-      * (2k scans for k sinks when a caller materializes everything). The
-      * sink frames are lazy route filters of that pass — a caller that
-      * writes them pays one scan each, or uses [[graft.run.PipelineJob]]'s
-      * partitionBy fan-out for the one-scan write. */
-    def run(spark: SparkSession, transcripts: DataFrame, windowDur: String = window)
-        : (Map[String, DataFrame], Map[String, DataFrame]) = {
-      val enriched = parseEnrich(spark, transcripts)
-      val (sinks, stream) = RouteStage.sinksAndStream(enriched, routeTable)
-      val counts = sinks.keySet.map { name =>
-        name -> CountStage.countWindowed(
-          stream.filter(col("route") === name),
-          MetricSpec("count"), col("ts"), windowDur, resolveAttr)
-      }.toMap
-      (sinks, counts)
-    }
-
     /** The config file's metric definitions over one frame. */
     def countMetrics(df: DataFrame,
                      windowOverride: String = window): Map[String, DataFrame] =
@@ -328,22 +304,16 @@ object ConfigLoader {
   }
 
   def compile(c: GraftFileConfig): Compiled = {
-    // name collisions are map-key collisions downstream: a duplicate
-    // metric name silently loses all but the last entry in
-    // countMetrics' .toMap (one streaming sink vanishes with no error),
-    // a route named like the default is overwritten by the default sink
-    // in fanOut's map union — a copy-paste edit must fail at load, not
-    // ship half the sinks
+    // a duplicate metric name is a map-key collision downstream: it
+    // silently loses all but the last entry in countMetrics' .toMap (one
+    // streaming sink vanishes with no error) — a copy-paste edit must
+    // fail at load, not ship half the sinks. RouteTable's constructor
+    // makes the same check for route names and the default sink.
     def dupes(xs: Seq[String]): Seq[String] =
       xs.groupBy(identity).collect { case (k, vs) if vs.size > 1 => k }.toSeq
     val metricDupes = dupes(c.metrics.map(_.name))
     require(metricDupes.isEmpty,
       s"config: duplicate metric names: ${metricDupes.mkString(", ")}")
-    val routeDupes = dupes(c.routes.table.map(_.name))
-    require(routeDupes.isEmpty,
-      s"config: duplicate route names: ${routeDupes.mkString(", ")}")
-    require(!c.routes.table.exists(_.name == c.routes.default),
-      s"config: route name '${c.routes.default}' collides with the default sink")
     val parsedFields = c.parse.patterns.flatMap(_.fields).toSet
     val resolver = ExprLang.transcriptResolver(parsedFields)
     Compiled(

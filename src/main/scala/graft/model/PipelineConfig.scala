@@ -75,6 +75,9 @@ object PipelineConfig {
       s"duplicate route names: ${routes.map(_.name).mkString(", ")}")
     require(!routes.exists(_.name == defaultName),
       s"route name collides with the default sink '$defaultName'")
+
+    /** Every sink of the table: the routes in order, then the default. */
+    def sinkNames: Seq[String] = routes.map(_.name) :+ defaultName
   }
 
   /** A group-by attribute of a count-connector metric

@@ -79,21 +79,10 @@ object RouteStage {
 
   /** The table's match semantics, decided in ONE place for every run
     * path (PipelineJob's fan-out, StreamingJob's sinks and counts,
-    * [[sinksAndStream]]): match_once → first-match single tag
+    * `SparkEntry.entry`): match_once → first-match single tag
     * (`routingconnector/logs.go:87`), default → multi-match explosion.
     * A match_once config silently getting fan-out duplicates would
     * inflate every per-route count. */
   def routed(df: DataFrame, table: RouteTable): DataFrame =
     if (table.matchOnce) tagged(df, table) else tagsExploded(df, table)
-
-  /** Per-sink frames + the single-scan [[routed]] stream they are cut
-    * from, so counts derived from the stream agree with the sinks by
-    * construction. Both materialized run paths (Pipeline.run and the
-    * config surface's Compiled.run) route through here. */
-  def sinksAndStream(df: DataFrame, table: RouteTable)
-      : (Map[String, DataFrame], DataFrame) = {
-    val stream = routed(df, table)
-    val names = table.routes.map(_.name) :+ table.defaultName
-    (names.map(n => n -> stream.filter(col("route") === n).drop("route")).toMap, stream)
-  }
 }

@@ -30,8 +30,4 @@ object Pipeline {
 
   def parseEnrich(spark: SparkSession, transcripts: DataFrame): DataFrame =
     flagship.parseEnrich(spark, transcripts)
-
-  def run(spark: SparkSession, transcripts: DataFrame, windowDur: String = flagship.window)
-      : (Map[String, DataFrame], Map[String, DataFrame]) =
-    flagship.run(spark, transcripts, windowDur)
 }

@@ -35,22 +35,13 @@ object PipelineJob {
 
   val Usage = "usage: PipelineJob <transcriptsPath> <outDir> [windowDur] [config.yaml]"
 
-  /** The local master of a bare launch: every core of this host. */
-  private[graft] val DefaultMaster = "local[*]"
-
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, Usage)
     val Array(inPath, outDir) = args.take(2)
 
-    failFastLocalHeap("PipelineJob")
+    Launch.failFastLocalHeap("PipelineJob")
 
-    val spark = SparkSession.builder()
-      .appName("graft-pipeline")
-      .master(launchMaster())
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .getOrCreate()
+    val spark = Launch.session("graft-pipeline", Launch.launchMaster(), Map.empty)
 
     val report = try run(spark, inPath, outDir, args.drop(2).toSeq)
                  finally spark.stop()
@@ -130,13 +121,12 @@ object PipelineJob {
         if (sinksHavePartFiles) spark.read.parquet(sinksDir)
         else RouteStage.routed(
           cfg.parseEnrich(spark, table.read(spark, inPath)).limit(0), routeTable)
-      val routeCounts = routeTable.routes.map(_.name)
-        .:+(routeTable.defaultName).map { route =>
-          s"counts_$route" -> CountStage.countWindowed(
-            written.filter(col("route") === route),
-            MetricSpec("count", attrs = Seq(AttrSpec("role"))),
-            col("ts"), windowDur)
-        }.toMap
+      val routeCounts = routeTable.sinkNames.map { route =>
+        s"counts_$route" -> CountStage.countWindowed(
+          written.filter(col("route") === route),
+          MetricSpec("count", attrs = Seq(AttrSpec("role"))),
+          col("ts"), windowDur)
+      }.toMap
       // over the enriched frame (pre-fan-out: multi-match duplicates
       // rows per route, which would double-count global metrics);
       // re-deriving costs one extra scan of the input, only when a config
@@ -180,47 +170,6 @@ object PipelineJob {
     require(cfgArgs.size <= 1 && winArgs.size <= 1, usage)
     val fileModel = cfgArgs.headOption.map(ConfigLoader.loadFile)
     (fileModel, fileModel.map(ConfigLoader.compile), winArgs.headOption)
-  }
-
-  /** The master a launch runs on: spark-submit's `spark.master`, else
-    * `SPARK_GRAFT_MASTER`, else [[DefaultMaster]]. */
-  private[run] def launchMaster(
-      props: collection.Map[String, String] = sys.props,
-      env: collection.Map[String, String] = sys.env): String =
-    props.getOrElse("spark.master", env.getOrElse("SPARK_GRAFT_MASTER", DefaultMaster))
-
-  /** Executor threads of a `local[n]` / `local[*]` master; None for any
-    * other master (a cluster sizes its own executors). */
-  private[run] def localThreads(master: String): Option[Int] =
-    "local\\[(\\d+|\\*)\\]".r.findFirstMatchIn(master)
-      .map(m => if (m.group(1) == "*") Runtime.getRuntime.availableProcessors()
-                else m.group(1).toInt)
-
-  /** FAIL FAST on an implausible heap BEFORE building the session:
-    * in local mode the driver JVM hosts every executor thread, and
-    * spark-submit's default 1g driver heap at local[32] dies with an
-    * executor OOM deep in the fan-out write stage (judge-reproduced,
-    * round 3) — ~20 min into a large input. Rule of thumb: parse →
-    * enrich → partitioned fan-out needs ≥ ~256 MB/core of heap; below
-    * that, exit NOW with the launch fix instead of OOMing later.
-    * Shared by [[PipelineJob]] and [[StreamingJob]]. */
-  private[run] def failFastLocalHeap(jobName: String): Unit = {
-    val masterStr = launchMaster()
-    localThreads(masterStr).foreach { threads =>
-      val maxHeap = Runtime.getRuntime.maxMemory()
-      val needed = threads.toLong * 256L * 1024 * 1024
-      if (maxHeap < needed) {
-        System.err.println(
-      s"""$jobName: JVM max heap ${maxHeap >> 20} MB is too small for
-         |$masterStr ($threads executor threads share this one local-mode
-         |JVM; the routed fan-out write needs ~256 MB/core, i.e. >=
-         |${needed >> 20} MB here). This launch would OOM mid-run.
-         |Fix:  spark-submit --driver-memory 16g --master local[$threads] \\
-         |        --class graft.run.$jobName <jar> <in> <out>
-         |or reduce parallelism to local[${math.max(1, maxHeap / (256L * 1024 * 1024)).toInt}] for this heap.""".stripMargin)
-        sys.exit(2)
-      }
-    }
   }
 }
 

@@ -68,14 +68,9 @@ object StreamingJob {
       PipelineJob.parseExtraArgs(extra.filterNot(_ == "--once"), Usage)
     val cfg = fileCfg.getOrElse(Pipeline.flagship)
 
-    PipelineJob.failFastLocalHeap("StreamingJob")
+    Launch.failFastLocalHeap("StreamingJob")
 
-    val spark = SparkSession.builder()
-      .appName("graft-streaming")
-      .master(PipelineJob.launchMaster())
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = Launch.session("graft-streaming", Launch.launchMaster(), Map.empty)
 
     val hs = start(spark, inPath, outDir, fileCfg, windowArg.getOrElse(cfg.window),
       lateness = cfg.lateness, once = once)
@@ -109,9 +104,8 @@ object StreamingJob {
     val tagged = RouteStage.routed(enriched, routeTable)
     val trig = if (once) Some(Trigger.AvailableNow()) else None
 
-    val sinkNames = routeTable.routes.map(_.name) :+ routeTable.defaultName
     val qSinks = StreamingPipeline.startRoutedSinksMultiplexed(
-      tagged, sinkNames, s"$outDir/sinks", s"$outDir/_ck/sinks", trig)
+      tagged, routeTable.sinkNames, s"$outDir/sinks", s"$outDir/_ck/sinks", trig)
 
     // a later start that fails must not leave the queries already
     // started running with no handle returned to the caller

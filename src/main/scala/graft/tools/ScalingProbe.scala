@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.functions._
 
 import graft.route.RouteStage
-import graft.run.Pipeline
+import graft.run.{Launch, Pipeline}
 
 /** Child-JVM scaling probe, launched by [[graft.Bench]] under
   * `taskset -c 0..N-1`: with the WHOLE JVM (worker, GC and compiler
@@ -29,7 +29,7 @@ object ScalingProbe {
     val cores = coresS.toInt
     val repBudgetSec = if (args.length > 2) args(2).toDouble else 40.0
     val maxReps = if (args.length > 3) args(3).toInt else 4
-    val spark = Tools.session(s"graft-probe-$cores", cores, Tools.benchConf)
+    val spark = Launch.session(s"graft-probe-$cores", s"local[$cores]", Tools.benchConf)
 
     def run(df: org.apache.spark.sql.DataFrame): Unit = {
       val enriched = Pipeline.parseEnrich(spark, df)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry
+import graft.run.Launch
 
 /** The measurement and plan tools, one main:
   * `runMain graft.tools.Tools <mode> <args>...` (see [[usage]]).
@@ -53,24 +54,14 @@ object Tools {
     env.get("SPARK_GRAFT_CPUS").map(_.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors())
 
-  /** SQL config of the timed suites: AQE on, 8 MB file splits — plan
-    * shape (exchanges, join strategies) matches what the bench measures. */
-  private[tools] val benchConf: Map[String, String] = Map(
-    "spark.sql.adaptive.enabled" -> "true",
-    "spark.sql.files.maxPartitionBytes" -> "8m")
+  private val uiOff = Map("spark.ui.enabled" -> "false")
 
-  /** The one session builder of the tools: `local[cores]`, shuffle
-    * partitions = cores, UTC, no UI, plus `conf` — [[benchConf]] for the
-    * timed shape, empty for the [[graft.Verify]] shape. */
-  private[tools] def session(app: String, cores: Int,
-                             conf: Map[String, String]): SparkSession =
-    conf.foldLeft(SparkSession.builder()
-        .master(s"local[$cores]")
-        .appName(app)
-        .config("spark.sql.shuffle.partitions", cores)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
+  /** What the timed suites set beyond [[Launch.session]] at
+    * `local[cores]` (which gives shuffle partitions = cores): 8 MB file
+    * splits and no UI — plan shape (exchanges, join strategies) matches
+    * what the bench measures. */
+  private[tools] val benchConf: Map[String, String] =
+    uiOff + ("spark.sql.files.maxPartitionBytes" -> "8m")
 
   /** The command line as a runnable, or the rejection followed by
     * [[usage]]. Starts no session. */
@@ -79,7 +70,7 @@ object Tools {
     lazy val cores = cpus(env)
     def withSpark(app: String, conf: Map[String, String] = benchConf)(
         body: SparkSession => Unit): () => Unit = () => {
-      val spark = session(app, cores, conf)
+      val spark = Launch.session(app, s"local[$cores]", conf)
       try body(spark) finally spark.stop()
     }
     def known(names: Seq[String])(run: () => Unit): Either[String, () => Unit] =
@@ -100,7 +91,7 @@ object Tools {
         Right(withSpark("graft-scalepoint")(
           scalepoint(_, sfDir, copies.headOption.fold(10)(_.toInt), cores)))
       case Seq("verify", sfDir, outDir, names @ _*) if names.nonEmpty =>
-        known(names)(withSpark("graft-verify", Map.empty)(verify(_, sfDir, outDir, names)))
+        known(names)(withSpark("graft-verify", uiOff)(verify(_, sfDir, outDir, names)))
       case Seq("gen20m") =>
         Right(withSpark("graft-gen20m")(gen20m))
       case Seq("emit-check") =>

@@ -18,6 +18,18 @@ import graft.synth.TranscriptSynth
   */
 class ConfigLoaderSpec extends SparkSpec {
 
+  /** The product's routing verdict ([[graft.route.RouteStage.routed]])
+    * cut into one frame per sink, and each sink's windowed count. */
+  private def sinksAndCounts(enriched: DataFrame, table: RouteTable, window: String,
+                             parsedFields: Set[String])
+      : (Map[String, DataFrame], Map[String, DataFrame]) = {
+    val routed = graft.route.RouteStage.routed(enriched, table)
+    val perSink = table.sinkNames.map(n => n -> routed.filter(col("route") === n)).toMap
+    (perSink.map { case (n, f) => n -> f.drop("route") },
+     perSink.map { case (n, f) => n -> graft.agg.CountStage.countWindowed(
+       f, MetricSpec("count"), col("ts"), window, ConfigLoader.resolveAttr(parsedFields)) })
+  }
+
   private def goldenYaml: String = {
     val in = getClass.getResourceAsStream("/graft/flagship.yaml")
     try new String(in.readAllBytes(), "UTF-8") finally in.close()
@@ -164,7 +176,8 @@ class ConfigLoaderSpec extends SparkSpec {
       ("c1", 0, "user", "both match", "", java.sql.Timestamp.valueOf("2024-01-01 00:00:00")),
       ("c2", 5, "tool", "neither", "", java.sql.Timestamp.valueOf("2024-01-01 00:10:00")))
       .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
-    val (sinks, counts) = compiled.run(spark, turns)
+    val (sinks, counts) = sinksAndCounts(compiled.parseEnrich(spark, turns),
+      compiled.routeTable, compiled.window, compiled.parsedFields)
     // c1 matches BOTH routes: first-match-wins must land it in `users`
     // only (the previous multi-match path duplicated it into both and
     // doubled the per-route counts)
@@ -205,16 +218,12 @@ class ConfigLoaderSpec extends SparkSpec {
 
     def key(df: DataFrame) = df.select("conv_id", "turn_idx")
       .collect().map(r => (r.getString(0), r.getInt(1))).toSet
-    val (sinksCfg, countsCfg) = compiled.run(spark, turns)
+    val (sinksCfg, countsCfg) = sinksAndCounts(compiled.parseEnrich(spark, turns),
+      compiled.routeTable, compiled.window, compiled.parsedFields)
     // the reference: hand-built parse/enrich, route table and counts
     val enriched = FlagshipByHand.parseEnrich(spark, turns).cache()
-    val (sinksRef, stream) = graft.route.RouteStage.sinksAndStream(
-      enriched, FlagshipByHand.routeTableByHand)
-    val countsRef = sinksRef.keySet.map { name =>
-      name -> graft.agg.CountStage.countWindowed(
-        stream.filter(col("route") === name), MetricSpec("count"), col("ts"),
-        "1 hour", ConfigLoader.resolveAttr(FlagshipByHand.parsedFields))
-    }.toMap
+    val (sinksRef, countsRef) = sinksAndCounts(enriched,
+      FlagshipByHand.routeTableByHand, "1 hour", FlagshipByHand.parsedFields)
     assert(sinksCfg.keySet == sinksRef.keySet)
     assert(sinksRef.keySet == Set("tool_calls", "errors", "user_turns", "default"))
     sinksRef.keys.foreach { name =>

@@ -16,9 +16,9 @@ import graft.model.PipelineConfig.{RouteSpec, RouteTable}
   * — and each of the five sub-cases' expected sink contents. OTTL
   * IsMatch is regex containment (rlike).
   *
-  * The routing verdict is the product's [[RouteStage.sinksAndStream]]
-  * (one sink per route); a route's pipeline list is the config-side
-  * fan of that sink, applied here.
+  * The routing verdict is the product's [[RouteStage.routed]], cut
+  * here into one sink per route; a route's pipeline list is the
+  * config-side fan of that sink, applied here.
   */
 class GoldenRoutingSpec extends SparkSpec {
   import spark.implicits._
@@ -38,10 +38,11 @@ class GoldenRoutingSpec extends SparkSpec {
   /** Pipeline → the payloads it received, each delivery listed once;
     * pipelines that received nothing are left out. */
   private def deliveries(rows: Seq[String], matchOnce: Boolean): Map[String, Seq[String]] = {
-    val (sinks, _) = RouteStage.sinksAndStream(rows.toDF("tenant"), table(matchOnce))
-    sinks.toSeq
-      .flatMap { case (route, f) =>
-        val got = f.as[String].collect().toSeq
+    val t = table(matchOnce)
+    val routed = RouteStage.routed(rows.toDF("tenant"), t)
+    t.sinkNames
+      .flatMap { route =>
+        val got = routed.filter(col("route") === route).select("tenant").as[String].collect().toSeq
         pipelines(route).map(_ -> got) }
       .groupBy(_._1)
       .map { case (p, hits) => p -> hits.flatMap(_._2).sorted }

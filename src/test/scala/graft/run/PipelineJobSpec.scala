@@ -182,13 +182,17 @@ class PipelineJobSpec extends SparkSpec {
 
   test("launch master: unset resolves to every local core; env and spark.master override") {
     val cores = Runtime.getRuntime.availableProcessors()
-    val unset = PipelineJob.launchMaster(Map.empty, Map.empty)
+    val unset = Launch.launchMaster(Map.empty, Map.empty)
     assert(unset == "local[*]")
-    assert(PipelineJob.localThreads(unset).contains(cores))
-    assert(PipelineJob.launchMaster(Map.empty, Map("SPARK_GRAFT_MASTER" -> "local[3]")) == "local[3]")
-    assert(PipelineJob.launchMaster(Map("spark.master" -> "local[2]"),
+    assert(Launch.localThreads(unset).contains(cores))
+    assert(Launch.launchMaster(Map.empty, Map("SPARK_GRAFT_MASTER" -> "local[3]")) == "local[3]")
+    assert(Launch.launchMaster(Map("spark.master" -> "local[2]"),
       Map("SPARK_GRAFT_MASTER" -> "local[3]")) == "local[2]")
-    assert(PipelineJob.localThreads("local[3]").contains(3))
-    assert(PipelineJob.localThreads("yarn").isEmpty)
+    // every local form Spark accepts, matched whole
+    Seq("local[3]" -> Some(3), "local" -> Some(1), "local[4,2]" -> Some(4),
+        "local[*,3]" -> Some(cores), "local[*]" -> Some(cores),
+        "yarn" -> None, "spark://h:7077" -> None, "local-cluster[2,1,1024]" -> None,
+        "xlocal[3]" -> None, "local[3]x" -> None)
+      .foreach { case (m, threads) => assert(Launch.localThreads(m) == threads, m) }
   }
 }

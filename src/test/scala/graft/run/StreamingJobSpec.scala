@@ -50,8 +50,7 @@ class StreamingJobSpec extends SparkSpec {
     // them up on the next drain and the fan-out matches batch
     part1.toDS().toDF().write.mode("append").parquet(inDir)
     drain()
-    val sinkNames =
-      Pipeline.routeTable.routes.map(_.name) :+ Pipeline.routeTable.defaultName
+    val sinkNames = Pipeline.routeTable.sinkNames
     val gotRows = sinkNames.map { n =>
       try spark.read.parquet(s"$outDir/sinks/$n").count() catch { case _: Throwable => 0L }
     }.sum
@@ -81,8 +80,7 @@ class StreamingJobSpec extends SparkSpec {
     val inDir = Files.createTempDirectory("graft_sj_null_in").toString
     val noRole = Turn("c4", 0, null, "user=4 action=msg cents=1", "", ts(0, 40))
     (part1 ++ part2 :+ noRole).toDS().toDF().write.mode("append").parquet(inDir)
-    val sinkNames =
-      Pipeline.routeTable.routes.map(_.name) :+ Pipeline.routeTable.defaultName
+    val sinkNames = Pipeline.routeTable.sinkNames
 
     val batchOut = Files.createTempDirectory("graft_sj_null_batch").toString
     val r = PipelineJob.run(spark, inDir, batchOut, Nil)
@@ -136,8 +134,7 @@ class StreamingJobSpec extends SparkSpec {
       val cols = f.columns.sorted.map(col).toSeq
       f.select(cols: _*).collect().map(_.toString).sorted.toSeq
     }
-    val sinkNames = Pipeline.routeTable.routes.map(_.name) :+
-      Pipeline.routeTable.defaultName
+    val sinkNames = Pipeline.routeTable.sinkNames
 
     // run 1 over part 1
     part1.toDS().toDF().write.mode("append").parquet(inDir)

@@ -241,8 +241,7 @@ class StreamingPipelineSpec extends SparkSpec {
     Turn("c1", 1, "system", "ERROR [comp-1] boom", "", ts(2)),
     Turn("c1", 2, "assistant", """CALL tool=search args={"q":1} dur_ms=5""", "search", ts(3)),
     Turn("c2", 0, "system", "INFO [comp-1] signup user=1", "", ts(4)))
-  private val flagshipSinks =
-    graft.run.Pipeline.routeTable.routes.map(_.name) :+ graft.run.Pipeline.routeTable.defaultName
+  private val flagshipSinks = graft.run.Pipeline.routeTable.sinkNames
   private def flagshipTagged: DataFrame = graft.route.RouteStage.tagsExploded(
     graft.run.Pipeline.parseEnrich(spark, routedTurns.toDS().toDF()), graft.run.Pipeline.routeTable)
 
